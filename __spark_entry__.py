@@ -23,6 +23,11 @@ from clickhouse_realtime_analytics_demo_spark.queries import all_queries  # noqa
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
+    # The caller builds this session, not session.get_spark, so the one
+    # read setting get_spark applies is set here, once, before any query
+    # runs: parquet TIMESTAMP(NANOS) columns read as longs, which
+    # catalog.table normalizes (catalog reads never touch conf).
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     q = all_queries()["daily_events"]
     return q.fn(spark, "/root/testdata/sf0.001")
 

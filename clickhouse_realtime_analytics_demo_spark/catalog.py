@@ -41,11 +41,13 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     if name == "events":
-        # events.ts is parquet TIMESTAMP(NANOS), which Spark's reader
-        # rejects; read it as nanos-since-epoch long and truncate to
-        # micros (same conversion DuckDB applies). Integer `div` —
+        # events.ts may be parquet TIMESTAMP(NANOS), which Spark's
+        # reader rejects unless the session reads it as a
+        # nanos-since-epoch long (spark.sql.legacy.parquet.nanosAsLong,
+        # set at session build — session.get_spark / __spark_entry__.entry,
+        # never here: a read must not mutate session config). Truncate
+        # to micros (same conversion DuckDB applies). Integer `div` —
         # a double roundtrip would lose precision above 2^53 ns.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

@@ -449,6 +449,18 @@ def lsh_candidates_from_sigs(
     )
 
 
+def jaccard_from_sizes(na: Column, nb: Column, inter_n: Column) -> Column:
+    """Jaccard from integer set sizes: |A∩B| / (|A|+|B|−|A∩B|), one
+    double division, 0.0 for two empty sets. The one home of the
+    arithmetic — :func:`jaccard` and the scale regime of
+    :func:`minhash_char_dedup_pairs` (which ships only the sizes
+    across its barrier) both evaluate it, so the two agree bit for
+    bit."""
+    inter = inter_n.cast("double")
+    union = (na + nb).cast("double") - inter
+    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+
+
 def jaccard(shingles_a: Column, shingles_b: Column) -> Column:
     """Exact Jaccard similarity of two DISTINCT-element arrays (every
     producer in this module emits ``array_distinct`` output — the
@@ -457,9 +469,11 @@ def jaccard(shingles_a: Column, shingles_b: Column) -> Column:
     per-pair array work — the intersect is the only array traversal
     (measured on the corpus-prep pair stage: see
     ``ngram_jaccard_pairs``)."""
-    inter = F.size(F.array_intersect(shingles_a, shingles_b)).cast("double")
-    union = (F.size(shingles_a) + F.size(shingles_b)).cast("double") - inter
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+    return jaccard_from_sizes(
+        F.size(shingles_a),
+        F.size(shingles_b),
+        F.size(F.array_intersect(shingles_a, shingles_b)),
+    )
 
 
 def verified_jaccard_pairs(cands: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
@@ -549,10 +563,21 @@ def minhash_char_dedup_pairs(
        AQE-sized join against the checkpointed pair ids — candidate-
        sized, never corpus-sized), explicitly ``repartition``-ed,
        then checkpointed once;
-    4. the ATTACHED pair rows (both shingle arrays riding on each
-       candidate pair, size-ratio prefiltered), repartitioned and
-       checkpointed BEFORE the Jaccard evaluates. This barrier is
-       load-bearing twice over: without it Catalyst folds the
+    4. the ATTACHED pair rows, size-ratio prefiltered and checkpointed
+       BEFORE the Jaccard filter evaluates, in one of two regimes
+       chosen by whether the corpus has outgrown the core floor:
+
+       - at the core floor (1x corpora): both shingle arrays ride on
+         each candidate pair, repartitioned on (id_a, id_b) and
+         checkpointed, and :func:`jaccard` runs after the barrier;
+       - past it (the scale regime): each attach join is preceded by
+         a keyed spread sized from the measured pair count, the
+         intersect size is computed IN the second attach stage, and
+         only (ids, sizes, |A∩B|) — ~40 bytes/pair instead of both
+         arrays — cross the barrier, where
+         :func:`jaccard_from_sizes` finishes the same arithmetic.
+
+       The barrier is load-bearing twice over: without it Catalyst folds the
        ``jaccard >= t`` filter into the attach join's CONDITION,
        where the ~1000×-a-normal-row array intersect is (a)
        re-evaluated per expression reference and (b) runs on
@@ -687,9 +712,9 @@ def minhash_char_dedup_pairs(
         #     squeeze), and a doc's pair fan-out is bounded by the
         #     bucket cap x bands, so id_b hash partitioning cannot
         #     concentrate more than ~cap x bands pairs per doc.
-        #     Arithmetic is EXACTLY :func:`jaccard`'s — int sizes,
-        #     one double division — pinned bit-identical across the
-        #     regime switch by tests/test_corpus_prep_lsh.py.
+        #     Arithmetic is :func:`jaccard_from_sizes`, the same
+        #     function :func:`jaccard` evaluates — pinned bit-identical
+        #     across the regime switch by tests/test_corpus_prep_lsh.py.
         n_attach = attach_partitions(cands.count(), n_parts) if eager else n_parts
         pre = cands.repartition(n_attach, "id_a").join(a, "id_a").repartition(
             n_attach, "id_b"
@@ -708,9 +733,7 @@ def minhash_char_dedup_pairs(
             )
         )
         attached = _barrier(slim)
-        inter = F.col("inter_n").cast("double")
-        union = (F.col("na") + F.col("nb")).cast("double") - inter
-        jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+        jac = jaccard_from_sizes(F.col("na"), F.col("nb"), F.col("inter_n"))
         return attached.select("id_a", "id_b", jac.alias("jaccard")).filter(
             F.col("jaccard") >= thr
         )

@@ -194,6 +194,10 @@ def get_spark(
         # by definition, so skipping loses nothing that TTL didn't
         # already claim.
         .config("spark.sql.files.ignoreMissingFiles", "true")
+        # parquet TIMESTAMP(NANOS) columns (some events.ts generations)
+        # read as nanos-since-epoch longs, which catalog.table
+        # normalizes — set here so no read path mutates session config
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

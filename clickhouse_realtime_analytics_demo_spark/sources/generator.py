@@ -173,6 +173,23 @@ def events(
     )
 
 
+def day_events(
+    spark: SparkSession, day: int, n: int, n_users: int, id_offset: int
+) -> DataFrame:
+    """:func:`events` confined to simulated day ``day`` (counted from
+    ``EPOCH_START``): timestamps remapped onto [day, day+1)
+    deterministically; every other column (and the column ORDER the
+    file-stream schema requires) unchanged. Multi-day streaming-state
+    and retention runs ingest one of these per day."""
+    ev = events(spark, n=n, n_users=n_users, id_offset=id_offset, partitions=4)
+    base = F.unix_timestamp(F.lit(EPOCH_START).cast("timestamp"))
+    sec = F.abs(F.xxhash64("event_id", F.lit(999))) % 86400
+    ts = F.timestamp_seconds(base + day * 86400 + sec)
+    return ev.withColumn("event_timestamp", ts).withColumn(
+        "event_date", F.to_date(F.col("event_timestamp"))
+    )
+
+
 def orders(
     spark: SparkSession,
     n: int = 25_000,

@@ -29,17 +29,19 @@ Design (per micro-batch, foreachBatch):
    — correct, and actually faster below ~10^6 accepted rows where
    job-launch overhead dominates, but the wrong shape at scale.
 3. idempotent append — accepted rows land in a batch-id-keyed
-   subdirectory (``b=<batch_id>``, overwrite), the same sink contract
-   as ``streaming.mv``: a crash between data write and checkpoint
-   commit re-delivers the batch, which rewrites the SAME directory
-   with the SAME content. Step 2 excludes the current batch's own
-   directory from the reference scan, so a replayed batch does not
-   anti-join against its own half-written output (which would
-   silently drop every row of the batch).
+   subdirectory (``b=<batch_id>``, overwrite — ``parts.write_part``),
+   the part-store contract every streaming store shares: a crash
+   between data write and checkpoint commit re-delivers the batch,
+   which rewrites the SAME directory with the SAME content. Step 2
+   excludes the current batch's own directory from the reference
+   scan, so a replayed batch does not anti-join against its own
+   half-written output (which would silently drop every row of the
+   batch).
 
 Exactly-once: file-source checkpoint (processed input files) +
-idempotent batch-keyed sink, same proof obligations as
-``streaming/mv.py`` (replay test in tests/test_streaming_dedup.py).
+idempotent batch-keyed sink, the ``streaming/parts.py`` contract
+(replay tests in tests/test_part_store_contract.py and
+tests/test_streaming_dedup.py).
 """
 
 from __future__ import annotations
@@ -133,13 +135,9 @@ def dedup_batch(
             fresh = fresh.join(F.broadcast(matches), "fingerprint", "left_anti")
         else:
             fresh = fresh.join(accepted, "fingerprint", "left_anti")
-    # One part per batch: accepted-per-trigger is small; a compactor
-    # (streaming.mv.Compactor pattern) folds b=* dirs when they pile up.
-    (
-        fresh.coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{out_dir}/b={batch_id}")
-    )
+    # One part per batch: accepted-per-trigger is small; the ingest
+    # loop's cadence (maybe_compact_accepted) folds parts as they pile up.
+    parts_store.write_part(fresh, out_dir, batch_id)
 
 
 def start_dedup_ingest(
@@ -161,10 +159,6 @@ def start_dedup_ingest(
     ``compact_max_parts``: fold the accepted store once its part count
     passes this threshold (in the sink thread, commit-gated — see
     :func:`compact_accepted`); None disables."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         dedup_batch(spark, batch, out_dir, batch_id, id_col, text_col)
@@ -173,14 +167,12 @@ def start_dedup_ingest(
                 spark, out_dir, checkpoint_dir, max_parts=compact_max_parts
             )
 
-    writer = stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
+    return parts_store.start_stream(
+        spark, source_dir, schema, checkpoint_dir, sink,
+        trigger_seconds=trigger_seconds,
+        max_files_per_trigger=max_files_per_trigger,
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 # ------------------------------------------------------ near-dup ingest
@@ -320,7 +312,7 @@ def neardup_batch(
         rep_bands.withColumnRenamed("id", "__bid"),
         reps[id_col] == F.col("__bid"),
     ).drop("__bid")
-    survivors.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/b={batch_id}")
+    parts_store.write_part(survivors, out_dir, batch_id)
 
 
 def start_neardup_ingest(
@@ -342,10 +334,6 @@ def start_neardup_ingest(
     contract as :func:`start_dedup_ingest` (idempotent batch-keyed
     sink; the reference scan excludes the in-flight batch).
     ``max_bucket_size``: see :func:`neardup_batch`."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         neardup_batch(
@@ -357,65 +345,28 @@ def start_neardup_ingest(
                 spark, out_dir, checkpoint_dir, max_parts=compact_max_parts
             )
 
-    writer = stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
+    return parts_store.start_stream(
+        spark, source_dir, schema, checkpoint_dir, sink,
+        trigger_seconds=trigger_seconds,
+        max_files_per_trigger=max_files_per_trigger,
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
-def read_accepted(spark: SparkSession, out_dir: str, _retries: int = 6) -> DataFrame:
-    """All accepted (duplicate-free) documents (manifest-aware vs a
-    concurrent compaction, same contract as MV reads).
+def _concat(df: DataFrame) -> DataFrame:
+    """The accepted store's fold: rows are unique by construction, so
+    merging parts is pure concatenation."""
+    return df
 
-    Two defense layers against a concurrent compaction:
 
-    1. **Grace-window tombstones** (primary — ``streaming/parts.py``):
-       a folded part stays on disk for ``GRACE_SECONDS`` after its
-       merge publishes, so a reader that listed it can still resolve
-       AND scan it; only listings are redirected to the merged part.
-       This removes the listing→resolution TOCTOU for any read that
-       completes within the grace window.
-    2. **Bounded re-list + retry** (backstop, this function): a read
-       slower than the grace window can still lose the race — each
-       retry re-lists, and the post-merge listing excludes doomed
-       parts via the manifest. File-level disappearance after
-       resolution stays covered by ``ignoreMissingFiles`` (session.py).
-
-    At production scale this TOCTOU class is what snapshot-isolated
-    table formats (Delta/Iceberg) exist to remove.
-    """
-    import time as _time
-
-    last: Exception | None = None
-    for attempt in range(_retries):
-        # _SUCCESS filter: the sink's IN-FLIGHT batch dir exists on
-        # disk before its write commits (only _temporary inside) — a
-        # reader that includes it finds no parquet footers and fails
-        # schema inference. Parquet's commit protocol drops _SUCCESS
-        # exactly at commit, so committed-only listing is the external
-        # reader's visibility boundary (found by the same concurrent-
-        # reader test).
-        dirs = [
-            str(d)
-            for d in parts_store.live_part_dirs(out_dir)
-            if (d / "_SUCCESS").exists()
-        ]
-        if not dirs:
-            raise FileNotFoundError(f"no accepted batches under {out_dir}")
-        try:
-            df = spark.read.option("mergeSchema", "false").parquet(*dirs)
-            df.schema  # force path resolution INSIDE the retry scope
-            return df
-        except Exception as e:  # noqa: BLE001 — filtered to known races
-            if not parts_store.is_transient_listing_race(e):
-                raise
-            last = e
-            _time.sleep(0.05 * (attempt + 1))
-    raise last  # type: ignore[misc]
+def read_accepted(spark: SparkSession, out_dir: str) -> DataFrame:
+    """All accepted (duplicate-free) documents — the shared live-part
+    read (:func:`parts.read_live`): manifest-aware against a concurrent
+    compaction, committed-only (the sink's in-flight batch dir exists
+    before its write commits), bounded re-list behind the tombstone
+    grace window. Raises FileNotFoundError before the first accepted
+    batch commits."""
+    return parts_store.read_live(spark, out_dir)
 
 
 def compact_accepted(
@@ -423,26 +374,19 @@ def compact_accepted(
     out_dir: str,
     checkpoint_dir: str | None = None,
 ) -> bool:
-    """Fold the accepted store's committed ``b=*`` parts into one.
+    """Fold the accepted store's committed ``b=*`` parts into one
+    (:func:`parts.compact` with a concatenating fold).
 
     Appends never list existing parts, so compaction exists purely for
     READERS — including the per-batch reference scan itself, whose
-    file-listing cost grows with part count (same physics as
-    ``mv.compact``'s measured cadence, SCALEPROBE.md "MV maintenance
-    vs part count"). The fold is pure concatenation (rows are already
-    unique by construction); all crash-safety and the commit gate come
-    from :func:`parts.compact_parts`. Call it from the ingest loop's
-    own cadence (e.g. :func:`maybe_compact_accepted` after each
-    batch): inside the sink thread the gate excludes exactly the
-    in-flight batch, and there is no reader/compactor concurrency to
-    reason about.
+    file-listing cost grows with part count (SCALEPROBE.md "MV
+    maintenance vs part count"). Call it from the ingest loop's own
+    cadence (:func:`maybe_compact_accepted` after each batch): inside
+    the sink thread the commit gate excludes exactly the in-flight
+    batch, and there is no reader/compactor concurrency to reason
+    about.
     """
-    return parts_store.compact_parts(
-        out_dir,
-        read_parts=lambda ps: spark.read.option("mergeSchema", "false").parquet(*ps),
-        fold=lambda df: df,
-        checkpoint_dir=checkpoint_dir,
-    )
+    return parts_store.compact(spark, out_dir, _concat, checkpoint_dir=checkpoint_dir)
 
 
 def maybe_compact_accepted(
@@ -451,13 +395,8 @@ def maybe_compact_accepted(
     checkpoint_dir: str | None = None,
     max_parts: int = 128,
 ) -> bool:
-    """Compact only past the measured part-count threshold (the MV
-    cadence policy applied to the accepted store); the no-op path is
-    a directory listing plus a tombstone sweep."""
-    root = Path(out_dir)
-    if not root.exists():
-        return False
-    if len(parts_store.live_part_dirs(out_dir)) <= max_parts:
-        parts_store.reap_tombstones(root)
-        return False
-    return compact_accepted(spark, out_dir, checkpoint_dir=checkpoint_dir)
+    """:func:`compact_accepted` on the part-count cadence
+    (:func:`parts.maybe_compact`)."""
+    return parts_store.maybe_compact(
+        spark, out_dir, _concat, checkpoint_dir=checkpoint_dir, max_parts=max_parts
+    )

@@ -32,14 +32,16 @@ its partial rows to a batch-id-keyed subdirectory
 data write and the checkpoint commit re-writes the SAME directory
 with the SAME content instead of appending a duplicate part
 (``tests/test_streaming.py::test_mv_sink_idempotent_on_replay``).
-This is the parquet analog of a Delta MERGE keyed on batch_id.
+This is the parquet analog of a Delta MERGE keyed on batch_id. The
+stream launch, part write, live read and compaction mechanics are the
+shared part store's (``streaming/parts.py``); this module owns
+only the MV algebra (partials, re-aggregation, finals).
 """
 
 from __future__ import annotations
 
 import threading
 from dataclasses import dataclass, field
-from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -85,10 +87,6 @@ def retention_predicate(spec: MVSpec, days: int, clock=None):
         return F.col(dk) >= F.date_sub(now, days)
 
     return pred
-
-
-def _sum(c: str) -> Column:
-    return F.sum(c)
 
 
 def _resum(col: str) -> Column:
@@ -210,27 +208,9 @@ def _reagg_exprs(spec: MVSpec) -> list[Column]:
 
 
 def write_batch(batch: DataFrame, spec: MVSpec, mv_path: str, batch_id: int) -> None:
-    """Idempotent micro-batch write: partial-aggregate rows land in a
-    batch-id-keyed subdirectory with overwrite mode. A foreachBatch
-    replay (crash between data write and checkpoint commit) re-runs
-    the same batch_id over the same checkpointed input files and
-    overwrites the directory with identical content — no double
-    counts, ever.
-
-    ``coalesce(1)``: one part per micro-batch, exactly the "one part
-    per INSERT block" analog the module docstring claims. Without it
-    the partial agg inherits ``spark.sql.shuffle.partitions`` and a
-    ~100-row batch fans out into ~30 near-empty files, so after N
-    batches every MV reader (and the freshness-critical
-    ``read_final``) lists and opens ~30N tiny files — measured as the
-    dominant term in mixed-load freshness lag (MIXEDLOAD.md). The
-    partial rows per batch are bounded by |groups touched|, so a
-    single output task is the right size by construction; at much
-    larger per-batch group counts raise the coalesce factor, not the
-    default."""
-    _canonicalize(apply_partial(batch, spec), batch.sparkSession, spec).coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{mv_path}/b={batch_id}")
+    """Idempotent micro-batch write of the batch's canonical partial
+    rows as part ``b=<batch_id>`` (:func:`parts.write_part`)."""
+    parts_store.write_part(_stored_partial(batch, spec), mv_path, batch_id)
 
 
 _SCHEMA_CACHE: dict = {}  # spec name -> canonical partial-table StructType
@@ -281,51 +261,35 @@ def _canonicalize(df: DataFrame, spark: SparkSession, spec: MVSpec) -> DataFrame
     )
 
 
+def _stored_partial(batch: DataFrame, spec: MVSpec) -> DataFrame:
+    """The partial rows a micro-batch contributes, in canonical types."""
+    return _canonicalize(apply_partial(batch, spec), batch.sparkSession, spec)
+
+
 def _read_partials(spark: SparkSession, mv_path: str, spec: MVSpec) -> DataFrame:
-    """Manifest-aware snapshot read of the MV's live parts.
-
-    Readers are ATOMIC with respect to compaction (ClickHouse's
-    part-set swap semantics, recovered on raw directories): a merged
-    part is renamed in atomically carrying a ``_MANIFEST`` naming the
-    parts it replaces, and those doomed parts are excluded here even
-    if their deletion hasn't finished — so a reader sees either the
-    originals (merged not yet published) or the merged part alone
-    (published, inputs excluded by manifest), never both. The residual
-    race is listing-vs-delete on already-doomed dirs, covered by
-    ``ignoreMissingFiles`` (session.py); at production scale the same
-    algebra rides on a table format with snapshot isolation
-    (Delta/Iceberg) instead of directory listings.
-    """
-    import time as _time
-
+    """The MV's live partial rows through the shared read policy
+    (:func:`parts.read_live`: manifest-aware, so a reader sees either a
+    fold's inputs or the fold alone — ClickHouse's atomic part-set
+    swap on raw directories — committed parts only, bounded re-list),
+    with the canonical schema: no footer-inference job. An empty store
+    reads as an empty frame."""
     schema = _mv_schema(spark, spec)
-    # Bounded re-list on the listing→resolution race (same class the
-    # dedup store's concurrent-reader test exposed): a listed dir can
-    # be deleted whole before path resolution. Explicit schema means
-    # no inference jobs, so PATH_NOT_FOUND is the only transient here.
-    last = None
-    for attempt in range(6):
-        included = [str(d) for d in parts_store.live_part_dirs(mv_path)]
-        if not included:
-            return spark.createDataFrame([], schema)
-        try:
-            df = spark.read.schema(schema).parquet(*included)
-            df.schema  # force resolution inside the retry scope
-            return df
-        except Exception as e:  # noqa: BLE001 — known transients only
-            if not parts_store.is_transient_listing_race(e):
-                raise
-            last = e
-            _time.sleep(0.05 * (attempt + 1))
-    raise last
+    try:
+        return parts_store.read_live(spark, mv_path, schema)
+    except FileNotFoundError:
+        return spark.createDataFrame([], schema)
 
 
-# Part-store mechanics (manifest recovery, commit gate) moved to
-# streaming/parts.py — shared with the dedup-at-ingest accepted store.
-# Kept as module attributes so tests can monkeypatch the delete step.
-_recover_compaction = parts_store.recover_compaction
-_finish_deletes = parts_store.finish_deletes
-_last_committed_batch = parts_store.last_committed_batch
+def _merge(spec: MVSpec):
+    """The MV's fold: re-aggregate equal-key partial rows, canonically
+    typed (what a Summing/AggregatingMergeTree background merge does)."""
+
+    def merge(df: DataFrame) -> DataFrame:
+        return _canonicalize(
+            df.groupBy(*spec.keys).agg(*_reagg_exprs(spec)), df.sparkSession, spec
+        )
+
+    return merge
 
 
 def compact(
@@ -334,86 +298,23 @@ def compact(
     spec: MVSpec,
     checkpoint_dir: str | None = None,
     retain_where: Column | None = None,
-) -> None:
+) -> bool:
     """Background-merge analog: fold equal-key partial rows. Readers
     never require this — it bounds MV size, like MergeTree merges.
+    Crash safety, the commit gate (pass the maintenance stream's
+    ``checkpoint_dir``; without it the caller must guarantee the stream
+    is stopped and fully committed) and the retention rule are
+    :func:`parts.compact`'s.
 
-    Crash-safe against ITS OWN crashes at any step (manifest +
-    recovery, below). Safe against the *stream's* crash-replay only
-    when the stream's replay window is excluded from the fold:
-
-    - with ``checkpoint_dir`` (the maintenance stream's checkpoint),
-      only batch ids ≤ the last id in its ``commits/`` log are folded.
-      A batch whose data write landed but whose checkpoint commit did
-      not WILL be re-delivered with the same id on restart; folding it
-      first would let the replayed ``b=N`` re-appear next to the
-      merged part that already contains it — a permanent double count.
-      The commit gate closes that window. Previously-merged parts
-      (negative ids) are always foldable — they never replay.
-    - without ``checkpoint_dir``, the caller must guarantee the stream
-      is stopped AND fully committed (or never crashed mid-batch);
-      otherwise the race above applies.
-
-    Own-crash safety: the merged part is written to a dot-hidden
-    directory (invisible to parquet readers), stamped with a
-    ``_MANIFEST`` naming the parts it replaces, atomically renamed
-    into place, and only then are the snapshot parts deleted; a crash
-    at ANY step is replayed or rolled back by
-    :func:`_recover_compaction` on the next call.
-
-    Concurrent READERS during the publish→delete window can
-    transiently see both the merged part and not-yet-deleted inputs
-    (seconds); ClickHouse's atomic part-set swap has no transiently
-    visible state — schedule compaction off-peak if that matters.
-
-    Cadence policy (measured, `scale_probe.py mv` / SCALEPROBE.md "MV
-    maintenance vs part count"): append cost is FLAT in part count
-    (~0.2 s/batch — the sink never lists existing parts), so
-    compaction exists purely for READERS. ``read_final`` degrades
-    ~linearly with live parts (354 ms at 11 parts → 1.7 s at 515;
-    ≈2.6 ms/part of listing+open overhead), while the post-compact
-    floor is flat (~0.2 s) and ``compact()`` itself costs 0.6–2.2 s
-    over the whole 8–512 range. **Compact when live parts exceed ~128**
-    (:func:`maybe_compact`): reads stay within ~2× their floor, and at
-    the reference ingest rate (a part every 1–2 s) that is one 0.9 s
-    fold every 2–4 minutes — <1% duty cycle. There is no part count at
-    which compaction hurts ingest (appends don't see parts), so the
-    threshold trades only reader latency against fold frequency.
-
-    ``retain_where``: optional retention predicate over the MV's key
-    columns, applied BEFORE the fold — the analog of ClickHouse
-    ``TTL event_date + INTERVAL d DAY DELETE`` on a Summing table,
-    and what bounds the no-watermark design's state: this engine
-    keeps no streaming state store (partials append per batch), so
-    the MV table itself is the state, its steady-state size is
+    ``retain_where`` bounds the no-watermark design's state: this
+    engine keeps no streaming state store (partials append per batch),
+    so the MV table itself is the state, its steady-state size is
     ``retention_days × |daily active keys|`` rows, and the fold that
     already runs on the max_parts=128 cadence enforces the bound for
-    free (drop-then-fold is one pass; measured in
-    `scale_probe.py funnelstate` / SCALEPROBE.md). Rows failing the
-    predicate are expired by definition — same contract as
-    ``retention.apply_ttl`` on base tables.
-    """
-    schema = _mv_schema(spark, spec)
-
-    def _fold(df: DataFrame) -> DataFrame:
-        if retain_where is not None:
-            df = df.filter(retain_where)
-        return _canonicalize(
-            df.groupBy(*spec.keys).agg(*_reagg_exprs(spec)), spark, spec
-        )
-
-    parts_store.compact_parts(
-        mv_path,
-        # explicit schema: no footer-inference job over the snapshot
-        read_parts=lambda ps: spark.read.schema(schema).parquet(*ps),
-        fold=_fold,
-        checkpoint_dir=checkpoint_dir,
-        # a retention fold is a REWRITE, not just a merge: it must run
-        # even when the store is already one part (min_parts=1), or an
-        # already-compacted MV could never expire anything
-        min_parts=1 if retain_where is not None else 2,
-        # tests monkeypatch mv._finish_deletes to simulate crashes
-        finish=lambda *a: _finish_deletes(*a),
+    free (measured in `scale_probe.py funnelstate` / SCALEPROBE.md)."""
+    return parts_store.compact(
+        spark, mv_path, _merge(spec), _mv_schema(spark, spec),
+        checkpoint_dir=checkpoint_dir, retain_where=retain_where,
     )
 
 
@@ -425,21 +326,18 @@ def maybe_compact(
     max_parts: int = 128,
     retain_where: Column | None = None,
 ) -> bool:
-    """Apply the measured cadence policy (see :func:`compact`): fold
-    only when the live part count exceeds ``max_parts``. Returns True
-    if a compaction ran. Cheap to call every maintenance tick — the
-    no-op path is a directory listing plus a tombstone sweep."""
-    live = Path(mv_path)
-    if not live.exists():
-        return False
-    if len(parts_store.live_part_dirs(mv_path)) <= max_parts:
-        # tombstoned (already-folded) parts don't count against the
-        # threshold, but their grace clocks keep ticking — sweep here
-        # so stores that stay under the threshold still shed them.
-        parts_store.reap_tombstones(live)
-        return False
-    compact(spark, mv_path, spec, checkpoint_dir=checkpoint_dir, retain_where=retain_where)
-    return True
+    """:func:`compact` on the part-count cadence
+    (:func:`parts.maybe_compact`). Measured for MVs (`scale_probe.py
+    mv` / SCALEPROBE.md "MV maintenance vs part count"): ``read_final``
+    degrades ~linearly with live parts (354 ms at 11 parts → 1.7 s at
+    515) while a fold costs 0.6–2.2 s over the whole 8–512 range, so
+    folding past ~128 parts keeps reads within ~2× their floor at a
+    <1% duty cycle. Returns True if a compaction ran."""
+    return parts_store.maybe_compact(
+        spark, mv_path, _merge(spec), _mv_schema(spark, spec),
+        checkpoint_dir=checkpoint_dir, max_parts=max_parts,
+        retain_where=retain_where,
+    )
 
 
 @dataclass
@@ -525,40 +423,6 @@ def batch_equivalent(source_df: DataFrame, spec: MVSpec) -> DataFrame:
     return agg.drop(*[c for c in agg.columns if c.endswith("_hll")])
 
 
-def start_incremental(
-    spark: SparkSession,
-    source_dir: str,
-    mv_path: str,
-    spec: MVSpec,
-    checkpoint_dir: str,
-    trigger_seconds: float = 1,
-    max_files_per_trigger: int | None = None,
-):
-    """Launch the streaming maintenance job for one MV.
-
-    File-stream source over the ingest directory (the demo's Kafka
-    stand-in) → per-batch partial aggregation → append to the MV
-    table. Returns the StreamingQuery handle.
-    """
-    schema = schemas.EVENTS if spec.source == "events" else schemas.ORDERS
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        write_batch(batch, spec, mv_path, batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{int(trigger_seconds * 1000)} milliseconds")
-        .start()
-    )
-
-
 def start_incremental_multi(
     spark: SparkSession,
     source_dir: str,
@@ -568,65 +432,34 @@ def start_incremental_multi(
     trigger_seconds: float = 1,
     max_files_per_trigger: int | None = None,
 ):
-    """One maintenance stream serving ALL MVs attached to a source —
+    """One maintenance stream serving every MV attached to a source —
     the ClickHouse shape: a single INSERT block is read once and every
-    attached MV aggregates from that same in-memory block
-    (ARCHITECTURE.md's insert-triggered MV cascade), instead of N
-    streams each re-listing and re-reading the same input files every
-    trigger. Under mixed load this cuts driver scheduling pressure and
-    source listing N-fold; the micro-batch is persisted once and each
-    MV's partial aggregation reads the cached block.
+    attached MV aggregates from that same block (ARCHITECTURE.md's
+    insert-triggered MV cascade), instead of N streams each re-listing
+    and re-reading the same input files every trigger.
 
-    Each MV still gets its own table dir (``<mv_root>/<name>``) and
-    the same idempotent ``b=<batch_id>`` write, so crash-replay
-    semantics are identical to N independent streams; the shared
-    checkpoint means all MVs advance in lockstep (exactly like the
+    Each MV gets its own table dir (``<mv_root>/<name>``) and the
+    idempotent ``b=<batch_id>`` part write (:func:`parts.part_sink`);
+    the shared checkpoint advances all MVs in lockstep (like the
     reference, where one INSERT commits to all MVs atomically or not
-    at all).
+    at all). One spec is the single-MV case. Returns the
+    StreamingQuery handle.
     """
     sources = {s.source for s in specs}
     if len(sources) != 1:
         raise ValueError(f"all specs must share one source, got {sources}")
-    schema = schemas.EVENTS if specs[0].source == "events" else schemas.ORDERS
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        batch.persist()
-        # materialize the cache once so the per-MV jobs read it instead
-        # of racing to compute it N times
-        batch.count()
-        try:
-            # per-MV partial aggs are independent tiny jobs over the
-            # cached block — run them concurrently (serial writes made
-            # the 4-MV batch ~1.8 s; the trigger budget is 1 s)
-            errors: list[Exception] = []
-
-            def one(spec: MVSpec) -> None:
-                try:
-                    write_batch(batch, spec, f"{mv_root}/{spec.name}", batch_id)
-                except Exception as exc:  # surface to the stream, don't swallow
-                    errors.append(exc)
-
-            threads = [threading.Thread(target=one, args=(s,)) for s in specs]
-            for t in threads:
-                t.start()
-            for t in threads:
-                t.join()
-            if errors:
-                raise errors[0]
-        finally:
-            batch.unpersist()
-
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{int(trigger_seconds * 1000)} milliseconds")
-        .start()
+    partials = {
+        f"{mv_root}/{spec.name}": (lambda batch, spec=spec: _stored_partial(batch, spec))
+        for spec in specs
+    }
+    return parts_store.start_stream(
+        spark,
+        source_dir,
+        schemas.EVENTS if specs[0].source == "events" else schemas.ORDERS,
+        checkpoint_dir,
+        parts_store.part_sink(partials),
+        trigger_seconds=trigger_seconds,
+        max_files_per_trigger=max_files_per_trigger,
     )
 
 

@@ -1,12 +1,27 @@
-"""Crash-safe batch-id-keyed part stores (shared by streaming sinks).
+"""Crash-safe batch-id-keyed part stores: the one implementation behind
+every streaming store.
 
-Both incremental-MV tables (``streaming/mv.py``) and the dedup-at-
-ingest accepted corpus (``streaming/dedup.py``) use the same storage
-contract: a directory of ``b=<batch_id>`` parquet parts, one per
-micro-batch, written idempotently (overwrite) so Structured Streaming
-crash-replay rewrites the same directory with the same content. This
-module holds the part-store mechanics that are identical across both:
+The incremental MVs (``streaming/mv.py``), the State/Merge families
+(``topk_state``, ``quantile_state``, ``tdigest_state``) and the
+dedup-at-ingest accepted corpus (``streaming/dedup.py``) share one
+storage contract: a directory of ``b=<batch_id>`` parquet parts, one
+per micro-batch, written idempotently (overwrite) so Structured
+Streaming crash-replay rewrites the same directory with the same
+content. The stores own only their algebra (partial, merge, finalize);
+every mechanic lives here, once:
 
+- **stream launch** (:func:`start_stream`): file-stream reader →
+  ``maxFilesPerTrigger`` → ``foreachBatch`` → checkpoint → trigger.
+  :func:`part_sink` is the foreachBatch body that writes one part per
+  store per micro-batch (several stores fed by one stream share the
+  cached block — the ClickHouse insert-triggered MV cascade).
+- **part write** (:func:`write_part`): the idempotent
+  ``coalesce(1)`` overwrite of ``b=<batch_id>``.
+- **live read** (:func:`read_live`): committed-only, manifest-aware
+  listing with a bounded re-list on the listing→resolution race.
+- **compaction rule** (:func:`compact`, :func:`maybe_compact`): the
+  retention fold and the part-count cadence over
+  :func:`compact_parts`.
 - **compaction** (:func:`compact_parts`): fold many parts into one,
   atomically, with a pluggable ``fold`` (MVs re-aggregate partials;
   the dedup store just concatenates). The merged part is written to a
@@ -47,11 +62,13 @@ from __future__ import annotations
 
 import json
 import shutil
+import threading
 import time
 from collections.abc import Callable
 from pathlib import Path
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # How long a folded part stays on disk after its merge published.
 # Bound: the max listing→consumption latency of any concurrent reader
@@ -60,6 +77,9 @@ from pyspark.sql import DataFrame
 # last fold's inputs, bounded and transient.
 GRACE_SECONDS = 120.0
 DOOMED_MARKER = "_DOOMED"
+# Bounded re-list budget of :func:`read_live` (backoff 50 ms × attempt,
+# ~1 s total) — the backstop behind the tombstone grace window.
+READ_RETRIES = 6
 
 
 def is_transient_listing_race(e: Exception) -> bool:
@@ -210,7 +230,6 @@ def compact_parts(
     fold: Callable[[DataFrame], DataFrame],
     checkpoint_dir: str | None = None,
     min_parts: int = 2,
-    finish: Callable[[Path, Path, list[str]], None] | None = None,
 ) -> bool:
     """Fold the store's committed parts into one merged part (see the
     module docstring for the crash-safety and commit-gate contracts).
@@ -250,7 +269,206 @@ def compact_parts(
     )
     target = live / f"b={merged_id}"
     hidden.rename(target)
-    # `finish` is an injection seam (tests simulate a crash between
-    # publish and delete); recovery always uses the real deleter.
-    (finish or finish_deletes)(live, target, [d.name for d in snapshot])
+    finish_deletes(live, target, [d.name for d in snapshot])
     return True
+
+
+def compact(
+    spark: SparkSession,
+    path: str,
+    merge: Callable[[DataFrame], DataFrame],
+    schema: StructType | None = None,
+    checkpoint_dir: str | None = None,
+    retain_where: Column | None = None,
+) -> bool:
+    """Fold a store's committed parts with its ``merge`` (the
+    background-merge analog) through :func:`compact_parts`.
+
+    ``retain_where``: optional retention predicate over the store's key
+    columns, applied BEFORE the merge — the ClickHouse ``TTL ...
+    DELETE``-on-merge analog. A retention fold is a REWRITE, not just a
+    merge: it runs even when the store is already one part
+    (``min_parts=1``), or an already-compacted store could never
+    expire anything. Returns True if a fold published."""
+
+    def fold(df: DataFrame) -> DataFrame:
+        if retain_where is not None:
+            df = df.filter(retain_where)
+        return merge(df)
+
+    return compact_parts(
+        path,
+        read_parts=lambda dirs: scan_parts(spark, dirs, schema),
+        fold=fold,
+        checkpoint_dir=checkpoint_dir,
+        min_parts=1 if retain_where is not None else 2,
+    )
+
+
+def maybe_compact(
+    spark: SparkSession,
+    path: str,
+    merge: Callable[[DataFrame], DataFrame],
+    schema: StructType | None = None,
+    checkpoint_dir: str | None = None,
+    max_parts: int = 128,
+    retain_where: Column | None = None,
+) -> bool:
+    """The part-count cadence (measured, SCALEPROBE.md "MV maintenance
+    vs part count"): appends never list existing parts, so compaction
+    exists purely for READERS, whose listing+open cost grows ~linearly
+    with live parts; fold only once they exceed ``max_parts``. Cheap to
+    call every tick — the no-op path is a listing plus a tombstone
+    sweep. Returns True if a fold ran."""
+    live = Path(path)
+    if not live.exists():
+        return False
+    if len(live_part_dirs(path)) <= max_parts:
+        # tombstoned (already-folded) parts don't count against the
+        # threshold, but their grace clocks keep ticking — sweep here
+        # so stores that stay under the threshold still shed them.
+        reap_tombstones(live)
+        return False
+    return compact(spark, path, merge, schema, checkpoint_dir, retain_where)
+
+
+def scan_parts(
+    spark: SparkSession, dirs: list[str], schema: StructType | None = None
+) -> DataFrame:
+    """Scan a list of part dirs — with the store's explicit schema when
+    it has one (no footer-inference job, which also races deletes)."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*dirs)
+
+
+def read_live(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame:
+    """Snapshot read of a store's live parts — the one read policy.
+
+    - **manifest-aware** (:func:`live_part_dirs`): a reader sees either
+      a fold's inputs or the fold alone, never both;
+    - **committed-only**: a part dir exists before its write commits
+      (only ``_temporary`` inside); parquet's commit protocol drops
+      ``_SUCCESS`` exactly at commit, so that marker is the reader's
+      visibility boundary;
+    - **bounded re-list**: a read slower than the tombstone grace
+      window can still lose the listing→resolution race; each retry
+      re-lists, and the post-merge listing excludes doomed parts.
+      File-level disappearance after resolution stays covered by
+      ``ignoreMissingFiles`` (session.py).
+
+    Raises FileNotFoundError when the store has no committed part."""
+    last: Exception | None = None
+    for attempt in range(READ_RETRIES):
+        dirs = [str(d) for d in live_part_dirs(path) if (d / "_SUCCESS").exists()]
+        if not dirs:
+            raise FileNotFoundError(f"no committed parts under {path}")
+        try:
+            df = scan_parts(spark, dirs, schema)
+            df.schema  # force path resolution INSIDE the retry scope
+            return df
+        except Exception as e:  # noqa: BLE001 — known transients only
+            if not is_transient_listing_race(e):
+                raise
+            last = e
+            time.sleep(0.05 * (attempt + 1))
+    raise last  # type: ignore[misc]
+
+
+def write_part(df: DataFrame, path: str, batch_id: int) -> None:
+    """Idempotent micro-batch write: ``df`` lands in ``b=<batch_id>``
+    with overwrite mode. A foreachBatch replay (crash between data
+    write and checkpoint commit) re-runs the same batch_id over the
+    same checkpointed input files and overwrites the directory with
+    identical content — no double counts, ever.
+
+    ``coalesce(1)``: one part per micro-batch, the "one part per
+    INSERT block" analog. Without it a partial aggregation inherits
+    ``spark.sql.shuffle.partitions`` and a ~100-row batch fans out
+    into ~30 near-empty files, so after N batches every reader lists
+    and opens ~30N tiny files — measured as the dominant term in
+    mixed-load freshness lag (MIXEDLOAD.md). A part is bounded by
+    |groups touched| (or the accepted rows) per batch, so a single
+    output task is the right size by construction."""
+    df.coalesce(1).write.mode("overwrite").parquet(f"{path}/b={batch_id}")
+
+
+def part_sink(
+    partials: dict[str, Callable[[DataFrame], DataFrame]],
+) -> Callable[[DataFrame, int], None]:
+    """foreachBatch body feeding one or more stores from one stream:
+    each ``path -> partial`` pair writes ``partial(batch)`` as part
+    ``b=<batch_id>`` of the store at ``path``.
+
+    With several stores the block is read once and every store
+    aggregates from it (the ClickHouse shape: one INSERT block, every
+    attached MV): the micro-batch is persisted, materialized once, and
+    the per-store writes — independent tiny jobs — run concurrently
+    (serial writes made the 4-MV batch ~1.8 s against a 1 s trigger).
+    The shared checkpoint advances every store in lockstep."""
+
+    def sink(batch: DataFrame, batch_id: int) -> None:
+        if batch.isEmpty():
+            return
+        if len(partials) == 1:
+            [(path, partial)] = partials.items()
+            write_part(partial(batch), path, batch_id)
+            return
+        batch.persist()
+        batch.count()  # materialize once, not N racing computations
+        try:
+            errors: list[Exception] = []
+
+            def one(path: str, partial: Callable[[DataFrame], DataFrame]) -> None:
+                try:
+                    write_part(partial(batch), path, batch_id)
+                except Exception as exc:  # surface to the stream, don't swallow
+                    errors.append(exc)
+
+            threads = [
+                threading.Thread(target=one, args=item) for item in partials.items()
+            ]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join()
+            if errors:
+                raise errors[0]
+        finally:
+            batch.unpersist()
+
+    return sink
+
+
+def start_stream(
+    spark: SparkSession,
+    source_dir: str,
+    schema: StructType,
+    checkpoint_dir: str,
+    sink: Callable[[DataFrame, int], None],
+    trigger_seconds: float = 1,
+    max_files_per_trigger: int | None = None,
+    available_now: bool = False,
+):
+    """Launch a file-stream maintenance job: parquet drop directory
+    (the demo's Kafka stand-in) → ``foreachBatch(sink)`` with a
+    checkpoint. Exactly-once is the file source's checkpoint plus an
+    idempotent sink (:func:`write_part`). ``available_now`` drains
+    what is there and stops; otherwise a processing-time trigger every
+    ``trigger_seconds``. Returns the StreamingQuery handle."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    writer = (
+        reader.parquet(source_dir)
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(
+            processingTime=f"{int(trigger_seconds * 1000)} milliseconds"
+        )
+    return writer.start()

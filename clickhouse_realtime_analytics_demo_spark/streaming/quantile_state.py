@@ -2,9 +2,9 @@
 ``quantileExactMerge`` analog over integer-valued domains.
 
 State = per-group value histogram stored as ``map<long,long>``
-(distinct value → count), one part per micro-batch with the
-idempotent ``b=<id>`` replay contract shared by ``streaming/mv.py``
-and ``streaming/topk_state.py``. Merging is plain per-value count
+(distinct value → count), one part per micro-batch in a
+``streaming/parts.py`` store (the idempotent ``b=<id>`` replay
+contract every streaming store shares). Merging is plain per-value count
 addition, so any batching/ordering of the stream yields the identical
 merged multiset — quantiles read from state are EXACT, not sketches
 (ClickHouse's quantileExactState holds every value; this holds every
@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from clickhouse_realtime_analytics_demo_spark.streaming import parts as store
+
 _COL = "hist"
 
 
@@ -43,15 +45,6 @@ def hist_partial(batch: DataFrame, keys: list[str], value) -> DataFrame:
     )
     return counts.groupBy(*keys).agg(
         F.map_from_entries(F.collect_list(F.struct("bucket", "w"))).alias(_COL)
-    )
-
-
-def write_batch(
-    batch: DataFrame, keys: list[str], value, state_path: str, batch_id: int
-) -> None:
-    """Idempotent part write (the mv.write_batch contract)."""
-    hist_partial(batch, keys, value).coalesce(1).write.mode("overwrite").parquet(
-        f"{state_path}/b={batch_id}"
     )
 
 
@@ -119,70 +112,7 @@ def quantiles_from_state(
 def read_quantiles(
     spark: SparkSession, state_path: str, keys: list[str], probs: list[float]
 ) -> DataFrame:
-    from clickhouse_realtime_analytics_demo_spark.streaming import topk_state
-
-    # Manifest-aware live-part read (shared helper) — quantiles_from_
-    # state re-merges entries itself, so no map re-materialization.
-    parts = topk_state._read_live_parts(spark, state_path)
+    # quantiles_from_state re-merges entries itself, so the live parts
+    # feed it directly — no map re-materialization.
+    parts = store.read_live(spark, state_path)
     return quantiles_from_state(parts, keys, probs)
-
-
-def compact(
-    spark: SparkSession,
-    state_path: str,
-    keys: list[str],
-    checkpoint_dir: str | None = None,
-    retain_where=None,
-) -> bool:
-    """Fold all live parts into one via the shared crash-safe store
-    (atomic publish + tombstone grace + commit gate — see
-    topk_state.compact for the full contract). ``retain_where``:
-    optional key-column retention predicate applied before the fold
-    (the TTL-on-merge analog; runs even at one live part — a
-    retention fold is a rewrite, see topk_state.compact)."""
-    from clickhouse_realtime_analytics_demo_spark.streaming import parts as store
-
-    def _fold(df: DataFrame) -> DataFrame:
-        if retain_where is not None:
-            df = df.filter(retain_where)
-        return merge_states(df, keys).coalesce(1)
-
-    return store.compact_parts(
-        state_path,
-        read_parts=lambda dirs: spark.read.parquet(*dirs),
-        fold=_fold,
-        checkpoint_dir=checkpoint_dir,
-        min_parts=1 if retain_where is not None else 2,
-    )
-
-
-def start_incremental(
-    spark: SparkSession,
-    source_dir: str,
-    state_path: str,
-    keys: list[str],
-    value_col: str,
-    checkpoint_dir: str,
-    trigger_seconds: float = 1,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming maintenance job (the mv.start_incremental shape) over
-    the events ingest directory."""
-    from clickhouse_realtime_analytics_demo_spark.sources import schemas
-
-    reader = spark.readStream.schema(schemas.EVENTS)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        write_batch(batch, keys, F.col(value_col), state_path, batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{int(trigger_seconds * 1000)} milliseconds")
-        .start()
-    )

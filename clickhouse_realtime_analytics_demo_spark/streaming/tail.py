@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clickhouse_realtime_analytics_demo_spark.sources import schemas
+from clickhouse_realtime_analytics_demo_spark.streaming import parts
 
 
 def poll(
@@ -120,14 +121,10 @@ class EventTail:
             with self._lock:
                 self._buffer.extend(rows)
 
-        self.query = (
-            spark.readStream.schema(schemas.EVENTS)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(source_dir)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(processingTime=f"{trigger_seconds} seconds")
-            .start()
+        self.query = parts.start_stream(
+            spark, source_dir, schemas.EVENTS, checkpoint_dir, sink,
+            trigger_seconds=trigger_seconds,
+            max_files_per_trigger=max_files_per_trigger,
         )
 
     def drain(self, after_event_id: int = 0, limit: int = 50) -> tuple[list[dict], int]:

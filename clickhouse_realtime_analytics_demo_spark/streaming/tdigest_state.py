@@ -13,10 +13,10 @@ rank error ~O(1/compression), tightest at the tails (Dunning &
 Ertl, "Computing extremely accurate quantiles using t-digests").
 
 State = per-group centroid arrays ``(means array<double>, weights
-array<double>, vmin, vmax)``, one part per micro-batch under the
-idempotent ``b=<id>`` replay contract shared with ``mv.py`` /
-``topk_state.py`` / ``quantile_state.py``; compaction rides the
-shared crash-safe store (``streaming/parts.py``).
+array<double>, vmin, vmax)``, one part per micro-batch in a
+``streaming/parts.py`` store (the idempotent ``b=<id>`` replay
+contract every streaming store shares); ``parts.compact`` folds it
+with :func:`merge_states`.
 
 Execution split (Spark-first):
 - digest BUILD is per-partition ``mapInPandas`` (Arrow-batched
@@ -43,6 +43,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from clickhouse_realtime_analytics_demo_spark.streaming import parts as store
 
 DEFAULT_COMPRESSION = 200
 
@@ -226,20 +228,6 @@ def quantiles_from_state(
     )
 
 
-def write_batch(
-    batch: DataFrame,
-    keys: list[str],
-    value,
-    state_path: str,
-    batch_id: int,
-    compression: int = DEFAULT_COMPRESSION,
-) -> None:
-    """Idempotent part write (the mv.write_batch contract)."""
-    tdigest_partial(batch, keys, value, compression).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{state_path}/b={batch_id}")
-
-
 def read_quantiles(
     spark: SparkSession,
     state_path: str,
@@ -247,72 +235,7 @@ def read_quantiles(
     probs: list[float],
     compression: int = DEFAULT_COMPRESSION,
 ) -> DataFrame:
-    """Merge-on-read over the live part set (manifest-aware, shared
-    helper) → relational quantile extraction."""
-    from clickhouse_realtime_analytics_demo_spark.streaming import topk_state
-
-    parts = topk_state._read_live_parts(spark, state_path)
+    """Merge-on-read over the live part set (``parts.read_live``) →
+    relational quantile extraction."""
+    parts = store.read_live(spark, state_path)
     return quantiles_from_state(merge_states(parts, keys, compression), keys, probs)
-
-
-def compact(
-    spark: SparkSession,
-    state_path: str,
-    keys: list[str],
-    compression: int = DEFAULT_COMPRESSION,
-    checkpoint_dir: str | None = None,
-    retain_where=None,
-) -> bool:
-    """Fold all live parts into one via the shared crash-safe store
-    (atomic publish + tombstone grace + commit gate — the
-    topk_state.compact contract). ``retain_where``: optional
-    key-column retention predicate applied before the fold (the
-    TTL-on-merge analog; runs even at one live part — a retention
-    fold is a rewrite, see topk_state.compact)."""
-    from clickhouse_realtime_analytics_demo_spark.streaming import parts as store
-
-    def _fold(df: DataFrame) -> DataFrame:
-        if retain_where is not None:
-            df = df.filter(retain_where)
-        return merge_states(df, keys, compression).coalesce(1)
-
-    return store.compact_parts(
-        state_path,
-        read_parts=lambda dirs: spark.read.parquet(*dirs),
-        fold=_fold,
-        checkpoint_dir=checkpoint_dir,
-        min_parts=1 if retain_where is not None else 2,
-    )
-
-
-def start_incremental(
-    spark: SparkSession,
-    source_dir: str,
-    state_path: str,
-    keys: list[str],
-    value_col: str,
-    checkpoint_dir: str,
-    compression: int = DEFAULT_COMPRESSION,
-    trigger_seconds: float = 1,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming maintenance job (the mv.start_incremental shape) over
-    the events ingest directory."""
-    from clickhouse_realtime_analytics_demo_spark.sources import schemas
-
-    reader = spark.readStream.schema(schemas.EVENTS)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        write_batch(batch, keys, F.col(value_col), state_path, batch_id, compression)
-
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{int(trigger_seconds * 1000)} milliseconds")
-        .start()
-    )

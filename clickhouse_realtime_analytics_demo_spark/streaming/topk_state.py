@@ -6,8 +6,9 @@ that family the demo's "top users" dashboards would reach for at
 scale).
 
 State = per-group Misra-Gries summary stored as a ``map<string,long>``
-column, one part per micro-batch (idempotent ``b=<id>`` overwrite, the
-``streaming/mv.py`` crash-replay contract). Merge-on-read sums
+column, one part per micro-batch in a ``streaming/parts.py`` store
+(``parts.part_sink({path: topk_partial})`` feeds it, ``parts.compact``
+folds it with :func:`merge_states`). Merge-on-read sums
 per-key weights across parts relationally (explode → sum → MG trim) —
 the mergeable-summaries theorem (Agarwal et al. 2013) gives the
 combined summary the same guarantee as a single pass: every key with
@@ -23,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from clickhouse_realtime_analytics_demo_spark.streaming import parts as store
 
 
 def _trim(counts: DataFrame, keys: list[str], counters: int) -> DataFrame:
@@ -67,23 +70,6 @@ def topk_partial(
     )
 
 
-def write_batch(
-    batch: DataFrame,
-    keys: list[str],
-    child: str,
-    state_path: str,
-    batch_id: int,
-    counters: int = 2048,
-) -> None:
-    """Idempotent part write (the mv.write_batch contract: a replayed
-    foreachBatch overwrites ``b=<id>`` with identical content —
-    no double counts). One file per batch: the summary is bounded at
-    |groups touched| × counters entries by construction."""
-    topk_partial(batch, keys, child, counters).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{state_path}/b={batch_id}")
-
-
 def merge_states(
     parts: DataFrame, keys: list[str], counters: int = 2048
 ) -> DataFrame:
@@ -99,27 +85,6 @@ def merge_states(
     )
 
 
-def _read_live_parts(spark: SparkSession, state_path: str) -> DataFrame:
-    """Manifest-aware snapshot read of the live part set (the
-    parts.live_part_dirs contract): readers never see a half-published
-    fold, and a fold's inputs stay resolvable for the whole tombstone
-    grace window even after the merge publishes."""
-    from clickhouse_realtime_analytics_demo_spark.streaming import parts as store
-
-    dirs = [str(d) for d in store.live_part_dirs(state_path)]
-    if not dirs:
-        raise FileNotFoundError(f"no state parts under {state_path}")
-    try:
-        return spark.read.parquet(*dirs)
-    except Exception as e:  # one re-list covers the listing→read race
-        if not store.is_transient_listing_race(e):
-            raise
-        dirs = [str(d) for d in store.live_part_dirs(state_path)]
-        if not dirs:
-            raise FileNotFoundError(f"no state parts under {state_path}") from e
-        return spark.read.parquet(*dirs)
-
-
 def read_topk(
     spark: SparkSession,
     state_path: str,
@@ -129,7 +94,7 @@ def read_topk(
 ) -> DataFrame:
     """Merge-on-read final: top-k children per group with their
     (lower bound, undercount ≤ N/(counters+1)) weights."""
-    parts = _read_live_parts(spark, state_path)
+    parts = store.read_live(spark, state_path)
     merged = merge_states(parts, keys, counters)
     entries = merged.select(*keys, F.explode("topk_mg").alias("child", "w"))
     w = Window.partitionBy(*keys).orderBy(F.col("w").desc(), F.col("child").asc())
@@ -138,87 +103,4 @@ def read_topk(
         .filter(F.col("rnk") <= k)
         .withColumnRenamed("w", "est_count")
         .orderBy(*keys, "rnk")
-    )
-
-
-def start_incremental(
-    spark: SparkSession,
-    source_dir: str,
-    state_path: str,
-    keys: list[str],
-    child: str,
-    checkpoint_dir: str,
-    counters: int = 2048,
-    trigger_seconds: float = 1,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming maintenance job (the mv.start_incremental shape):
-    file-stream over the ingest directory → per-batch topK partial →
-    idempotent part append. Returns the StreamingQuery handle."""
-    from clickhouse_realtime_analytics_demo_spark.sources import schemas
-
-    reader = spark.readStream.schema(schemas.EVENTS)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        write_batch(batch, keys, child, state_path, batch_id, counters)
-
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{int(trigger_seconds * 1000)} milliseconds")
-        .start()
-    )
-
-
-def compact(
-    spark: SparkSession,
-    state_path: str,
-    keys: list[str],
-    counters: int = 2048,
-    checkpoint_dir: str | None = None,
-    retain_where=None,
-) -> bool:
-    """Fold all live parts into one (the AggregatingMergeTree
-    background merge), through the shared crash-safe part store
-    (``streaming/parts.py``): the fold is written to a dot-hidden dir,
-    published by a single atomic rename with a manifest excluding its
-    inputs, and the inputs are tombstoned for a grace window rather
-    than deleted under concurrent readers. A crash at any step is
-    replayed or rolled back on the next call — readers never see a
-    half-committed fold or a stranded ``_folding`` dir (the pre-r12
-    delete-then-rename scheme had both failure modes).
-
-    With ``checkpoint_dir``, only stream-committed batch ids fold (the
-    mv.compact commit gate) so crash-replayed batches can't re-appear
-    next to a fold that already contains them. Returns True if a fold
-    published.
-
-    ``retain_where``: optional retention predicate over the state's
-    GROUP KEY columns (the mv.compact contract; the ClickHouse
-    ``TTL ... DELETE``-on-merge analog for AggregatingMergeTree
-    state). Whole expired groups are dropped BEFORE the fold, so at a
-    date-keyed state the steady-state key space is
-    ``retention_days × |daily active groups|`` instead of unbounded —
-    the one growth term the multi-day probe left to the data model.
-    A retention fold is a rewrite, not just a merge: it runs even at
-    one live part (min_parts=1), or an already-compacted store could
-    never expire anything."""
-    from clickhouse_realtime_analytics_demo_spark.streaming import parts as store
-
-    def _fold(df: DataFrame) -> DataFrame:
-        if retain_where is not None:
-            df = df.filter(retain_where)
-        return merge_states(df, keys, counters).coalesce(1)
-
-    return store.compact_parts(
-        state_path,
-        read_parts=lambda dirs: spark.read.parquet(*dirs),
-        fold=_fold,
-        checkpoint_dir=checkpoint_dir,
-        min_parts=1 if retain_where is not None else 2,
     )

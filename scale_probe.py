@@ -223,7 +223,7 @@ def mv_probe(spark, part_counts=(8, 32, 64, 128, 256, 512), rows_per_batch=200) 
 
     rows_per_batch=200 ≈ one 2 s INSERT block at the reference rate,
     so part counts 8..512 span ~16 s .. ~17 min of uncompacted live
-    ingest. The derived cadence policy lives in mv.compact's docstring.
+    ingest. The derived cadence policy lives in mv.maybe_compact's docstring.
     """
     import shutil as _sh
     import tempfile as _tf
@@ -1247,6 +1247,34 @@ def write_heavyhitters_section(rows: list[dict]) -> None:
     md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
 
 
+def _state_families(base: str, keys: list[str], child: str, value, counters: int):
+    """The three State/Merge families (topK, exact quantile, t-digest)
+    as part stores under ``base``: ``{path: (partial, merge)}`` — the
+    per-batch partial each ``b=<id>`` part holds and the fold
+    ``parts.compact`` applies (one file per folded part, like the
+    per-batch parts)."""
+    from clickhouse_realtime_analytics_demo_spark.streaming import (
+        quantile_state,
+        tdigest_state,
+        topk_state,
+    )
+
+    return {
+        f"{base}/topk": (
+            lambda b: topk_state.topk_partial(b, keys, child, counters),
+            lambda df: topk_state.merge_states(df, keys, counters).coalesce(1),
+        ),
+        f"{base}/quant": (
+            lambda b: quantile_state.hist_partial(b, keys, value),
+            lambda df: quantile_state.merge_states(df, keys).coalesce(1),
+        ),
+        f"{base}/tdig": (
+            lambda b: tdigest_state.tdigest_partial(b, keys, value),
+            lambda df: tdigest_state.merge_states(df, keys).coalesce(1),
+        ),
+    }
+
+
 def stateparts_probe(spark, part_counts=(8, 64, 256)) -> list[dict]:
     """Round-11: merge-on-read wall for the new mergeable states
     (topK, quantile) vs part count — the freshness-vs-parts trade the
@@ -1258,6 +1286,7 @@ def stateparts_probe(spark, part_counts=(8, 64, 256)) -> list[dict]:
     import random as _random
 
     from clickhouse_realtime_analytics_demo_spark.streaming import (
+        parts as parts_store,
         quantile_state,
         tdigest_state,
         topk_state,
@@ -1268,6 +1297,10 @@ def stateparts_probe(spark, part_counts=(8, 64, 256)) -> list[dict]:
     for n_parts in part_counts:
         base = tempfile.mkdtemp(prefix=f"stateparts_{n_parts}_")
         tk, qt, td = f"{base}/topk", f"{base}/quant", f"{base}/tdig"
+        # r12: the bounded t-digest sibling keys on the same v — a
+        # fractional jitter would change the exact twin; the sketch
+        # doesn't care
+        families = _state_families(base, ["g"], "child", F.col("v"), 256)
         td_state_rows = 0
         for i in range(n_parts):
             rows = [
@@ -1276,12 +1309,8 @@ def stateparts_probe(spark, part_counts=(8, 64, 256)) -> list[dict]:
                 for _ in range(500)
             ]
             b = spark.createDataFrame(rows, "g string, child string, v long")
-            topk_state.write_batch(b, ["g"], "child", tk, batch_id=i, counters=256)
-            quantile_state.write_batch(b, ["g"], F.col("v"), qt, batch_id=i)
-            # r12: the bounded t-digest sibling — CONTINUOUS value
-            # (v + a fractional jitter would change the exact twin; the
-            # sketch doesn't care, so the same v keys all three stores)
-            tdigest_state.write_batch(b, ["g"], F.col("v"), td, batch_id=i)
+            for path, (partial, _) in families.items():
+                parts_store.write_part(partial(b), path, i)
 
         def _read_tk():
             return topk_state.read_topk(spark, tk, ["g"], k=5, counters=256).collect()
@@ -1311,9 +1340,8 @@ def stateparts_probe(spark, part_counts=(8, 64, 256)) -> list[dict]:
             F.sum(F.size("means")).alias("c")
         ).collect()[0]["c"]
         td_state_rows = int(td_centroids)
-        topk_state.compact(spark, tk, ["g"], counters=256)
-        quantile_state.compact(spark, qt, ["g"])
-        tdigest_state.compact(spark, td, ["g"])
+        for path, (_, merge) in families.items():
+            parts_store.compact(spark, path, merge)
         t0 = time.perf_counter(); tk_c = _read_tk()
         tk_compact = time.perf_counter() - t0
         t0 = time.perf_counter(); qt_c = _read_qt()
@@ -1348,21 +1376,6 @@ def stateparts_probe(spark, part_counts=(8, 64, 256)) -> list[dict]:
     return out
 
 
-def _day_events(spark, day: int, n: int, n_users: int, id_offset: int):
-    """Generator events confined to simulated day ``day``: timestamps
-    remapped onto [day, day+1) deterministically; every other column
-    (and the column ORDER the file-stream schema requires) unchanged."""
-    from clickhouse_realtime_analytics_demo_spark.sources import generator
-
-    ev = generator.events(spark, n=n, n_users=n_users, id_offset=id_offset, partitions=4)
-    base = F.unix_timestamp(F.lit(generator.EPOCH_START).cast("timestamp"))
-    sec = F.abs(F.xxhash64("event_id", F.lit(999))) % 86400
-    ts = F.timestamp_seconds(base + day * 86400 + sec)
-    return ev.withColumn("event_timestamp", ts).withColumn(
-        "event_date", F.to_date(F.col("event_timestamp"))
-    )
-
-
 def statedays_probe(
     spark, days=10, events_per_day=5000, n_users=800, max_parts=6
 ) -> list[dict]:
@@ -1379,6 +1392,7 @@ def statedays_probe(
     ~linearly in days for (user, day) keys), never days × keys —
     asserted structurally in tests/test_streaming.py; the walls here
     are the evidence at probe scale."""
+    from clickhouse_realtime_analytics_demo_spark.sources import generator, schemas
     from clickhouse_realtime_analytics_demo_spark.streaming import (
         mv,
         parts as parts_store,
@@ -1391,6 +1405,9 @@ def statedays_probe(
     src = f"{base}/src"
     mv_root = f"{base}/mv"
     tk, qt, td = f"{base}/topk", f"{base}/quant", f"{base}/tdig"
+    families = _state_families(
+        base, ["country"], "user_id", F.col("duration_seconds"), 1024
+    )
     specs = [
         mv.mv_specs()["mv_user_funnel"],
         mv.mv_specs()["mv_hourly_events"],
@@ -1401,18 +1418,13 @@ def statedays_probe(
         mv.start_incremental_multi(
             spark, src, mv_root, specs, f"{base}/ck_mv", max_files_per_trigger=8
         ),
-        topk_state.start_incremental(
-            spark, src, tk, ["country"], "user_id", f"{base}/ck_tk", counters=1024,
-            max_files_per_trigger=8,
-        ),
-        quantile_state.start_incremental(
-            spark, src, qt, ["country"], "duration_seconds", f"{base}/ck_qt",
-            max_files_per_trigger=8,
-        ),
-        tdigest_state.start_incremental(
-            spark, src, td, ["country"], "duration_seconds", f"{base}/ck_td",
-            max_files_per_trigger=8,
-        ),
+        *[
+            parts_store.start_stream(
+                spark, src, schemas.EVENTS, f"{path}_ck",
+                parts_store.part_sink({path: partial}), max_files_per_trigger=8,
+            )
+            for path, (partial, _) in families.items()
+        ],
     ]
     funnel = specs[0]
     funnel_path = f"{mv_root}/{funnel.name}"
@@ -1420,21 +1432,15 @@ def statedays_probe(
     folds = 0
     try:
         for day in range(days):
-            _day_events(
+            generator.day_events(
                 spark, day, events_per_day, n_users, id_offset=day * events_per_day
             ).write.mode("append").parquet(src)
             for q in queries:
                 q.processAllAvailable()
             # compaction policy tick (the maintenance job's cadence)
-            for path, fold in (
-                (funnel_path, lambda: mv.compact(spark, funnel_path, funnel)),
-                (tk, lambda: topk_state.compact(spark, tk, ["country"], counters=1024)),
-                (qt, lambda: quantile_state.compact(spark, qt, ["country"])),
-                (td, lambda: tdigest_state.compact(spark, td, ["country"])),
-            ):
-                if len(parts_store.live_part_dirs(path)) > max_parts:
-                    fold()
-                    folds += 1
+            folds += mv.maybe_compact(spark, funnel_path, funnel, max_parts=max_parts)
+            for path, (_, merge) in families.items():
+                folds += parts_store.maybe_compact(spark, path, merge, max_parts=max_parts)
 
             def _wall(fn) -> float:
                 best = float("inf")
@@ -3445,6 +3451,7 @@ def _state_retention_probe_body(
 ):
     from pyspark.sql import functions as F  # noqa: F811
 
+    from clickhouse_realtime_analytics_demo_spark.sources import generator
     from clickhouse_realtime_analytics_demo_spark.streaming import (
         mv,
         parts as parts_store,
@@ -3456,29 +3463,26 @@ def _state_retention_probe_body(
     mv_root = f"{base}/mv"
     tk, qt, td = f"{base}/topk", f"{base}/quant", f"{base}/tdig"
     keys = ["event_date", "country"]
+    families = _state_families(base, keys, "user_id", F.col("duration_seconds"), 1024)
     spec = mv.mv_specs()["mv_country_stats"]  # (country, event_date, event_type)
     mv_path = f"{mv_root}/{spec.name}"
     out = []
     batches = []
     dates = []
     for day in range(days):
-        b = _day_events(
+        b = generator.day_events(
             spark, day, events_per_day, n_users, id_offset=day * events_per_day
         ).localCheckpoint()
         batches.append(b)
         dates.append(b.select(F.min("event_date")).collect()[0][0])
         mv.write_batch(b, spec, mv_path, batch_id=day)
-        topk_state.write_batch(b, keys, "user_id", tk, batch_id=day, counters=1024)
-        quantile_state.write_batch(
-            b, keys, F.col("duration_seconds"), qt, batch_id=day
-        )
-        tdigest_state.write_batch(b, keys, F.col("duration_seconds"), td, batch_id=day)
+        for path, (partial, _) in families.items():
+            parts_store.write_part(partial(b), path, day)
         cutoff = dates[max(0, day - retain_days + 1)]
         pred = F.col("event_date") >= F.lit(cutoff)
         mv.compact(spark, mv_path, spec, retain_where=pred)
-        topk_state.compact(spark, tk, keys, counters=1024, retain_where=pred)
-        quantile_state.compact(spark, qt, keys, retain_where=pred)
-        tdigest_state.compact(spark, td, keys, retain_where=pred)
+        for path, (_, merge) in families.items():
+            parts_store.compact(spark, path, merge, retain_where=pred)
 
         retained = batches[max(0, day - retain_days + 1) :]
         ru = retained[0]

@@ -366,6 +366,7 @@ def test_live_top_users_by_events_state_served(spark, tmp_path):
     surface. Without parts (or without the dir) it falls back to
     direct compute."""
     from clickhouse_realtime_analytics_demo_spark.catalog import table
+    from clickhouse_realtime_analytics_demo_spark.streaming import parts as parts_store
     from clickhouse_realtime_analytics_demo_spark.streaming import topk_state
 
     state_dir = str(tmp_path / "topk_state")
@@ -386,13 +387,15 @@ def test_live_top_users_by_events_state_served(spark, tmp_path):
         from pyspark.sql import functions as F
 
         for i in range(3):
-            topk_state.write_batch(
-                ev.filter(F.pmod(F.hash("event_id"), F.lit(3)) == i),
-                ["event_type"],
-                "user_id",
+            parts_store.write_part(
+                topk_state.topk_partial(
+                    ev.filter(F.pmod(F.hash("event_id"), F.lit(3)) == i),
+                    ["event_type"],
+                    "user_id",
+                    counters=65536,
+                ),
                 state_dir,
-                batch_id=i,
-                counters=65536,
+                i,
             )
         d = c.get("/api/live/top-users-by-events").get_json()
         assert d["source"] == "state"

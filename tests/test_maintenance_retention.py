@@ -14,8 +14,7 @@ from pathlib import Path
 
 from pyspark.sql import functions as F
 
-from scale_probe import _day_events
-
+from clickhouse_realtime_analytics_demo_spark.sources.generator import day_events
 from clickhouse_realtime_analytics_demo_spark.streaming import mv
 from clickhouse_realtime_analytics_demo_spark.streaming import parts as parts_store
 
@@ -55,7 +54,7 @@ def test_maintenance_topology_holds_retention(spark, tmp_path):
     daily = []
     try:
         for day in range(DAYS):
-            b = _day_events(
+            b = day_events(
                 spark, day, PER_DAY, USERS, id_offset=day * PER_DAY
             ).localCheckpoint()
             daily.append(b)

@@ -1,9 +1,10 @@
 """Mergeable quantile state (streaming/quantile_state.py) — the
 quantileExactState/quantileExactMerge analog. Pins: merged-state
 quantiles are EXACT (they equal the pinned nearest-rank definition on
-the raw rows) across arbitrary batchings, replay idempotence,
-compaction equivalence, the streaming job end-to-end, and the
-executed plan (partitioned windows, no joins)."""
+the raw rows) across arbitrary batchings, the streaming job
+end-to-end, and the executed plan (partitioned windows, no joins).
+Replay idempotence and compaction equivalence are the shared
+part-store contract (tests/test_part_store_contract.py)."""
 
 from __future__ import annotations
 
@@ -11,6 +12,8 @@ import random
 
 from pyspark.sql import functions as F
 
+from clickhouse_realtime_analytics_demo_spark.sources import schemas
+from clickhouse_realtime_analytics_demo_spark.streaming import parts as parts_store
 from clickhouse_realtime_analytics_demo_spark.streaming import quantile_state
 from tests.conftest import SF_DIR
 
@@ -42,35 +45,11 @@ def test_state_quantiles_exact_across_batchings(spark, tmp_path):
             b = spark.createDataFrame(
                 rows[i * chunk : (i + 1) * chunk], "g string, v long"
             )
-            quantile_state.write_batch(b, ["g"], F.col("v"), path, batch_id=i)
+            parts_store.write_part(quantile_state.hist_partial(b, ["g"], F.col("v")), path, i)
         got = quantile_state.read_quantiles(spark, path, ["g"], PROBS).collect()
         assert len(got) == 3 * len(PROBS)
         for r in got:
             assert r["quantile"] == truth[(r["g"], r["prob"])], (n_batches, dict(r.asDict()))
-
-
-def test_replay_and_compact(spark, tmp_path):
-    rng = random.Random(5)
-    rows = [("g", rng.randrange(0, 500)) for _ in range(3_000)]
-    path = str(tmp_path / "state")
-    chunk = 1000
-    for i in range(3):
-        b = spark.createDataFrame(rows[i * chunk : (i + 1) * chunk], "g string, v long")
-        quantile_state.write_batch(b, ["g"], F.col("v"), path, batch_id=i)
-    once = quantile_state.read_quantiles(spark, path, ["g"], PROBS).collect()
-    # replay batch 1 (idempotent overwrite)
-    b1 = spark.createDataFrame(rows[chunk : 2 * chunk], "g string, v long")
-    quantile_state.write_batch(b1, ["g"], F.col("v"), path, batch_id=1)
-    replay = quantile_state.read_quantiles(spark, path, ["g"], PROBS).collect()
-    assert [tuple(r) for r in once] == [tuple(r) for r in replay]
-    assert quantile_state.compact(spark, path, ["g"])
-    from clickhouse_realtime_analytics_demo_spark.streaming import parts as parts_store
-
-    # atomic-publish contract (r11 ADVICE): live set is the fold alone,
-    # folded inputs tombstoned for the reader grace window, no _folding
-    assert len(parts_store.live_part_dirs(path)) == 1
-    after = quantile_state.read_quantiles(spark, path, ["g"], PROBS).collect()
-    assert [tuple(r) for r in once] == [tuple(r) for r in after]
 
 
 def test_streaming_state_equals_batch_quantiles(spark, tmp_path):
@@ -88,8 +67,12 @@ def test_streaming_state_equals_batch_quantiles(spark, tmp_path):
             "append"
         ).parquet(src)
         offset += n
-    q = quantile_state.start_incremental(
-        spark, src, state, ["country"], "duration_seconds", ckpt,
+    q = parts_store.start_stream(
+        spark, src, schemas.EVENTS, ckpt,
+        parts_store.part_sink(
+            {state: lambda b: quantile_state.hist_partial(
+                b, ["country"], F.col("duration_seconds"))}
+        ),
         max_files_per_trigger=2,
     )
     try:
@@ -113,7 +96,7 @@ def test_read_plan_partitioned_windows_no_join(spark, tmp_path):
     rows = [("g%d" % (i % 2), i % 97) for i in range(2_000)]
     path = str(tmp_path / "state")
     b = spark.createDataFrame(rows, "g string, v long")
-    quantile_state.write_batch(b, ["g"], F.col("v"), path, batch_id=0)
+    parts_store.write_part(quantile_state.hist_partial(b, ["g"], F.col("v")), path, 0)
     df = quantile_state.read_quantiles(spark, path, ["g"], PROBS)
     df.collect()
     for node in _walk(df._jdf.queryExecution().executedPlan()):

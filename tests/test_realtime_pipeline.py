@@ -48,20 +48,20 @@ def test_live_ingest_mv_tail(spark, tmp_path):
 
         # 2. incremental MV + change tail consuming while ingest runs
         spec = mv.mv_specs()["daily_user_activity"]
-        q = mv.start_incremental(
-            spark, events_glob, f"{d}/mv", spec, f"{d}/ckpt_mv", max_files_per_trigger=32
+        q = mv.start_incremental_multi(
+            spark, events_glob, d, [spec], f"{d}/ckpt_mv", max_files_per_trigger=32
         )
         t = tail.EventTail(spark, events_glob, f"{d}/ckpt_tail")
 
         # freshness: MV catches up to a cursor taken while producing
         c1 = loop.stats.events_rows
-        assert _wait(lambda: _mv_total(spark, f"{d}/mv", spec) >= c1), (
+        assert _wait(lambda: _mv_total(spark, f"{d}/{spec.name}", spec) >= c1), (
             f"MV never reached ingest cursor {c1}"
         )
         # and keeps advancing past a later cursor — live maintenance
         assert _wait(lambda: loop.stats.events_rows >= c1 + 100)
         c2 = loop.stats.events_rows
-        assert _wait(lambda: _mv_total(spark, f"{d}/mv", spec) >= c2), (
+        assert _wait(lambda: _mv_total(spark, f"{d}/{spec.name}", spec) >= c2), (
             f"MV stalled before later cursor {c2}"
         )
 

@@ -114,14 +114,14 @@ def test_retention_under_live_load(spark, tmp_path):
     def mv_total():
         try:
             return (
-                mv.read_final(spark, f"{d}/mv", spec)
+                mv.read_final(spark, f"{d}/{spec.name}", spec)
                 .agg(F.sum("total_events")).collect()[0][0] or 0
             )
         except Exception:
             return 0
 
-    q = mv.start_incremental(
-        spark, f"{events_path}/yyyymm=*", f"{d}/mv", spec, f"{d}/ckpt",
+    q = mv.start_incremental_multi(
+        spark, f"{events_path}/yyyymm=*", d, [spec], f"{d}/ckpt",
         max_files_per_trigger=32,
     )
 
@@ -244,14 +244,14 @@ def test_checkpoint_gate_never_expires_unconsumed(spark, tmp_path):
     def mv_total():
         try:
             return (
-                mv.read_final(spark, f"{d}/mv", spec)
+                mv.read_final(spark, f"{d}/{spec.name}", spec)
                 .agg(F.sum("total_events")).collect()[0][0] or 0
             )
         except Exception:
             return 0
 
-    q = mv.start_incremental(
-        spark, f"{events_path}/yyyymm=*", f"{d}/mv", spec, ckpt,
+    q = mv.start_incremental_multi(
+        spark, f"{events_path}/yyyymm=*", d, [spec], ckpt,
         max_files_per_trigger=32,
     )
     try:
@@ -285,8 +285,8 @@ def test_checkpoint_gate_never_expires_unconsumed(spark, tmp_path):
 
     # stream catches up on the same checkpoint, consuming the
     # backdated file through the doomed dir's glob
-    q2 = mv.start_incremental(
-        spark, f"{events_path}/yyyymm=*", f"{d}/mv", spec, ckpt,
+    q2 = mv.start_incremental_multi(
+        spark, f"{events_path}/yyyymm=*", d, [spec], ckpt,
         max_files_per_trigger=32,
     )
     try:

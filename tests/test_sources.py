@@ -107,3 +107,23 @@ def test_catalog_normalizes_events_ts_forms(spark, tmp_path):
         # strict consumers work on the normalized column
         micros = df.select(F.unix_micros("ts").alias("us")).orderBy("us").collect()
         assert micros[1].us - micros[0].us == 1_000_000
+
+
+def test_catalog_table_leaves_session_conf_unchanged(spark):
+    """A read never mutates session config (ROADMAP: no query path
+    does): the nanos-as-long parquet setting catalog.table relies on is
+    applied once by session.get_spark, and an events read leaves every
+    conf key as it found it — checked with the key unset, so the
+    result does not depend on which test read events first."""
+    from clickhouse_realtime_analytics_demo_spark.catalog import table
+    from tests.conftest import SF_DIR
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    assert spark.conf.get(key) == "true"  # set at session build
+    try:
+        spark.conf.unset(key)
+        before = dict(spark.conf.getAll)
+        table(spark, SF_DIR, "events")
+        assert dict(spark.conf.getAll) == before
+    finally:
+        spark.conf.set(key, "true")

@@ -1,7 +1,7 @@
 """State-store retention (VERDICT r12 #2): the TTL-on-merge analog for
 the four State/Merge families. The multi-day growth probe (r12) proved
 part count is policy-bounded but the KEY SPACE grows linearly for
-date-keyed groups; ``compact(retain_where=...)`` closes that term —
+date-keyed groups; ``parts.compact(retain_where=...)`` closes that term —
 whole expired groups are dropped during the crash-safe fold, the same
 contract ClickHouse gets from ``TTL event_date + INTERVAL h DAY
 DELETE`` on Summing/AggregatingMergeTree (reference
@@ -31,12 +31,16 @@ KEYS = ["event_date", "event_type"]
 
 
 def _days(spark, per_day=400, users=120):
-    from scale_probe import _day_events
+    from clickhouse_realtime_analytics_demo_spark.sources.generator import day_events
 
     return [
-        _day_events(spark, d, per_day, users, id_offset=d * per_day)
+        day_events(spark, d, per_day, users, id_offset=d * per_day)
         for d in range(DAYS)
     ]
+
+
+def _topk_merge(df):
+    return topk_state.merge_states(df, KEYS, counters=4096).coalesce(1)
 
 
 def _cutoff(batches):
@@ -69,11 +73,10 @@ def test_topk_retention_fold(spark, tmp_path):
     path = str(tmp_path / "tk")
     batches = _days(spark)
     for i, b in enumerate(batches):
-        topk_state.write_batch(b, KEYS, "user_id", path, batch_id=i, counters=4096)
+        parts_store.write_part(topk_state.topk_partial(b, KEYS, "user_id", 4096), path, i)
     cutoff = _cutoff(batches)
-    assert topk_state.compact(
-        spark, path, KEYS, counters=4096,
-        retain_where=F.col("event_date") >= F.lit(cutoff),
+    assert parts_store.compact(
+        spark, path, _topk_merge, retain_where=F.col("event_date") >= F.lit(cutoff)
     )
     stored = _stored_keys(spark, path)
     retained = _retained_union(batches, cutoff)
@@ -87,9 +90,8 @@ def test_topk_retention_fold(spark, tmp_path):
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
     # a tighter horizon on the single-part store still expires
     tighter = sorted({t[0] for t in _key_rows(retained)})[-1]
-    assert topk_state.compact(
-        spark, path, KEYS, counters=4096,
-        retain_where=F.col("event_date") >= F.lit(tighter),
+    assert parts_store.compact(
+        spark, path, _topk_merge, retain_where=F.col("event_date") >= F.lit(tighter)
     )
     assert _key_rows(_stored_keys(spark, path)) == _key_rows(
         _retained_union(batches, tighter)
@@ -100,12 +102,13 @@ def test_quantile_retention_fold(spark, tmp_path):
     path = str(tmp_path / "qt")
     batches = _days(spark)
     for i, b in enumerate(batches):
-        quantile_state.write_batch(
-            b, KEYS, F.col("duration_seconds"), path, batch_id=i
+        parts_store.write_part(
+            quantile_state.hist_partial(b, KEYS, F.col("duration_seconds")), path, i
         )
     cutoff = _cutoff(batches)
-    assert quantile_state.compact(
-        spark, path, KEYS, retain_where=F.col("event_date") >= F.lit(cutoff)
+    assert parts_store.compact(
+        spark, path, lambda df: quantile_state.merge_states(df, KEYS).coalesce(1),
+        retain_where=F.col("event_date") >= F.lit(cutoff),
     )
     stored = _stored_keys(spark, path)
     retained = _retained_union(batches, cutoff)
@@ -125,10 +128,13 @@ def test_tdigest_retention_fold(spark, tmp_path):
     path = str(tmp_path / "td")
     batches = _days(spark)
     for i, b in enumerate(batches):
-        tdigest_state.write_batch(b, KEYS, F.col("revenue"), path, batch_id=i)
+        parts_store.write_part(
+            tdigest_state.tdigest_partial(b, KEYS, F.col("revenue")), path, i
+        )
     cutoff = _cutoff(batches)
-    assert tdigest_state.compact(
-        spark, path, KEYS, retain_where=F.col("event_date") >= F.lit(cutoff)
+    assert parts_store.compact(
+        spark, path, lambda df: tdigest_state.merge_states(df, KEYS).coalesce(1),
+        retain_where=F.col("event_date") >= F.lit(cutoff),
     )
     stored = _stored_keys(spark, path)
     retained = _retained_union(batches, cutoff)
@@ -178,11 +184,11 @@ def test_mv_and_states_share_retention_contract(spark, tmp_path):
     sizes = []
     for i, b in enumerate(batches):
         mv.write_batch(b, spec, mv_path, batch_id=i)
-        topk_state.write_batch(b, KEYS, "user_id", tk, batch_id=i, counters=4096)
+        parts_store.write_part(topk_state.topk_partial(b, KEYS, "user_id", 4096), tk, i)
         cutoff = dates[max(0, i - RETAIN + 1)]
         pred = F.col("event_date") >= F.lit(cutoff)
         mv.compact(spark, mv_path, spec, retain_where=pred)
-        topk_state.compact(spark, tk, KEYS, counters=4096, retain_where=pred)
+        parts_store.compact(spark, tk, _topk_merge, retain_where=pred)
         retained = _retained_union(batches[: i + 1], cutoff)
         mv_stored = spark.read.parquet(
             str(parts_store.live_part_dirs(mv_path)[0])

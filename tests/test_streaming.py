@@ -44,7 +44,7 @@ def test_mv_equivalence_after_stream(spark, tmp_path, mv_name):
     ingested so far — the defining MV invariant."""
     spec = mv.mv_specs()[mv_name]
     src = str(tmp_path / "src")
-    mv_path = str(tmp_path / "mv")
+    mv_path = str(tmp_path / "mv" / spec.name)
     ckpt = str(tmp_path / "ckpt")
 
     gen = generator.events if spec.source == "events" else generator.orders
@@ -53,7 +53,9 @@ def test_mv_equivalence_after_stream(spark, tmp_path, mv_name):
         gen(spark, n=n, id_offset=offset, partitions=2).write.mode("append").parquet(src)
         offset += n
 
-    q = mv.start_incremental(spark, src, mv_path, spec, ckpt, max_files_per_trigger=2)
+    q = mv.start_incremental_multi(
+        spark, src, str(tmp_path / "mv"), [spec], ckpt, max_files_per_trigger=2
+    )
     try:
         q.processAllAvailable()
     finally:
@@ -95,11 +97,15 @@ def test_compact_crash_recovery(spark, tmp_path, monkeypatch):
     assert total() == 300
 
     # crash AFTER publish, BEFORE snapshot deletion
-    real_finish = mv._finish_deletes
-    monkeypatch.setattr(mv, "_finish_deletes", lambda *a: (_ for _ in ()).throw(RuntimeError))
+    from clickhouse_realtime_analytics_demo_spark.streaming import parts as parts_store
+
+    real_finish = parts_store.finish_deletes
+    monkeypatch.setattr(
+        parts_store, "finish_deletes", lambda *a: (_ for _ in ()).throw(RuntimeError)
+    )
     with _pytest.raises(RuntimeError):
         mv.compact(spark, mv_path, spec)
-    monkeypatch.setattr(mv, "_finish_deletes", real_finish)
+    monkeypatch.setattr(parts_store, "finish_deletes", real_finish)
     mv.compact(spark, mv_path, spec)  # recovery completes the deletes
     assert total() == 300
     assert _rows(mv.read_final(spark, mv_path, spec), spec.keys) == want_rows
@@ -602,18 +608,18 @@ def test_compactor_folds_during_live_stream(spark, tmp_path):
     spec = mv.mv_specs()["daily_user_activity"]
     loop = IngestLoop(spark, d, events_per_tick=40, orders_per_tick=0,
                       tick_seconds=0.2)
-    q = mv.start_incremental(
-        spark, f"{d}/events/yyyymm=*", f"{d}/mv", spec, f"{d}/ckpt",
+    q = mv.start_incremental_multi(
+        spark, f"{d}/events/yyyymm=*", d, [spec], f"{d}/ckpt",
         max_files_per_trigger=8,
     )
     comp = mv.Compactor(
-        spark, [(f"{d}/mv", spec, f"{d}/ckpt")], interval_s=0.5, max_parts=3
+        spark, [(f"{d}/{spec.name}", spec, f"{d}/ckpt")], interval_s=0.5, max_parts=3
     ).start()
 
     def total():
         try:
             return (
-                mv.read_final(spark, f"{d}/mv", spec)
+                mv.read_final(spark, f"{d}/{spec.name}", spec)
                 .agg(F.sum("total_events")).collect()[0][0] or 0
             )
         except Exception:
@@ -643,10 +649,10 @@ def test_compactor_folds_during_live_stream(spark, tmp_path):
     # folding actually bounded the table: live parts stay near max_parts
     # (tombstoned fold inputs awaiting their grace window don't count)
     from clickhouse_realtime_analytics_demo_spark.streaming import parts as parts_store
-    parts = len(parts_store.live_part_dirs(f"{d}/mv"))
+    parts = len(parts_store.live_part_dirs(f"{d}/{spec.name}"))
     assert parts < 20, parts
     # and the final read still matches after one last quiesced fold
-    mv.compact(spark, f"{d}/mv", spec, checkpoint_dir=f"{d}/ckpt")
+    mv.compact(spark, f"{d}/{spec.name}", spec, checkpoint_dir=f"{d}/ckpt")
     assert total() == written
 
 
@@ -755,8 +761,6 @@ def test_multi_day_state_growth_policy(spark, tmp_path):
     tail, and the MV ≡ batch invariant holds at the horizon. 7
     simulated days, one shared maintenance stream, fold when live
     parts exceed 3 (mv.maybe_compact)."""
-    from scale_probe import _day_events
-
     from clickhouse_realtime_analytics_demo_spark.streaming import (
         parts as parts_store,
     )
@@ -775,7 +779,7 @@ def test_multi_day_state_growth_policy(spark, tmp_path):
     )
     try:
         for day in range(7):
-            _day_events(
+            generator.day_events(
                 spark, day, per_day, users, id_offset=day * per_day
             ).write.mode("append").parquet(src)
             q.processAllAvailable()

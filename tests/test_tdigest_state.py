@@ -25,6 +25,8 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from clickhouse_realtime_analytics_demo_spark.sources import schemas
+from clickhouse_realtime_analytics_demo_spark.streaming import parts as parts_store
 from clickhouse_realtime_analytics_demo_spark.streaming import tdigest_state
 
 PROBS = [0.01, 0.25, 0.5, 0.75, 0.9, 0.99]
@@ -120,33 +122,35 @@ def test_merge_laws_order_insensitive_and_deterministic(spark):
     assert q_of(flat) == again
 
 
-def test_replay_and_crash_safe_compact(spark, tmp_path):
-    from clickhouse_realtime_analytics_demo_spark.streaming import parts as parts_store
+def _merge(df):
+    return tdigest_state.merge_states(df, ["g"]).coalesce(1)
 
+
+def test_replay_and_crash_safe_compact(spark, tmp_path):
     rng = random.Random(5)
     rows = [("g", rng.uniform(0, 100)) for _ in range(6_000)]
     path = str(tmp_path / "state")
     chunk = 2_000
     for i in range(3):
         b = spark.createDataFrame(rows[i * chunk : (i + 1) * chunk], "g string, v double")
-        tdigest_state.write_batch(b, ["g"], F.col("v"), path, batch_id=i)
+        parts_store.write_part(tdigest_state.tdigest_partial(b, ["g"], F.col("v")), path, i)
     once = tdigest_state.read_quantiles(spark, path, ["g"], PROBS).collect()
     # replay batch 1 (idempotent overwrite — no double counting)
     b1 = spark.createDataFrame(rows[chunk : 2 * chunk], "g string, v double")
-    tdigest_state.write_batch(b1, ["g"], F.col("v"), path, batch_id=1)
+    parts_store.write_part(tdigest_state.tdigest_partial(b1, ["g"], F.col("v")), path, 1)
     replay = tdigest_state.read_quantiles(spark, path, ["g"], PROBS).collect()
     assert [tuple(r) for r in once] == [tuple(r) for r in replay]
     # crash-safe fold via the shared store; post-fold estimates stay
     # within tolerance of the raw data (a re-compress pass may shift
     # centroids — the bound, not bit-equality, is the contract)
-    assert tdigest_state.compact(spark, path, ["g"])
+    assert parts_store.compact(spark, path, _merge)
     assert len(parts_store.live_part_dirs(path)) == 1
     vals = [v for _, v in rows]
     for r in tdigest_state.read_quantiles(spark, path, ["g"], PROBS).collect():
         err = _rank_error(vals, r["quantile"], r["prob"])
         assert err <= RANK_TOL, (r["prob"], err)
     # no-op below two live parts
-    assert not tdigest_state.compact(spark, path, ["g"])
+    assert not parts_store.compact(spark, path, _merge)
 
 
 def test_streaming_state_within_tolerance(spark, tmp_path):
@@ -161,8 +165,12 @@ def test_streaming_state_within_tolerance(spark, tmp_path):
             "append"
         ).parquet(src)
         offset += n
-    q = tdigest_state.start_incremental(
-        spark, src, state, ["country"], "duration_seconds", ckpt,
+    q = parts_store.start_stream(
+        spark, src, schemas.EVENTS, ckpt,
+        parts_store.part_sink(
+            {state: lambda b: tdigest_state.tdigest_partial(
+                b, ["country"], F.col("duration_seconds"))}
+        ),
         max_files_per_trigger=2,
     )
     try:

@@ -1,8 +1,10 @@
 """Mergeable top-k MV state (streaming/topk_state.py) — the
 topKState/topKMerge analog. Pins: exactness in the untrimmed regime,
-the MG undercount bound in the trimmed regime, crash-replay
-idempotence, compaction equivalence, and the trim's executed plan
-(one partitioned WindowExec, no groups-sized join)."""
+the MG undercount bound in the trimmed regime, compaction
+equivalence, and the trim's executed plan (one partitioned
+WindowExec, no groups-sized join). Replay idempotence and crash-safe
+compaction are the shared part-store contract
+(tests/test_part_store_contract.py)."""
 
 from __future__ import annotations
 
@@ -10,6 +12,8 @@ import random
 
 from pyspark.sql import functions as F
 
+from clickhouse_realtime_analytics_demo_spark.sources import schemas
+from clickhouse_realtime_analytics_demo_spark.streaming import parts as parts_store
 from clickhouse_realtime_analytics_demo_spark.streaming import topk_state
 from tests.conftest import SF_DIR
 
@@ -46,8 +50,8 @@ def test_merge_read_exact_when_untrimmed(spark, tmp_path):
     path = str(tmp_path / "state")
     for i in range(4):
         batch = ev.filter(F.abs(F.hash("user_id", F.lit(i))) % 4 == i % 4)
-        topk_state.write_batch(
-            batch, ["event_type"], "user_id", path, batch_id=i, counters=4096
+        parts_store.write_part(
+            topk_state.topk_partial(batch, ["event_type"], "user_id", 4096), path, i
         )
     got = topk_state.read_topk(
         spark, path, ["event_type"], k=5, counters=4096
@@ -80,7 +84,7 @@ def test_trimmed_regime_bound_and_heavy_survival(spark, tmp_path):
     chunk = n // 5 + 1
     for i in range(5):
         b = spark.createDataFrame(rows[i * chunk : (i + 1) * chunk], "g string, child string")
-        topk_state.write_batch(b, ["g"], "child", path, batch_id=i, counters=counters)
+        parts_store.write_part(topk_state.topk_partial(b, ["g"], "child", counters), path, i)
     merged = topk_state.read_topk(spark, path, ["g"], k=counters, counters=counters)
     est = {r["child"]: r["est_count"] for r in merged.collect()}
     truth: dict = {}
@@ -95,77 +99,32 @@ def test_trimmed_regime_bound_and_heavy_survival(spark, tmp_path):
             assert child in est, (child, c, bound)
 
 
-def test_replay_idempotent(spark, tmp_path):
-    """The mv.write_batch contract: replaying a batch id overwrites
-    with identical content — no double counts."""
-    ev = _events(spark).limit(500)
-    path = str(tmp_path / "state")
-    topk_state.write_batch(ev, ["event_type"], "user_id", path, batch_id=0)
-    once = topk_state.read_topk(spark, path, ["event_type"], k=3).collect()
-    topk_state.write_batch(ev, ["event_type"], "user_id", path, batch_id=0)
-    twice = topk_state.read_topk(spark, path, ["event_type"], k=3).collect()
-    assert [tuple(r) for r in once] == [tuple(r) for r in twice]
+def _merge(df):
+    return topk_state.merge_states(df, ["event_type"]).coalesce(1)
 
 
 def test_compact_preserves_topk(spark, tmp_path):
     ev = _events(spark)
     path = str(tmp_path / "state")
     for i in range(3):
-        topk_state.write_batch(
-            ev.filter(F.col("user_id") % 3 == i), ["event_type"], "user_id", path, i
+        parts_store.write_part(
+            topk_state.topk_partial(
+                ev.filter(F.col("user_id") % 3 == i), ["event_type"], "user_id"
+            ),
+            path,
+            i,
         )
     before = topk_state.read_topk(spark, path, ["event_type"], k=5).collect()
-    assert topk_state.compact(spark, path, ["event_type"])
-    from clickhouse_realtime_analytics_demo_spark.streaming import parts as parts_store
-
+    assert parts_store.compact(spark, path, _merge)
     # live set = the fold alone; the folded inputs sit out a tombstone
     # grace window (concurrent-reader TOCTOU cover) before deletion.
     assert len(parts_store.live_part_dirs(path)) == 1
     after = topk_state.read_topk(spark, path, ["event_type"], k=5).collect()
     assert [tuple(r) for r in before] == [tuple(r) for r in after]
     # compact twice: no-op below two live parts
-    assert not topk_state.compact(spark, path, ["event_type"])
+    assert not parts_store.compact(spark, path, _merge)
     again = topk_state.read_topk(spark, path, ["event_type"], k=5).collect()
     assert [tuple(r) for r in after] == [tuple(r) for r in again]
-
-
-def test_compact_crash_mid_publish_never_strands_readers(spark, tmp_path):
-    """r11 ADVICE (topk_state.py:176): the old compact deleted every
-    b=* part BEFORE renaming _folding into place — a crash between the
-    two stranded ALL state. Now compaction rides the shared crash-safe
-    store: kill it at the publish seam and (a) readers still serve the
-    pre-fold state, (b) the next compact call recovers and finishes."""
-    from clickhouse_realtime_analytics_demo_spark.streaming import parts as parts_store
-
-    ev = _events(spark)
-    path = str(tmp_path / "state")
-    for i in range(3):
-        topk_state.write_batch(
-            ev.filter(F.col("user_id") % 3 == i), ["event_type"], "user_id", path, i
-        )
-    before = topk_state.read_topk(spark, path, ["event_type"], k=5).collect()
-
-    def boom(live, target, doomed):
-        raise RuntimeError("crash between publish and delete")
-
-    try:
-        parts_store.compact_parts(
-            path,
-            read_parts=lambda dirs: spark.read.parquet(*dirs),
-            fold=lambda df: topk_state.merge_states(df, ["event_type"]).coalesce(1),
-            finish=boom,
-        )
-    except RuntimeError:
-        pass
-    # mid-crash: fold published with manifest, inputs not yet doomed —
-    # readers must see exactly one consistent state (the fold alone)
-    mid = topk_state.read_topk(spark, path, ["event_type"], k=5).collect()
-    assert [tuple(r) for r in mid] == [tuple(r) for r in before]
-    # recovery path (next compact call) completes the deletes
-    topk_state.compact(spark, path, ["event_type"])
-    assert len(parts_store.live_part_dirs(path)) == 1
-    after = topk_state.read_topk(spark, path, ["event_type"], k=5).collect()
-    assert [tuple(r) for r in after] == [tuple(r) for r in before]
 
 
 def test_streaming_state_equals_batch_topk(spark, tmp_path):
@@ -184,9 +143,12 @@ def test_streaming_state_equals_batch_topk(spark, tmp_path):
             "append"
         ).parquet(src)
         offset += n
-    q = topk_state.start_incremental(
-        spark, src, state, ["country"], "user_id", ckpt,
-        counters=4096, max_files_per_trigger=2,
+    q = parts_store.start_stream(
+        spark, src, schemas.EVENTS, ckpt,
+        parts_store.part_sink(
+            {state: lambda b: topk_state.topk_partial(b, ["country"], "user_id", 4096)}
+        ),
+        max_files_per_trigger=2,
     )
     try:
         q.processAllAvailable()
