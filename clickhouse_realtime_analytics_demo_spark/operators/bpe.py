@@ -111,6 +111,9 @@ def train_bpe(
     # 22 s spread over the session's shuffle parallelism (the r6/r8
     # expression-heavy-coalescing lesson, again).
     n_parts = max(int(spark_conf_parts(docs)), 16)
+    # construction jobs: every merge round collects its top pair(s) to
+    # the driver, and the vocabulary is checkpointed at start and again
+    # between folds — the algorithm is driver-sequential
     words = (
         word_counts(docs, text_col, pattern)
         .select(
@@ -218,6 +221,9 @@ def train_bpe_batched(
     what makes 32k merges feasible. Pinned against a pure-Python twin
     of the same relaxed rule (tests/test_bpe.py)."""
     n_parts = max(int(spark_conf_parts(docs)), 16)
+    # construction jobs: every merge round collects its top pair(s) to
+    # the driver, and the vocabulary is checkpointed at start and again
+    # between folds — the algorithm is driver-sequential
     words = (
         word_counts(docs, text_col, pattern)
         .select(

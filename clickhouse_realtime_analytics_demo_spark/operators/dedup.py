@@ -354,6 +354,7 @@ def lsh_candidates_from_sigs(
         # exchange is reused; only the count aggregate is extra.
         sizes = bucketed.groupBy(*keys).agg(F.count("*").alias("bucket_n"))
         if split_depth is None:
+            # construction job: the over-cap share decides the plan
             row = sizes.agg(
                 F.sum(
                     F.when(F.col("bucket_n") > max_bucket_size, F.col("bucket_n")).otherwise(

@@ -393,6 +393,7 @@ def bm25_scores(
         for i, t in enumerate(query_terms)
     ]
     scored_input = base.select("id", *keep, F.size("toks").alias("_dl"), *tf_cols)
+    # construction job: corpus stats collect to driver literals
     stats = scored_input.agg(
         F.count("*").alias("n"),
         F.avg("_dl").alias("avgdl"),

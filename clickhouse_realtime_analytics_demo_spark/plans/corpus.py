@@ -48,6 +48,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from clickhouse_realtime_analytics_demo_spark import catalog
 from clickhouse_realtime_analytics_demo_spark.plans import dialect
 
 # One day before the fixture generation window's end (sources/
@@ -518,7 +519,7 @@ def prepare_reference_env(
 
     write_fixture_parquet(spark, data_dir)
     for name in _BASE_TABLES:
-        spark.read.parquet(f"{data_dir}/{name}.parquet").createOrReplaceTempView(name)
+        catalog.read_parquet(spark, f"{data_dir}/{name}.parquet").createOrReplaceTempView(name)
     register_dictionaries(spark)
     for name, body in MV_VIEWS.items():
         spark.sql(dialect.rewrite(pin_clock(body, today))).createOrReplaceTempView(name)

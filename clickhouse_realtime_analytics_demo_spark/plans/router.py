@@ -27,6 +27,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from clickhouse_realtime_analytics_demo_spark import catalog
+
 
 @dataclass(frozen=True)
 class ProjectionCopy:
@@ -112,4 +114,4 @@ class ProjectionRouter:
             self.decisions.append((table_name, filter_cols, "<base>"))
             return base_df
         self.decisions.append((table_name, filter_cols, copy.name))
-        return spark.read.parquet(copy.path)
+        return catalog.read_parquet(spark, copy.path)

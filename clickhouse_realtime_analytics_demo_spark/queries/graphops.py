@@ -303,6 +303,8 @@ def dedup_minhash_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     pairs = dedup.minhash_dedup_pairs(docs, threshold=0.7)
     kept = graph.keep_one_per_cluster(docs, pairs)
+    # construction jobs: the summary row is built from two driver-side
+    # counts (plus the components' checkpoint/probe in graph.py)
     total = docs.count()
     survivors = kept.count()
     return spark.createDataFrame(

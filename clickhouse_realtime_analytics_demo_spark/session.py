@@ -150,6 +150,16 @@ def initial_shuffle_partitions(
     return max(floor, min(8192, math.ceil(data_bytes / INITIAL_PARTITION_TARGET_BYTES)))
 
 
+def default_driver_memory(host_bytes: int | None = None) -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: 60% of
+    physical memory, capped at the 48g the 128 GiB reference host ran
+    and floored at 1g. A fixed 48g overcommits small hosts: on a 15 GB
+    host two concurrent sessions can get a JVM killed."""
+    if host_bytes is None:
+        host_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, max(1, int(host_bytes * 0.6) // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "clickhouse-realtime-analytics-spark",
     cpus: int | str | None = None,
@@ -173,7 +183,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # FAIR job scheduling: a no-op until a thread opts into a named

@@ -64,15 +64,15 @@ def _write_schema(parquet_dir: Path, df: DataFrame) -> None:
 
 def _read_with_schema(spark: SparkSession, parquet_dir: Path) -> DataFrame:
     """Read a store parquet dir using its schema sidecar when present
-    (no inference job); fall back to inference for stores written
-    before the sidecar existed."""
+    (no inference job); stores written before the sidecar existed go
+    through the catalog's schema memo (one inference per process)."""
     sf = parquet_dir / "_schema.json"
     if sf.exists():
         from pyspark.sql.types import StructType
 
         schema = StructType.fromJson(json.loads(sf.read_text()))
         return spark.read.schema(schema).parquet(str(parquet_dir))
-    return spark.read.parquet(str(parquet_dir))
+    return catalog.read_parquet(spark, str(parquet_dir))
 
 
 def store_path(sf_dir: str, root: str | None = None) -> Path:

@@ -106,7 +106,8 @@ def replicate(spark, out_dir: str, k: int, only: tuple[str, ...] | None = None) 
     }
     letters = "abcdefghijklmnopqrstuvwxyz"
     digits = "0123456789"
-    seen_perms: set = set()
+    seen_letters: set = set()
+    seen_digits: set = set()
     todo = {n: c for n, c in REPLICATE.items() if only is None or n in only}
     for name, col_entities in todo.items():
         src = table(spark, BASE_SF, name)
@@ -140,19 +141,26 @@ def replicate(spark, out_dir: str, k: int, only: tuple[str, ...] | None = None) 
                 # the planted mega-cliques, reading as 80.7% recall.
                 # Full-alphabet permutations break every gram (not
                 # just a shifted window), and distinctness across
-                # copies is ASSERTED at build time instead of argued.
+                # copies is ASSERTED at build time instead of argued —
+                # per alphabet: a letter-only doc is fixed by the letter
+                # map alone, so an unseen (letters, digits) PAIR whose
+                # letter half repeats would still plant identical docs.
                 rng = _random.Random(0xC0FFEE + i)
                 lperm = list(letters)
                 rng.shuffle(lperm)
                 dperm = list(digits)
                 rng.shuffle(dperm)
-                key = ("".join(lperm), "".join(dperm))
-                assert key != (letters, digits) and key not in seen_perms, (
-                    f"copy {i}: cipher permutation collides; reseed"
+                lkey, dkey = "".join(lperm), "".join(dperm)
+                assert lkey != letters and lkey not in seen_letters, (
+                    f"copy {i}: letter permutation collides; reseed"
                 )
-                seen_perms.add(key)
+                assert dkey != digits and dkey not in seen_digits, (
+                    f"copy {i}: digit permutation collides; reseed"
+                )
+                seen_letters.add(lkey)
+                seen_digits.add(dkey)
                 src_chars = letters + letters.upper() + digits
-                dst_chars = key[0] + key[0].upper() + key[1]
+                dst_chars = lkey + lkey.upper() + dkey
                 df = df.withColumn("text", F.translate("text", src_chars, dst_chars))
             parts.append(df)
         out = parts[0]

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import math
 import sys
+import uuid
 from pathlib import Path
 
 import duckdb
@@ -41,6 +42,27 @@ def spark():
     s = get_spark(app_name="tests", cpus=8, shuffle_partitions=8)
     yield s
     s.stop()
+
+
+_JOB_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+
+def count_jobs(spark, fn, *args, **kwargs):
+    """Call ``fn(*args, **kwargs)`` under a fresh job group; return
+    ``(result, number of Spark jobs the call ran)``. The caller's job
+    group is restored, and the listener bus is drained first so a job
+    whose start event is still queued is counted."""
+    sc = spark.sparkContext
+    group = f"count_jobs_{uuid.uuid4().hex}"
+    prev = {k: sc.getLocalProperty(k) for k in _JOB_PROPS}
+    sc.setJobGroup(group, "job-count probe")
+    try:
+        out = fn(*args, **kwargs)
+    finally:
+        for k, v in prev.items():
+            sc.setLocalProperty(k, v)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group) or [])
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:

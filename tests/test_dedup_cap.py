@@ -4,6 +4,7 @@ candidate generation; small buckets are unaffected."""
 from __future__ import annotations
 
 from clickhouse_realtime_analytics_demo_spark.operators import dedup
+from tests.conftest import count_jobs
 
 
 def _docs(spark):
@@ -89,11 +90,10 @@ def test_lazy_checkpoint_knob(spark):
         [(i, f"the quick brown fox {i % 3} jumps over the lazy dog") for i in range(12)],
         "doc_id bigint, text string",
     )
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None) or [])
-    lazy = dedup.minhash_char_dedup_pairs(docs, threshold=0.5, eager=False)
-    after = len(tracker.getJobIdsForGroup(None) or [])
-    assert after == before, "constructing the lazy plan ran Spark jobs"
+    lazy, jobs = count_jobs(
+        spark, dedup.minhash_char_dedup_pairs, docs, threshold=0.5, eager=False
+    )
+    assert jobs == 0, "constructing the lazy plan ran Spark jobs"
     eager = dedup.minhash_char_dedup_pairs(docs, threshold=0.5)
     assert sorted(map(tuple, lazy.collect())) == sorted(map(tuple, eager.collect()))
 

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from clickhouse_realtime_analytics_demo_spark.operators import similarity
 from clickhouse_realtime_analytics_demo_spark.sources import quantized
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, count_jobs
 
 
 def test_store_schema_and_agreement_with_inline(spark, tmp_path):
@@ -140,15 +140,7 @@ def test_ivf_query_lookup_single_point_read(spark, tmp_path):
     assert (p / "id_index").is_dir()
 
     # the lookup is one job: assert via the SparkContext job counter
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    sc.setJobGroup("ivf_lookup_probe", "ivf_query_lookup job-count probe")
-    try:
-        qrow, qcell = quantized.ivf_query_lookup(spark, p, query_id=0)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = len(tracker.getJobIdsForGroup("ivf_lookup_probe") or [])
+    (qrow, qcell), jobs = count_jobs(spark, quantized.ivf_query_lookup, spark, p, query_id=0)
     assert jobs == 1, f"lookup ran {jobs} jobs, expected 1"
     assert qrow["qvec"] is not None and qrow["qscale"] is not None
     assert 0 <= qcell < 16

@@ -50,6 +50,19 @@ def test_initial_partition_env_override(monkeypatch):
     assert session_mod.initial_shuffle_partitions(32, 32) == 1024
 
 
+def test_default_driver_memory_from_host():
+    # 60% of physical memory, capped at 48g, floored at 1g: a 15 GiB
+    # host gets 9g instead of an overcommitted 48g
+    gib = 2**30
+    assert session_mod.default_driver_memory(15 * gib) == "9g"
+    assert session_mod.default_driver_memory(16 * gib) == "9g"
+    assert session_mod.default_driver_memory(128 * gib) == "48g"
+    assert session_mod.default_driver_memory(1 * gib) == "1g"
+    # no argument: derived from this process's host, inside the bounds
+    got = int(session_mod.default_driver_memory().rstrip("g"))
+    assert 1 <= got <= 48
+
+
 def test_session_sets_aqe_ceiling(spark):
     """The shared test session (get_spark cpus=8, shuffle=8) must carry
     the rule's conf: AQE on, coalescing on, ceiling = rule(8, 8)."""

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 from pathlib import Path
 
 from pyspark.sql import functions as F
@@ -100,13 +101,14 @@ def test_catalog_normalizes_events_ts_forms(spark, tmp_path):
             coerce_timestamps=None,
             store_schema=False,
         )
-        df = table(spark, str(d), "events")
-        assert dict(df.dtypes)["ts"] == "timestamp", unit
-        got = [r.ts for r in df.orderBy("event_id").select("ts").collect()]
-        assert got == rows, unit
-        # strict consumers work on the normalized column
-        micros = df.select(F.unix_micros("ts").alias("us")).orderBy("us").collect()
-        assert micros[1].us - micros[0].us == 1_000_000
+        for read in ("cold", "warm"):  # inferred, then memoized schema
+            df = table(spark, str(d), "events")
+            assert dict(df.dtypes)["ts"] == "timestamp", (unit, read)
+            got = [r.ts for r in df.orderBy("event_id").select("ts").collect()]
+            assert got == rows, (unit, read)
+            # strict consumers work on the normalized column
+            micros = df.select(F.unix_micros("ts").alias("us")).orderBy("us").collect()
+            assert micros[1].us - micros[0].us == 1_000_000
 
 
 def test_catalog_table_leaves_session_conf_unchanged(spark):
@@ -127,3 +129,83 @@ def test_catalog_table_leaves_session_conf_unchanged(spark):
         assert dict(spark.conf.getAll) == before
     finally:
         spark.conf.set(key, "true")
+
+
+def test_catalog_warm_table_runs_no_jobs(spark):
+    """The first read of a table infers its schema (one footer job);
+    every later read of the unchanged file reuses the memoized schema
+    and runs no Spark job before the caller's action."""
+    from clickhouse_realtime_analytics_demo_spark.catalog import TABLES, table
+    from tests.conftest import SF_DIR, count_jobs
+
+    for name in TABLES:
+        table(spark, SF_DIR, name)
+    warm = {name: count_jobs(spark, table, spark, SF_DIR, name)[1] for name in TABLES}
+    assert warm == dict.fromkeys(TABLES, 0)
+
+
+def test_catalog_memoized_schema_matches_inference(spark):
+    from clickhouse_realtime_analytics_demo_spark import catalog
+    from tests.conftest import SF_DIR
+
+    for name in catalog.TABLES:
+        path = f"{SF_DIR}/{name}.parquet"
+        catalog.table(spark, SF_DIR, name)
+        memo = catalog._schemas[os.path.abspath(path)][1]
+        assert memo == spark.read.parquet(path).schema, name
+        # the non-events tables are returned exactly as read
+        if name != "events":
+            assert catalog.table(spark, SF_DIR, name).schema == memo, name
+
+
+def test_catalog_sees_rewritten_table(spark, tmp_path):
+    """The memo is keyed on the file's stat fingerprint: a table file
+    rewritten in place (here with an extra column) is re-inferred on
+    the next read — for a single-file table and for a directory
+    table's data file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from clickhouse_realtime_analytics_demo_spark.catalog import table
+
+    def write(path, extra):
+        cols = {"n_nationkey": pa.array([0, 1], pa.int64()), "n_name": ["A", "B"]}
+        if extra:
+            cols["n_extra"] = pa.array([7, 8], pa.int64())
+        pq.write_table(pa.table(cols), str(path))
+
+    single = tmp_path / "single"
+    single.mkdir()
+    multi = tmp_path / "multi" / "nation.parquet"
+    multi.mkdir(parents=True)
+    for sf_dir, target in ((single, single / "nation.parquet"), (multi.parent, multi / "part-0.parquet")):
+        write(target, extra=False)
+        assert table(spark, str(sf_dir), "nation").columns == ["n_nationkey", "n_name"]
+        table(spark, str(sf_dir), "nation")  # warm: served from the memo
+        write(target, extra=True)
+        df = table(spark, str(sf_dir), "nation")
+        assert df.columns == ["n_nationkey", "n_name", "n_extra"], sf_dir
+        assert sorted(r.n_extra for r in df.collect()) == [7, 8]
+
+
+def test_catalog_self_join_keeps_distinct_attributes(spark):
+    """Only the schema is memoized, never the DataFrame: two reads of
+    one table carry distinct attribute ids, so a self-join matches row
+    to row (25 on the key) instead of collapsing to a cross product.
+    The counts alone cannot tell: Spark re-resolves a trivially-true
+    ``df.k == df.k`` self-join condition side by side, so the attribute
+    ids are compared directly."""
+    from clickhouse_realtime_analytics_demo_spark.catalog import table
+    from tests.conftest import SF_DIR
+
+    def attrs(df):
+        return df._jdf.queryExecution().analyzed().output().toString()
+
+    for name in ("nation", "events"):
+        table(spark, SF_DIR, name)
+        assert attrs(table(spark, SF_DIR, name)) != attrs(table(spark, SF_DIR, name)), name
+    a = table(spark, SF_DIR, "nation")
+    b = table(spark, SF_DIR, "nation")
+    assert a.join(b, a.n_nationkey == b.n_nationkey).count() == 25
+    # each region key matches the five nations of that region
+    assert a.join(b, a.n_nationkey == b.n_regionkey).count() == 25
