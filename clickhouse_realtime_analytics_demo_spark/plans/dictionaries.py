@@ -353,11 +353,9 @@ def register_dictionaries(spark: SparkSession, names: tuple[str, ...] | None = N
         # table-backed: requires the source view to be registered
         # (spec.source_table is declared, never parsed out of the SQL —
         # joins/subqueries/aliases in source_sql stay legal)
-        src_table = spec.source_table
-        # construction jobs: listTables() runs one Spark job plus one per
-        # DataFrame-backed temp view (Spark 4.1), per dictionary — ~28 of
-        # a dict_* query's 30-32 jobs before its action
-        if not any(t.name == src_table for t in spark.catalog.listTables()):
+        # tableExists runs no Spark job; listTables() runs one plus one
+        # per DataFrame-backed temp view (Spark 4.1), per dictionary
+        if not spark.catalog.tableExists(spec.source_table):
             continue
         spark.sql(f"CREATE OR REPLACE TEMP VIEW {name} AS {spec.source_sql}")
         if spec.layout == "hashed":

@@ -31,14 +31,7 @@ from pyspark.sql import types as T
 
 from clickhouse_realtime_analytics_demo_spark.sources import schemas, writer
 
-__all__ = ["INGEST_TABLES", "parse_json_rows", "insert_json_rows"]
-
-INGEST_TABLES = {
-    "users": schemas.USERS,
-    "products": schemas.PRODUCTS,
-    "events": schemas.EVENTS,
-    "orders": schemas.ORDERS,
-}
+__all__ = ["parse_json_rows", "insert_json_rows"]
 
 def _derived(table: str) -> dict[str, F.Column]:
     """MATERIALIZED / DEFAULT derivations applied where the parsed
@@ -65,9 +58,9 @@ def parse_json_rows(spark: SparkSession, table: str, ndjson: str) -> DataFrame:
     Raises :class:`BadRows` on unparseable lines or NULLs in required
     columns (after DEFAULT/MATERIALIZED derivation).
     """
-    schema = INGEST_TABLES.get(table)
+    schema = schemas.LAKE_TABLES.get(table)
     if schema is None:
-        raise BadRows(f"unknown table {table!r}; ingestable: {sorted(INGEST_TABLES)}")
+        raise BadRows(f"unknown table {table!r}; ingestable: {sorted(schemas.LAKE_TABLES)}")
     lines = [ln for ln in (s.strip() for s in ndjson.splitlines()) if ln]
     if not lines:
         raise BadRows("empty insert: no JSON rows")

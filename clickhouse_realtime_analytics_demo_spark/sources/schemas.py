@@ -73,6 +73,15 @@ ORDERS = T.StructType(
     ]
 )
 
+# The lake's tables by name: what HTTP ingest accepts and the schema
+# the lake writer/reader applies to each.
+LAKE_TABLES = {
+    "users": USERS,
+    "products": PRODUCTS,
+    "events": EVENTS,
+    "orders": ORDERS,
+}
+
 # Reference sort keys (01-create-tables.sql ORDER BY) — our writer
 # sorts within partitions by these so parquet row-group min/max stats
 # give the same granule-skipping effect as the sparse primary index.

@@ -29,14 +29,6 @@ from clickhouse_realtime_analytics_demo_spark.sources.schemas import (
     SORT_KEYS,
 )
 
-# known lake-table schemas, keyed like write_table's ``name``
-_KNOWN_SCHEMAS = {
-    "events": schemas.EVENTS,
-    "orders": schemas.ORDERS,
-    "users": schemas.USERS,
-    "products": schemas.PRODUCTS,
-}
-
 
 def yyyymm(col_name: str) -> F.Column:
     return (F.year(col_name) * 100 + F.month(col_name)).cast("int")
@@ -101,7 +93,7 @@ def read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
     any in-flight reader resolved stays on disk until its grace
     expires — no reader error, by construction."""
     reader = spark.read
-    schema = _KNOWN_SCHEMAS.get(name)
+    schema = schemas.LAKE_TABLES.get(name)
     if schema is not None:
         reader = reader.schema(schema)
     table_path = f"{path}/{name}"

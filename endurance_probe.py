@@ -285,28 +285,12 @@ def endurance_run(
     return report
 
 
-def _splice_section(text: str, marker: str) -> tuple[str, str]:
-    idx = text.find(marker)
-    if idx == -1:
-        return text, ""
-    rest = text[idx + 1:]
-    nxt = rest.find("\n## ")
-    tail = "" if nxt == -1 else rest[nxt:]
-    return text[:idx], tail
-
-
-def write_section(report: dict) -> None:
-    md = Path("MIXEDLOAD.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## Endurance: one simulated week of the full stack"
-    text, tail = _splice_section(text, marker)
+def endurance_section(report: dict) -> tuple[str, list[str]]:
     p = report["params"]
     final = report["final"]
     days = report["days"]
     last = days[-1]
     lines = [
-        marker.strip(),
-        "",
         f"`endurance_probe.py` (r15, VERDICT r14 #6): `service.start_stack` "
         f"(producer {p['days']}×{p['day_wall_s']}s-day week, 5 MVs on two "
         f"shared streams, Compactors, TTLService with the checkpoint parity "
@@ -344,13 +328,14 @@ def write_section(report: dict) -> None:
         f"({final['events_ingested']} events + {final['orders_ingested']} "
         f"orders ingested; TTL errors 0).",
     ]
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail)
+    return "## Endurance: one simulated week of the full stack", lines
 
 
 def main() -> None:
     import tempfile
 
     from clickhouse_realtime_analytics_demo_spark.session import get_spark
+    from scale_probe import write_section
 
     spark = get_spark(app_name="endurance_probe")
     lake = tempfile.mkdtemp(prefix="endurance_")
@@ -359,7 +344,7 @@ def main() -> None:
             spark, lake, sf_dir="/root/testdata/sf0.001",
             days=8, day_wall_s=25.0,
         )
-        write_section(report)
+        write_section("MIXEDLOAD.md", *endurance_section(report))
     finally:
         import shutil
 

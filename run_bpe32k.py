@@ -16,7 +16,7 @@ REPO = str(Path(__file__).resolve().parent)
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
-from scale_probe import bpe_big_probe, write_bpe_big_section  # noqa: E402
+from scale_probe import SCALEPROBE, bpe_big_probe, bpe_big_section, write_section  # noqa: E402
 
 from clickhouse_realtime_analytics_demo_spark.session import get_spark  # noqa: E402
 
@@ -43,7 +43,7 @@ def main() -> None:
     rows = bpe_big_probe(spark, merge_counts=(32768,))
     spark.stop()
     all_rows = R12_ROWS + rows
-    write_bpe_big_section(all_rows)
+    write_section(SCALEPROBE, *bpe_big_section(all_rows))
     Path("bpe32k_result.json").write_text(json.dumps(rows[0], indent=1))
     print(json.dumps({"done": True, "row": rows[0]}), flush=True)
 

@@ -7,8 +7,10 @@ at each K. Near-linear wall-clock growth = the plans have no
 super-linear term (quadratic self-join, single-task sort) hiding at
 bench scale — the measurable proxy for the 100 TB stance.
 
-Usage: python scale_probe.py [K ...]   (default 1 4 10)
-Prints one JSON line per K and writes SCALEPROBE.md.
+Usage: python scale_probe.py [K ...]          (default 1 4 10)
+       python scale_probe.py <mode> [args]    (modes: the MODES table)
+The K form prints one JSON line per K and writes SCALEPROBE.md's title
+table; a mode runs one probe and writes its own SCALEPROBE.md section.
 
 Noise handling (VERDICT r4 #5): this box's same-plan wall-clock for a
 fixed query varies up to ~18x between consecutive runs (measured:
@@ -25,11 +27,15 @@ from __future__ import annotations
 import json
 import os
 import random as _random
+import re
 import shutil
 import sys
 import tempfile
 import time
+from contextlib import contextmanager
+from dataclasses import dataclass
 from pathlib import Path
+from typing import Callable
 
 REPO = str(Path(__file__).resolve().parent)
 if REPO not in sys.path:
@@ -186,8 +192,6 @@ _JOIN_NODES = ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin")
 def _join_mix(df) -> str:
     """Compact join-strategy signature of the executed adaptive plan,
     e.g. 'BHJx4' or 'BHJx2+SMJx2' — enough to spot an AQE flip."""
-    import re
-
     plan = df._jdf.queryExecution().executedPlan().toString()
     counts = {n: len(re.findall(n, plan)) for n in _JOIN_NODES}
     sig = "+".join(
@@ -198,18 +202,70 @@ def _join_mix(df) -> str:
     return sig or "none"
 
 
-def _splice_section(text: str, marker: str) -> tuple[str, str]:
-    """(before, after) around this writer's OWN section: ``before``
-    ends where the section starts (or at EOF if absent), ``after`` is
-    everything from the NEXT "## " heading on — so re-running one
-    probe mode never discards the sections other modes wrote (a cc
-    re-run once chopped every section after it)."""
-    if marker not in text:
-        return text.rstrip(), ""
-    start = text.index(marker)
-    nxt = text.find("\n## ", start + len(marker))
-    after = text[nxt:] if nxt != -1 else ""
-    return text[:start].rstrip(), after
+SCALEPROBE = Path("SCALEPROBE.md")
+
+
+def write_section(md_path: str | Path, heading: str, lines: list[str]) -> None:
+    """Write ``heading`` + ``lines`` as ONE section of the markdown file
+    at ``md_path`` and leave every other section byte-identical — so
+    re-running one probe mode never discards the sections other modes
+    wrote (a cc re-run once chopped every section after it). One blank
+    line follows the heading. A ``## `` section replaces the one under
+    the same heading line, up to the next ``## `` heading, or is
+    appended; the ``# `` title section owns everything before the first
+    ``## `` heading."""
+    md = Path(md_path)
+    text = md.read_text() if md.exists() else ""
+    section = "\n".join([heading, "", *lines]) + "\n"
+    if heading.startswith("# "):
+        nxt = text.find("\n## ")
+        md.write_text(section + (text[nxt:] if nxt != -1 else ""))
+        return
+    head, tail = text, ""
+    own = re.search(rf"^{re.escape(heading)}$", text, re.MULTILINE)
+    if own:
+        nxt = text.find("\n## ", own.end())
+        head, tail = text[: own.start()], (text[nxt:] if nxt != -1 else "")
+    md.write_text(head.rstrip() + "\n\n" + section + tail)
+
+
+class Best:
+    """Best-of-N wall clock, the probes' noise estimator (see the
+    module docstring): ``with best:`` times one repetition — setup and
+    checks outside the block stay untimed — and ``best.s`` keeps the
+    fastest; ``Best.of(n, fn)`` is the whole loop for a bare callable."""
+
+    def __init__(self) -> None:
+        self.s = float("inf")
+
+    def __enter__(self) -> Best:
+        self._t0 = time.perf_counter()
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.s = min(self.s, time.perf_counter() - self._t0)
+
+    @classmethod
+    def of(cls, n: int, fn) -> float:
+        best = cls()
+        for _ in range(n):
+            with best:
+                fn()
+        return best.s
+
+
+@contextmanager
+def scratch_dir(prefix: str, spark=None, k: int = 1, only: tuple[str, ...] | None = None):
+    """A temp dir, removed on exit (also when the probe fails); given
+    ``spark`` it first holds the sf0.1 lake grown ``k``× by
+    ``replicate`` (``only`` as there)."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    try:
+        if spark is not None:
+            replicate(spark, d, k, only=only)
+        yield d
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 
@@ -233,66 +289,56 @@ def mv_probe(spark, part_counts=(8, 32, 64, 128, 256, 512), rows_per_batch=200) 
     so part counts 8..512 span ~16 s .. ~17 min of uncompacted live
     ingest. The derived cadence policy lives in mv.maybe_compact's docstring.
     """
-    import shutil as _sh
-    import tempfile as _tf
-
     from clickhouse_realtime_analytics_demo_spark.sources import generator
     from clickhouse_realtime_analytics_demo_spark.streaming import mv
 
     spec = mv.mv_specs()["daily_user_activity"]
-    root = _tf.mkdtemp(prefix="mvprobe_")
-    mv_path = f"{root}/mv"
     out = []
     written = 0
-    for target in part_counts:
-        while written < target:
-            batch = generator.events(
-                spark, n=rows_per_batch, n_users=500, seed=3000 + written,
-                partitions=1, id_offset=written * rows_per_batch,
+    with scratch_dir("mvprobe_") as root:
+        mv_path = f"{root}/mv"
+        for target in part_counts:
+            while written < target:
+                batch = generator.events(
+                    spark, n=rows_per_batch, n_users=500, seed=3000 + written,
+                    partitions=1, id_offset=written * rows_per_batch,
+                )
+                mv.write_batch(batch, spec, mv_path, written)
+                written += 1
+            # append cost at this part count (the next batch), best-of-3
+            t_append = Best()
+            for r in range(3):
+                batch = generator.events(
+                    spark, n=rows_per_batch, n_users=500, seed=9000 + written,
+                    partitions=1, id_offset=written * rows_per_batch,
+                )
+                with t_append:
+                    mv.write_batch(batch, spec, mv_path, written)
+                written += 1
+            # read_final at this part count, best-of-3
+            t_read = Best.of(
+                3,
+                lambda: mv.read_final(spark, mv_path, spec).agg(F.sum("total_events")).collect(),
             )
-            mv.write_batch(batch, spec, mv_path, written)
-            written += 1
-        # append cost at this part count (the next batch), best-of-3
-        t_append = float("inf")
-        for r in range(3):
-            batch = generator.events(
-                spark, n=rows_per_batch, n_users=500, seed=9000 + written,
-                partitions=1, id_offset=written * rows_per_batch,
+            # compact a copy; measure fold cost and the post-compact read
+            cp = f"{root}/cp{written}"
+            shutil.copytree(mv_path, cp)
+            t0 = time.perf_counter()
+            mv.compact(spark, cp, spec)
+            t_compact = time.perf_counter() - t0
+            t_read_after = Best.of(
+                3, lambda: mv.read_final(spark, cp, spec).agg(F.sum("total_events")).collect()
             )
-            t0 = time.perf_counter()
-            mv.write_batch(batch, spec, mv_path, written)
-            t_append = min(t_append, time.perf_counter() - t0)
-            written += 1
-        # read_final at this part count, best-of-3
-        t_read = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            mv.read_final(spark, mv_path, spec).agg(
-                F.sum("total_events")
-            ).collect()
-            t_read = min(t_read, time.perf_counter() - t0)
-        # compact a copy; measure fold cost and the post-compact read
-        cp = f"{root}/cp{written}"
-        _sh.copytree(mv_path, cp)
-        t0 = time.perf_counter()
-        mv.compact(spark, cp, spec)
-        t_compact = time.perf_counter() - t0
-        t_read_after = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            mv.read_final(spark, cp, spec).agg(F.sum("total_events")).collect()
-            t_read_after = min(t_read_after, time.perf_counter() - t0)
-        _sh.rmtree(cp, ignore_errors=True)
-        row = {
-            "parts": written,
-            "append_ms": round(t_append * 1000, 1),
-            "read_final_ms": round(t_read * 1000, 1),
-            "compact_s": round(t_compact, 2),
-            "read_after_compact_ms": round(t_read_after * 1000, 1),
-        }
-        out.append(row)
-        print(json.dumps({"mv_probe": row}), flush=True)
-    _sh.rmtree(root, ignore_errors=True)
+            shutil.rmtree(cp, ignore_errors=True)
+            row = {
+                "parts": written,
+                "append_ms": round(t_append.s * 1000, 1),
+                "read_final_ms": round(t_read * 1000, 1),
+                "compact_s": round(t_compact, 2),
+                "read_after_compact_ms": round(t_read_after * 1000, 1),
+            }
+            out.append(row)
+            print(json.dumps({"mv_probe": row}), flush=True)
     return out
 
 
@@ -326,65 +372,59 @@ def funnel_state_probe(
     rows): state stops growing with input exactly when the bound
     predicts, while the high arm keeps ~1 key/row.
     """
-    import shutil as _sh
-    import tempfile as _tf
-
     from clickhouse_realtime_analytics_demo_spark.sources import generator
     from clickhouse_realtime_analytics_demo_spark.streaming import mv
 
     spec = mv.mv_specs()["mv_user_funnel"]
     out = []
     for n_users in user_counts:
-        root = _tf.mkdtemp(prefix=f"funnelstate_{n_users}_")
-        path = f"{root}/mv"
-        written = 0
-        for _ in range(batches):
-            batch = generator.events(
-                spark, n=rows_per_batch, n_users=n_users, seed=7000 + written,
-                partitions=1, id_offset=written * rows_per_batch,
-            )
-            mv.write_batch(batch, spec, path, written)
-            written += 1
-        t_append = float("inf")
-        for _ in range(3):
-            batch = generator.events(
-                spark, n=rows_per_batch, n_users=n_users, seed=7000 + written,
-                partitions=1, id_offset=written * rows_per_batch,
+        with scratch_dir(f"funnelstate_{n_users}_") as root:
+            path = f"{root}/mv"
+            written = 0
+            for _ in range(batches):
+                batch = generator.events(
+                    spark, n=rows_per_batch, n_users=n_users, seed=7000 + written,
+                    partitions=1, id_offset=written * rows_per_batch,
+                )
+                mv.write_batch(batch, spec, path, written)
+                written += 1
+            t_append = Best()
+            for _ in range(3):
+                batch = generator.events(
+                    spark, n=rows_per_batch, n_users=n_users, seed=7000 + written,
+                    partitions=1, id_offset=written * rows_per_batch,
+                )
+                with t_append:
+                    mv.write_batch(batch, spec, path, written)
+                written += 1
+            partials = mv._read_partials(spark, path, spec)
+            live_rows = partials.count()
+            state_keys = partials.select(*spec.keys).distinct().count()
+            t_read = Best.of(
+                3, lambda: mv.read_final(spark, path, spec).agg(F.sum("total_events")).collect()
             )
             t0 = time.perf_counter()
-            mv.write_batch(batch, spec, path, written)
-            t_append = min(t_append, time.perf_counter() - t0)
-            written += 1
-        partials = mv._read_partials(spark, path, spec)
-        live_rows = partials.count()
-        state_keys = partials.select(*spec.keys).distinct().count()
-        t_read = float("inf")
-        for _ in range(3):
+            mv.compact(spark, path, spec)
+            t_compact = time.perf_counter() - t0
+            rows_folded = mv._read_partials(spark, path, spec).count()
+            # TTL fold: retain only the trailing retain_days of the
+            # 90-day generated window
+            cutoff = (
+                mv._read_partials(spark, path, spec)
+                .select(F.date_sub(F.max("event_date"), retain_days - 1).alias("c"))
+                .collect()[0]["c"]
+            )
             t0 = time.perf_counter()
-            mv.read_final(spark, path, spec).agg(F.sum("total_events")).collect()
-            t_read = min(t_read, time.perf_counter() - t0)
-        t0 = time.perf_counter()
-        mv.compact(spark, path, spec)
-        t_compact = time.perf_counter() - t0
-        rows_folded = mv._read_partials(spark, path, spec).count()
-        # TTL fold: retain only the trailing retain_days of the
-        # 90-day generated window
-        cutoff = (
-            mv._read_partials(spark, path, spec)
-            .select(F.date_sub(F.max("event_date"), retain_days - 1).alias("c"))
-            .collect()[0]["c"]
-        )
-        t0 = time.perf_counter()
-        mv.compact(spark, path, spec, retain_where=F.col("event_date") >= F.lit(cutoff))
-        t_ttl = time.perf_counter() - t0
-        rows_retained = mv._read_partials(spark, path, spec).count()
+            mv.compact(spark, path, spec, retain_where=F.col("event_date") >= F.lit(cutoff))
+            t_ttl = time.perf_counter() - t0
+            rows_retained = mv._read_partials(spark, path, spec).count()
         row = {
             "users": n_users,
             "keyspace": n_users * 90,
             "input_rows": written * rows_per_batch,
             "state_rows": live_rows,
             "state_keys": state_keys,
-            "append_ms": round(t_append * 1000, 1),
+            "append_ms": round(t_append.s * 1000, 1),
             "read_final_ms": round(t_read * 1000, 1),
             "compact_s": round(t_compact, 2),
             "rows_folded": rows_folded,
@@ -393,7 +433,6 @@ def funnel_state_probe(
         }
         out.append(row)
         print(json.dumps({"funnel_state_probe": row}), flush=True)
-        _sh.rmtree(root, ignore_errors=True)
     return out
 
 
@@ -418,27 +457,56 @@ def corpusprep_probe(
     registry = all_queries()
     out = []
     for k in sorted(set(ks_exact) | set(ks_lsh)):
-        d = tempfile.mkdtemp(prefix=f"cpp_k{k}_")
-        replicate(spark, d, k, only=("documents",))
         row: dict = {"k": k}
-        for name, ks in (
-            ("corpus_prep_pipeline", ks_exact),
-            ("corpus_prep_pipeline_lsh", ks_lsh),
-        ):
-            if k not in ks:
-                continue
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                registry[name].fn(spark, d).collect()
-                best = min(best, time.perf_counter() - t0)
-            row["exact_s" if name == "corpus_prep_pipeline" else "lsh_s"] = round(
-                best, 2
-            )
+        with scratch_dir(f"cpp_k{k}_", spark, k, only=("documents",)) as d:
+            for name, ks in (
+                ("corpus_prep_pipeline", ks_exact),
+                ("corpus_prep_pipeline_lsh", ks_lsh),
+            ):
+                if k not in ks:
+                    continue
+                best = Best.of(2, lambda: registry[name].fn(spark, d).collect())
+                row["exact_s" if name == "corpus_prep_pipeline" else "lsh_s"] = round(
+                    best, 2
+                )
         out.append(row)
         print(json.dumps({"corpusprep_probe": row}), flush=True)
-        shutil.rmtree(d, ignore_errors=True)
     return out
+
+
+def _lsh_sigs(blocked, n_parts: int):
+    """The corpus-prep LSH stage over filtered, blocked documents spread
+    on ``n_parts`` keyed partitions: checkpointed char-3-gram shingle
+    sets and their MinHash(32) signatures."""
+    from clickhouse_realtime_analytics_demo_spark.operators import dedup as _dedup
+
+    sh = _dedup.char_ngram_sets(
+        blocked.repartition(n_parts, "doc_id"), "text", "doc_id", 3, keep=("blk",)
+    ).localCheckpoint()
+    sigs = _dedup.minhash_signatures_from_sets(
+        sh, 32, keep=("blk",), materialized=True
+    ).localCheckpoint()
+    return sh, sigs
+
+
+def _true_pairs(cands, sh, n_parts: int) -> int:
+    """TRUE (exact Jaccard ≥ 0.6) pairs among candidate pairs ``cands``,
+    verified against the shingle sets ``sh``."""
+    from clickhouse_realtime_analytics_demo_spark.operators import dedup as _dedup
+
+    sh_sets = sh.select("id", "sh")
+    attached = (
+        cands.join(
+            sh_sets.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sa"),
+            "id_a",
+        )
+        .join(
+            sh_sets.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sb"),
+            "id_b",
+        )
+        .repartition(n_parts)
+    )
+    return attached.filter(_dedup.jaccard(F.col("sa"), F.col("sb")) >= 0.6).count()
 
 
 def corpusprep40_probe(spark, k: int = 40) -> dict:
@@ -459,90 +527,64 @@ def corpusprep40_probe(spark, k: int = 40) -> dict:
     )
 
     registry = all_queries()
-    d = tempfile.mkdtemp(prefix=f"cpp40_k{k}_")
-    replicate(spark, d, k, only=("documents",))
-    out: dict = {"k": k}
+    with scratch_dir(f"cpp40_k{k}_", spark, k, only=("documents",)) as d:
+        out: dict = {"k": k}
 
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.perf_counter()
-        registry["corpus_prep_pipeline_lsh"].fn(spark, d).collect()
-        best = min(best, time.perf_counter() - t0)
-    out["lsh_s"] = round(best, 2)
+        best = Best.of(2, lambda: registry["corpus_prep_pipeline_lsh"].fn(spark, d).collect())
+        out["lsh_s"] = round(best, 2)
 
-    # ---- bucket occupancy at 40×: the pipeline's exact LSH stage
-    # (16 bands over char-3-gram MinHash(32), block-confined buckets)
-    _, blocked = _prep_filtered(spark, d)
-    out["docs"] = blocked.count()
-    sh = _dedup.char_ngram_sets(
-        blocked.repartition(64, "doc_id"), "text", "doc_id", 3, keep=("blk",)
-    ).localCheckpoint()
-    sigs = _dedup.minhash_signatures_from_sets(
-        sh, 32, keep=("blk",), materialized=True
-    ).localCheckpoint()
-    rows_per_band = 32 // 16
-    from clickhouse_realtime_analytics_demo_spark.operators.dedup import band_hash_expr
+        # ---- bucket occupancy at 40×: the pipeline's exact LSH stage
+        # (16 bands over char-3-gram MinHash(32), block-confined buckets)
+        _, blocked = _prep_filtered(spark, d)
+        out["docs"] = blocked.count()
+        sh, sigs = _lsh_sigs(blocked, 64)
+        rows_per_band = 32 // 16
+        from clickhouse_realtime_analytics_demo_spark.operators.dedup import band_hash_expr
 
-    band_structs = [
-        F.struct(F.lit(b).alias("band"), band_hash_expr(b, rows_per_band).alias("band_hash"))
-        for b in range(16)
-    ]
-    bucketed = sigs.select(
-        "id", "blk", F.explode_outer(F.array(*band_structs)).alias("bucket")
-    ).select("id", "blk", "bucket.band", "bucket.band_hash")
-    sizes = bucketed.groupBy("band", "band_hash", "blk").agg(F.count("*").alias("n"))
-    hist = (
-        sizes.select(
-            F.when(F.col("n") == 1, "1")
-            .when(F.col("n") <= 4, "2-4")
-            .when(F.col("n") <= 16, "5-16")
-            .when(F.col("n") <= 64, "17-64")
-            .otherwise(">64")
-            .alias("bin"),
-            "n",
+        band_structs = [
+            F.struct(F.lit(b).alias("band"), band_hash_expr(b, rows_per_band).alias("band_hash"))
+            for b in range(16)
+        ]
+        bucketed = sigs.select(
+            "id", "blk", F.explode_outer(F.array(*band_structs)).alias("bucket")
+        ).select("id", "blk", "bucket.band", "bucket.band_hash")
+        sizes = bucketed.groupBy("band", "band_hash", "blk").agg(F.count("*").alias("n"))
+        hist = (
+            sizes.select(
+                F.when(F.col("n") == 1, "1")
+                .when(F.col("n") <= 4, "2-4")
+                .when(F.col("n") <= 16, "5-16")
+                .when(F.col("n") <= 64, "17-64")
+                .otherwise(">64")
+                .alias("bin"),
+                "n",
+            )
+            .groupBy("bin")
+            .agg(F.count("*").alias("buckets"), F.sum("n").alias("entries"))
+            .collect()
         )
-        .groupBy("bin")
-        .agg(F.count("*").alias("buckets"), F.sum("n").alias("entries"))
-        .collect()
-    )
-    out["bucket_hist"] = {
-        r["bin"]: {"buckets": int(r["buckets"]), "entries": int(r["entries"])} for r in hist
-    }
-    total_entries = sum(v["entries"] for v in out["bucket_hist"].values())
-    over = out["bucket_hist"].get(">64", {"entries": 0})["entries"]
-    out["entries_over_cap_pct"] = round(100.0 * over / total_entries, 3) if total_entries else 0.0
+        out["bucket_hist"] = {
+            r["bin"]: {"buckets": int(r["buckets"]), "entries": int(r["entries"])} for r in hist
+        }
+        total_entries = sum(v["entries"] for v in out["bucket_hist"].values())
+        over = out["bucket_hist"].get(">64", {"entries": 0})["entries"]
+        out["entries_over_cap_pct"] = round(100.0 * over / total_entries, 3) if total_entries else 0.0
 
-    # ---- measured valve recall: verify exactly the DROPPED pairs
-    capped = _dedup.lsh_candidates_from_sigs(sigs, 32, 16, 64, "blk").localCheckpoint()
-    uncapped = _dedup.lsh_candidates_from_sigs(sigs, 32, 16, None, "blk").localCheckpoint()
-    out["cand_pairs_capped"] = capped.count()
-    out["cand_pairs_uncapped"] = uncapped.count()
-    dropped = uncapped.join(capped, ["id_a", "id_b"], "left_anti").localCheckpoint()
-    out["cand_pairs_dropped"] = dropped.count()
-    sh_sets = sh.select(F.col("id"), F.col("sh"))
-    attached = (
-        dropped.join(sh_sets.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sa"), "id_a")
-        .join(sh_sets.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sb"), "id_b")
-        .repartition(64)
-    )
-    out["true_pairs_dropped"] = attached.filter(
-        _dedup.jaccard(F.col("sa"), F.col("sb")) >= 0.6
-    ).count()
-    # denominator for the recall statement: true pairs the capped run finds
-    cap_attached = (
-        capped.join(sh_sets.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sa"), "id_a")
-        .join(sh_sets.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sb"), "id_b")
-        .repartition(64)
-    )
-    out["true_pairs_capped"] = cap_attached.filter(
-        _dedup.jaccard(F.col("sa"), F.col("sb")) >= 0.6
-    ).count()
-    tot_true = out["true_pairs_capped"] + out["true_pairs_dropped"]
-    out["valve_recall_pct"] = (
-        round(100.0 * out["true_pairs_capped"] / tot_true, 3) if tot_true else 100.0
-    )
-    print(json.dumps({"corpusprep40_probe": out}), flush=True)
-    shutil.rmtree(d, ignore_errors=True)
+        # ---- measured valve recall: verify exactly the DROPPED pairs
+        capped = _dedup.lsh_candidates_from_sigs(sigs, 32, 16, 64, "blk").localCheckpoint()
+        uncapped = _dedup.lsh_candidates_from_sigs(sigs, 32, 16, None, "blk").localCheckpoint()
+        out["cand_pairs_capped"] = capped.count()
+        out["cand_pairs_uncapped"] = uncapped.count()
+        dropped = uncapped.join(capped, ["id_a", "id_b"], "left_anti").localCheckpoint()
+        out["cand_pairs_dropped"] = dropped.count()
+        out["true_pairs_dropped"] = _true_pairs(dropped, sh, 64)
+        # denominator for the recall statement: true pairs the capped run finds
+        out["true_pairs_capped"] = _true_pairs(capped, sh, 64)
+        tot_true = out["true_pairs_capped"] + out["true_pairs_dropped"]
+        out["valve_recall_pct"] = (
+            round(100.0 * out["true_pairs_capped"] / tot_true, 3) if tot_true else 100.0
+        )
+        print(json.dumps({"corpusprep40_probe": out}), flush=True)
     return out
 
 
@@ -558,83 +600,48 @@ def lshsplit_probe(spark, k: int = 40) -> dict:
         _prep_filtered,
     )
 
-    d = tempfile.mkdtemp(prefix=f"lshsplit_k{k}_")
-    replicate(spark, d, k, only=("documents",))
-    out: dict = {"k": k}
-    _, blocked = _prep_filtered(spark, d)
-    out["docs"] = blocked.count()
-    sh = _dedup.char_ngram_sets(
-        blocked.repartition(160, "doc_id"), "text", "doc_id", 3, keep=("blk",)
-    ).localCheckpoint()
-    sigs = _dedup.minhash_signatures_from_sets(
-        sh, 32, keep=("blk",), materialized=True
-    ).localCheckpoint()
-    sh_sets = sh.select("id", "sh")
-
-    def _true(cands):
-        attached = (
-            cands.join(
-                sh_sets.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sa"),
-                "id_a",
+    with scratch_dir(f"lshsplit_k{k}_", spark, k, only=("documents",)) as d:
+        out: dict = {"k": k}
+        _, blocked = _prep_filtered(spark, d)
+        out["docs"] = blocked.count()
+        sh, sigs = _lsh_sigs(blocked, 160)
+        variants = {
+            "capped": dict(max_bucket_size=64, split_depth=0),
+            "split1": dict(max_bucket_size=64, split_depth=1),
+            "split2": dict(max_bucket_size=64, split_depth=2),
+            # r11: the adaptive default — the histogram decides the depth
+            "adaptive": dict(max_bucket_size=64, split_depth=None),
+            "uncapped": dict(max_bucket_size=None, split_depth=0),
+        }
+        for name, kw in variants.items():
+            t0 = time.perf_counter()
+            cands = _dedup.lsh_candidates_from_sigs(sigs, 32, 16, block_col="blk", **kw)
+            cands = cands.localCheckpoint()
+            n = cands.count()
+            gen_s = round(time.perf_counter() - t0, 2)
+            out[name] = {"cand_pairs": n, "gen_s": gen_s, "true_pairs": _true_pairs(cands, sh, 160)}
+            if name == "adaptive":
+                out[name]["decision"] = dict(_dedup.last_adaptive)
+            print(json.dumps({"lshsplit_variant": {name: out[name]}}), flush=True)
+        # the other half of the adaptive claim: at 1× (sf0.1 itself) the
+        # over-cap share is tiny and the default must stay at depth 0
+        _, sigs1 = _lsh_sigs(_prep_filtered(spark, BASE_SF)[1], 32)
+        _dedup.lsh_candidates_from_sigs(
+            sigs1, 32, 16, max_bucket_size=64, block_col="blk", split_depth=None
+        ).count()
+        out["adaptive_1x"] = dict(_dedup.last_adaptive)
+        print(json.dumps({"lshsplit_adaptive_1x": out["adaptive_1x"]}), flush=True)
+        total_true = out["uncapped"]["true_pairs"]
+        for name in variants:
+            out[name]["recall_pct"] = (
+                round(100.0 * out[name]["true_pairs"] / total_true, 3) if total_true else 100.0
             )
-            .join(
-                sh_sets.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sb"),
-                "id_b",
-            )
-            .repartition(160)
-        )
-        return attached.filter(_dedup.jaccard(F.col("sa"), F.col("sb")) >= 0.6).count()
-
-    variants = {
-        "capped": dict(max_bucket_size=64, split_depth=0),
-        "split1": dict(max_bucket_size=64, split_depth=1),
-        "split2": dict(max_bucket_size=64, split_depth=2),
-        # r11: the adaptive default — the histogram decides the depth
-        "adaptive": dict(max_bucket_size=64, split_depth=None),
-        "uncapped": dict(max_bucket_size=None, split_depth=0),
-    }
-    for name, kw in variants.items():
-        t0 = time.perf_counter()
-        cands = _dedup.lsh_candidates_from_sigs(sigs, 32, 16, block_col="blk", **kw)
-        cands = cands.localCheckpoint()
-        n = cands.count()
-        gen_s = round(time.perf_counter() - t0, 2)
-        out[name] = {"cand_pairs": n, "gen_s": gen_s, "true_pairs": _true(cands)}
-        if name == "adaptive":
-            out[name]["decision"] = dict(_dedup.last_adaptive)
-        print(json.dumps({"lshsplit_variant": {name: out[name]}}), flush=True)
-    # the other half of the adaptive claim: at 1× (sf0.1 itself) the
-    # over-cap share is tiny and the default must stay at depth 0
-    _, blocked1 = _prep_filtered(spark, BASE_SF)
-    sh1 = _dedup.char_ngram_sets(
-        blocked1.repartition(32, "doc_id"), "text", "doc_id", 3, keep=("blk",)
-    ).localCheckpoint()
-    sigs1 = _dedup.minhash_signatures_from_sets(
-        sh1, 32, keep=("blk",), materialized=True
-    ).localCheckpoint()
-    _dedup.lsh_candidates_from_sigs(
-        sigs1, 32, 16, max_bucket_size=64, block_col="blk", split_depth=None
-    ).count()
-    out["adaptive_1x"] = dict(_dedup.last_adaptive)
-    print(json.dumps({"lshsplit_adaptive_1x": out["adaptive_1x"]}), flush=True)
-    total_true = out["uncapped"]["true_pairs"]
-    for name in variants:
-        out[name]["recall_pct"] = (
-            round(100.0 * out[name]["true_pairs"] / total_true, 3) if total_true else 100.0
-        )
-    print(json.dumps({"lshsplit_probe": out}), flush=True)
-    shutil.rmtree(d, ignore_errors=True)
+        print(json.dumps({"lshsplit_probe": out}), flush=True)
     return out
 
 
-def write_lshsplit_section(row: dict) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## Bucket-split refinement vs the drop valve (40×)"
-    text, tail_sections = _splice_section(text, marker)
+def lshsplit_section(row: dict) -> tuple[str, list[str]]:
     lines = [
-        marker.strip(),
-        "",
         f"`scale_probe.py lshsplit` (r10): the `split_depth` refinement at "
         f"K={row['k']} ({row['docs']} filtered docs). Over-cap buckets are "
         "re-partitioned by another band's hash (bounded depth) instead of "
@@ -669,21 +676,15 @@ def write_lshsplit_section(row: dict) -> None:
             "where the r10 measurements said it pays, with no manual "
             "setting per corpus.",
         ]
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## Bucket-split refinement vs the drop valve (40×)", lines
 
 
-def write_corpusprep40_section(row: dict) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## LSH pipeline at 40× + bucket-valve recall"
-    text, tail_sections = _splice_section(text, marker)
+def corpusprep40_section(row: dict) -> tuple[str, list[str]]:
     hist = " · ".join(
         f"{b}: {v['buckets']} buckets / {v['entries']} entries"
         for b, v in sorted(row["bucket_hist"].items())
     )
     lines = [
-        marker.strip(),
-        "",
         f"`scale_probe.py corpusprep40` (r10, VERDICT r9 #4): "
         f"`corpus_prep_pipeline_lsh` at K={row['k']} "
         f"({row['docs']} filtered docs): **{row['lsh_s']} s** best-of-2.",
@@ -696,7 +697,7 @@ def write_corpusprep40_section(row: dict) -> None:
         f"vs {row['true_pairs_capped']} found with the valve → "
         f"**valve recall {row['valve_recall_pct']}% at 40×**",
     ]
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## LSH pipeline at 40× + bucket-valve recall", lines
 
 
 def _reclaim(spark) -> None:
@@ -786,12 +787,7 @@ def corpusprep100_probe(spark, ks=(40, 100)) -> dict:
         blocked, target_bytes=_dedup.SHINGLE_SPREAD_SOURCE_BYTES
     )
     out["spread_partitions"] = n_spread
-    sh = _dedup.char_ngram_sets(
-        blocked.repartition(n_spread, "doc_id"), "text", "doc_id", 3, keep=("blk",)
-    ).localCheckpoint()
-    sigs = _dedup.minhash_signatures_from_sets(
-        sh, 32, keep=("blk",), materialized=True
-    ).localCheckpoint()
+    sh, sigs = _lsh_sigs(blocked, n_spread)
     sh_sets = sh.select("id", "sh")
 
     def _true(cands):
@@ -860,18 +856,12 @@ def corpusprep100_probe(spark, ks=(40, 100)) -> dict:
     return out
 
 
-def write_corpusprep100_section(row: dict) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## LSH pipeline at 100× under engine-owned sizing"
-    text, tail_sections = _splice_section(text, marker)
+def corpusprep100_section(row: dict) -> tuple[str, list[str]]:
     walls = row["walls"]
     ks = sorted(int(k) for k in walls)
     k_lo, k_hi = ks[0], ks[-1]
     dec = row.get("adaptive_decision", {})
     lines = [
-        marker.strip(),
-        "",
         f"`scale_probe.py corpusprep100` (r15, VERDICT r14 #5; run to "
         f"completion r16): `corpus_prep_pipeline_lsh` at K={k_lo} and "
         f"K={k_hi} ({row['docs']} filtered docs at {k_hi}x), "
@@ -898,7 +888,7 @@ def write_corpusprep100_section(row: dict) -> None:
         f"{row['true_pairs_dropped']} lost in dropped candidates → "
         f"**recall {row['recall_pct']}% at {k_hi}x** (gate ≥95%, asserted)",
     ]
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## LSH pipeline at 100× under engine-owned sizing", lines
 
 
 def textops_probe(spark, ks=(1, 4, 10)) -> list[dict]:
@@ -912,38 +902,26 @@ def textops_probe(spark, ks=(1, 4, 10)) -> list[dict]:
     registry = all_queries()
     out = []
     for k in ks:
-        d = tempfile.mkdtemp(prefix=f"textops_k{k}_")
-        replicate(spark, d, k, only=("documents",))
-        row: dict = {"k": k}
-        docs = table(spark, d, "documents")
-        toks = docs.filter(F.col("text").isNotNull()).select(
-            F.explode_outer(_text.tokens(F.lower(F.col("text")))).alias("token")
-        )
-        row["common_tokens"] = (
-            toks.groupBy("token").agg(F.count("*").alias("n")).filter(F.col("n") >= 5).count()
-        )
-        for name, key in (("doc_rare_token_stats", "rare_s"), ("doc_chunk_stats", "chunk_s")):
-            best = float("inf")
-            for _ in range(3):
-                t0 = time.perf_counter()
-                registry[name].fn(spark, d).collect()
-                best = min(best, time.perf_counter() - t0)
-            row[key] = round(best, 2)
-        out.append(row)
-        print(json.dumps({"textops_probe": row}), flush=True)
-        shutil.rmtree(d, ignore_errors=True)
+        with scratch_dir(f"textops_k{k}_", spark, k, only=("documents",)) as d:
+            row: dict = {"k": k}
+            docs = table(spark, d, "documents")
+            toks = docs.filter(F.col("text").isNotNull()).select(
+                F.explode_outer(_text.tokens(F.lower(F.col("text")))).alias("token")
+            )
+            row["common_tokens"] = (
+                toks.groupBy("token").agg(F.count("*").alias("n")).filter(F.col("n") >= 5).count()
+            )
+            for name, key in (("doc_rare_token_stats", "rare_s"), ("doc_chunk_stats", "chunk_s")):
+                best = Best.of(3, lambda: registry[name].fn(spark, d).collect())
+                row[key] = round(best, 2)
+            out.append(row)
+            print(json.dumps({"textops_probe": row}), flush=True)
     return out
 
 
-def write_textops_section(rows: list[dict]) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## Round-8 text ops vs corpus size"
-    text, tail_sections = _splice_section(text, marker)
+def textops_section(rows: list[dict]) -> tuple[str, list[str]]:
     base = rows[0]
     lines = [
-        marker.strip(),
-        "",
         "`scale_probe.py textops`: the r8 vocabulary-rarity query"
         " (broadcast COMMON set + anti-hit) and overlapping chunking on"
         " cipher-replicated documents, best-of-3 warm. common_tokens ="
@@ -961,7 +939,7 @@ def write_textops_section(rows: list[dict]) -> None:
             f" {r['rare_s']} | {round(r['rare_s'] / base['rare_s'], 1)}x |"
             f" {r['chunk_s']} | {round(r['chunk_s'] / base['chunk_s'], 1)}x |"
         )
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## Round-8 text ops vs corpus size", lines
 
 
 def bpe_probe(spark, ks=(1, 4, 10), num_merges=12) -> list[dict]:
@@ -977,32 +955,23 @@ def bpe_probe(spark, ks=(1, 4, 10), num_merges=12) -> list[dict]:
 
     out = []
     for k in ks:
-        d = tempfile.mkdtemp(prefix=f"bpe_k{k}_")
-        replicate(spark, d, k, only=("documents",))
-        docs = table(spark, d, "documents")
-        row: dict = {"k": k, "vocab": _bpe.word_counts(docs).count()}
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            merges = _bpe.train_bpe(docs, num_merges)
-            best = min(best, time.perf_counter() - t0)
-        row["train_s"] = round(best, 2)
-        row["merges"] = len(merges)
-        out.append(row)
-        print(json.dumps({"bpe_probe": row}), flush=True)
-        shutil.rmtree(d, ignore_errors=True)
+        with scratch_dir(f"bpe_k{k}_", spark, k, only=("documents",)) as d:
+            docs = table(spark, d, "documents")
+            row: dict = {"k": k, "vocab": _bpe.word_counts(docs).count()}
+            best = Best()
+            for _ in range(2):
+                with best:
+                    merges = _bpe.train_bpe(docs, num_merges)
+            row["train_s"] = round(best.s, 2)
+            row["merges"] = len(merges)
+            out.append(row)
+            print(json.dumps({"bpe_probe": row}), flush=True)
     return out
 
 
-def write_bpe_section(rows: list[dict], num_merges: int = 12) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## BPE tokenizer training vs corpus size"
-    text, tail_sections = _splice_section(text, marker)
+def bpe_section(rows: list[dict], num_merges: int = 12) -> tuple[str, list[str]]:
     base = rows[0]
     lines = [
-        marker.strip(),
-        "",
         f"`scale_probe.py bpe`: operators/bpe.py train_bpe ({num_merges} merges)"
         " on cipher-replicated documents, best-of-2 warm. The cipher"
         " copies carry disjoint words, so the WORD VOCABULARY (the"
@@ -1019,7 +988,7 @@ def write_bpe_section(rows: list[dict], num_merges: int = 12) -> None:
             f"| {r['k']} | {r['k'] * 4792} | {r['vocab']} |"
             f" {r['train_s']} | {round(r['train_s'] / base['train_s'], 1)}x |"
         )
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## BPE tokenizer training vs corpus size", lines
 
 
 def _synth_bpe_docs(spark, n: int):
@@ -1057,27 +1026,20 @@ def bpe_synth_probe(spark, n_docs=(10_000, 40_000, 120_000), num_merges=12) -> l
     for n in n_docs:
         docs = _synth_bpe_docs(spark, n)
         vocab = _bpe.word_counts(docs).count()
-        best = float("inf")
+        best = Best()
         for _ in range(2):
-            t0 = time.perf_counter()
-            merges = _bpe.train_bpe(docs, num_merges)
-            best = min(best, time.perf_counter() - t0)
-        row = {"docs": n, "vocab": vocab, "train_s": round(best, 2), "merges": len(merges)}
+            with best:
+                merges = _bpe.train_bpe(docs, num_merges)
+        row = {"docs": n, "vocab": vocab, "train_s": round(best.s, 2), "merges": len(merges)}
         out.append(row)
         print(json.dumps({"bpe_synth_probe": row}), flush=True)
         docs.unpersist()
     return out
 
 
-def write_bpe_synth_section(rows: list[dict], num_merges: int = 12) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## BPE training vs vocabulary size (synthetic)"
-    text, tail_sections = _splice_section(text, marker)
+def bpe_synth_section(rows: list[dict], num_merges: int = 12) -> tuple[str, list[str]]:
     base = rows[0]
     lines = [
-        marker.strip(),
-        "",
         f"`scale_probe.py bpesynth`: train_bpe ({num_merges} merges) on synthetic"
         " docs of hash-derived pseudo-words — the documents table's"
         " 31-word vocabulary is degenerate, so this is the probe that"
@@ -1094,7 +1056,7 @@ def write_bpe_synth_section(rows: list[dict], num_merges: int = 12) -> None:
             f" {round(r['train_s'] / base['train_s'], 1)}x |"
             f" {round(r['vocab'] / base['vocab'], 1)}x |"
         )
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## BPE training vs vocabulary size (synthetic)", lines
 
 
 def tfidf_probe(spark, ks=(1, 4, 10, 40)) -> list[dict]:
@@ -1107,30 +1069,20 @@ def tfidf_probe(spark, ks=(1, 4, 10, 40)) -> list[dict]:
     registry = all_queries()
     out = []
     for k in ks:
-        d = tempfile.mkdtemp(prefix=f"tfidf_k{k}_")
-        replicate(spark, d, k, only=("documents",))
-        best = float("inf")
-        rows = 0
-        for _ in range(2):
-            t0 = time.perf_counter()
-            rows = len(registry["doc_tfidf_topk"].fn(spark, d).collect())
-            best = min(best, time.perf_counter() - t0)
-        row = {"k": k, "out_rows": rows, "tfidf_s": round(best, 2)}
-        out.append(row)
-        print(json.dumps({"tfidf_probe": row}), flush=True)
-        shutil.rmtree(d, ignore_errors=True)
+        with scratch_dir(f"tfidf_k{k}_", spark, k, only=("documents",)) as d:
+            best = Best()
+            for _ in range(2):
+                with best:
+                    rows = len(registry["doc_tfidf_topk"].fn(spark, d).collect())
+            row = {"k": k, "out_rows": rows, "tfidf_s": round(best.s, 2)}
+            out.append(row)
+            print(json.dumps({"tfidf_probe": row}), flush=True)
     return out
 
 
-def write_tfidf_section(rows: list[dict]) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## TF-IDF top-k vs corpus size"
-    text, tail_sections = _splice_section(text, marker)
+def tfidf_section(rows: list[dict]) -> tuple[str, list[str]]:
     base = rows[0]
     lines = [
-        marker.strip(),
-        "",
         "`scale_probe.py tfidf` (r10): `doc_tfidf_topk` on cipher-replicated "
         "documents (vocabulary grows ~linearly with K — both the (doc, token) "
         "tf aggregate and the token-keyed tf⋈df join grow). Best-of-2, fresh "
@@ -1144,7 +1096,7 @@ def write_tfidf_section(rows: list[dict]) -> None:
             f"| {r['k']} | {r['out_rows']} | {r['tfidf_s']} |"
             f" {round(r['tfidf_s'] / base['tfidf_s'], 1)}x |"
         )
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## TF-IDF top-k vs corpus size", lines
 
 
 def heavyhitters_probe(
@@ -1200,15 +1152,12 @@ def heavyhitters_probe(
                 stream, "token", k=20, counters=4096
             ).collect()
 
-        naive_best = mg_best = float("inf")
-        naive_rows = mg_rows = None
+        naive_best, mg_best = Best(), Best()
         for _ in range(2):
-            t0 = time.perf_counter()
-            naive_rows = _naive()
-            naive_best = min(naive_best, time.perf_counter() - t0)
-            t0 = time.perf_counter()
-            mg_rows = _mg()
-            mg_best = min(mg_best, time.perf_counter() - t0)
+            with naive_best:
+                naive_rows = _naive()
+            with mg_best:
+                mg_rows = _mg()
         assert [(r["token"], r["cnt"]) for r in mg_rows] == [
             (r["token"], r["cnt"]) for r in naive_rows
         ], f"heavy hitters diverged at key space {space}"
@@ -1216,22 +1165,16 @@ def heavyhitters_probe(
             "key_space": space,
             "distinct": distinct,
             "candidates": cands,
-            "naive_s": round(naive_best, 2),
-            "mg_s": round(mg_best, 2),
+            "naive_s": round(naive_best.s, 2),
+            "mg_s": round(mg_best.s, 2),
         }
         out.append(row)
         print(json.dumps({"heavyhitters_probe": row}), flush=True)
     return out
 
 
-def write_heavyhitters_section(rows: list[dict]) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## Heavy hitters: MG-pruned vs full-key-space shuffle"
-    text, tail_sections = _splice_section(text, marker)
+def heavyhitters_section(rows: list[dict]) -> tuple[str, list[str]]:
     lines = [
-        marker.strip(),
-        "",
         "`scale_probe.py heavyhitters` (r11): exact top-20 over an 8M-row "
         "log-uniform stream as the KEY SPACE grows (synthetic, JVM-generated: "
         "the testdata generator draws document text from a 31-word pool and "
@@ -1252,7 +1195,7 @@ def write_heavyhitters_section(rows: list[dict]) -> None:
             f"| {r['key_space']:,} | {r['distinct']:,} | {r['candidates']:,} |"
             f" {r['naive_s']} | {r['mg_s']} |"
         )
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## Heavy hitters: MG-pruned vs full-key-space shuffle", lines
 
 
 def _state_families(base: str, keys: list[str], child: str, value, counters: int):
@@ -1303,84 +1246,83 @@ def stateparts_probe(spark, part_counts=(8, 64, 256)) -> list[dict]:
     rng = _random.Random(11)
     out = []
     for n_parts in part_counts:
-        base = tempfile.mkdtemp(prefix=f"stateparts_{n_parts}_")
-        tk, qt, td = f"{base}/topk", f"{base}/quant", f"{base}/tdig"
-        # r12: the bounded t-digest sibling keys on the same v — a
-        # fractional jitter would change the exact twin; the sketch
-        # doesn't care
-        families = _state_families(base, ["g"], "child", F.col("v"), 256)
-        td_state_rows = 0
-        for i in range(n_parts):
-            rows = [
-                ("g%d" % rng.randrange(5), "c%d" % rng.randrange(100),
-                 rng.randrange(0, 10_000))
-                for _ in range(500)
-            ]
-            b = spark.createDataFrame(rows, "g string, child string, v long")
-            for path, (partial, _) in families.items():
-                parts_store.write_part(partial(b), path, i)
+        with scratch_dir(f"stateparts_{n_parts}_") as base:
+            tk, qt, td = f"{base}/topk", f"{base}/quant", f"{base}/tdig"
+            # r12: the bounded t-digest sibling keys on the same v — a
+            # fractional jitter would change the exact twin; the sketch
+            # doesn't care
+            families = _state_families(base, ["g"], "child", F.col("v"), 256)
+            td_state_rows = 0
+            for i in range(n_parts):
+                rows = [
+                    ("g%d" % rng.randrange(5), "c%d" % rng.randrange(100),
+                     rng.randrange(0, 10_000))
+                    for _ in range(500)
+                ]
+                b = spark.createDataFrame(rows, "g string, child string, v long")
+                for path, (partial, _) in families.items():
+                    parts_store.write_part(partial(b), path, i)
 
-        def _read_tk():
-            return topk_state.read_topk(spark, tk, ["g"], k=5, counters=256).collect()
+            def _read_tk():
+                return topk_state.read_topk(spark, tk, ["g"], k=5, counters=256).collect()
 
-        def _read_qt():
-            return quantile_state.read_quantiles(
-                spark, qt, ["g"], [0.5, 0.95]
-            ).collect()
+            def _read_qt():
+                return quantile_state.read_quantiles(
+                    spark, qt, ["g"], [0.5, 0.95]
+                ).collect()
 
-        def _read_td():
-            return tdigest_state.read_quantiles(
-                spark, td, ["g"], [0.5, 0.95]
-            ).collect()
+            def _read_td():
+                return tdigest_state.read_quantiles(
+                    spark, td, ["g"], [0.5, 0.95]
+                ).collect()
 
-        tk_best = qt_best = td_best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter(); tk_rows = _read_tk()
-            tk_best = min(tk_best, time.perf_counter() - t0)
-            t0 = time.perf_counter(); qt_rows = _read_qt()
-            qt_best = min(qt_best, time.perf_counter() - t0)
-            t0 = time.perf_counter(); _read_td()
-            td_best = min(td_best, time.perf_counter() - t0)
-        # stored digest size: bounded at O(compression) per group per
-        # part regardless of rows — the claim that distinguishes it
-        # from the exact histogram state
-        td_centroids = spark.read.parquet(f"{td}/b=*").select(
-            F.sum(F.size("means")).alias("c")
-        ).collect()[0]["c"]
-        td_state_rows = int(td_centroids)
-        for path, (_, merge) in families.items():
-            parts_store.compact(spark, path, merge)
-        t0 = time.perf_counter(); tk_c = _read_tk()
-        tk_compact = time.perf_counter() - t0
-        t0 = time.perf_counter(); qt_c = _read_qt()
-        qt_compact = time.perf_counter() - t0
-        t0 = time.perf_counter(); td_c = _read_td()
-        td_compact = time.perf_counter() - t0
-        # 100-key domain < 256 counters: both exact states are
-        # untrimmed-exact here, so folds must preserve reads
-        # bit-for-bit (the trimmed regime's fold bound is tested in
-        # test_topk_state.py). The digest fold re-compresses — its
-        # contract is the rank bound (test_tdigest_state.py), checked
-        # here as median within 2% of the exact state's.
-        assert [tuple(r) for r in qt_c] == [tuple(r) for r in qt_rows]
-        assert [tuple(r) for r in tk_c] == [tuple(r) for r in tk_rows]
-        qt_by = {(r["g"], r["prob"]): r["quantile"] for r in qt_c}
-        for r in td_c:
-            exact = qt_by[(r["g"], r["prob"])]
-            assert abs(r["quantile"] - exact) <= 0.02 * 10_000, (r, exact)
-        row = {
-            "parts": n_parts,
-            "topk_read_s": round(tk_best, 2),
-            "topk_compacted_s": round(tk_compact, 2),
-            "quant_read_s": round(qt_best, 2),
-            "quant_compacted_s": round(qt_compact, 2),
-            "tdigest_read_s": round(td_best, 2),
-            "tdigest_compacted_s": round(td_compact, 2),
-            "tdigest_centroids": td_state_rows,
-        }
-        out.append(row)
-        print(json.dumps({"stateparts_probe": row}), flush=True)
-        shutil.rmtree(base, ignore_errors=True)
+            tk_best, qt_best, td_best = Best(), Best(), Best()
+            for _ in range(2):
+                with tk_best:
+                    tk_rows = _read_tk()
+                with qt_best:
+                    qt_rows = _read_qt()
+                with td_best:
+                    _read_td()
+            # stored digest size: bounded at O(compression) per group per
+            # part regardless of rows — the claim that distinguishes it
+            # from the exact histogram state
+            td_centroids = spark.read.parquet(f"{td}/b=*").select(
+                F.sum(F.size("means")).alias("c")
+            ).collect()[0]["c"]
+            td_state_rows = int(td_centroids)
+            for path, (_, merge) in families.items():
+                parts_store.compact(spark, path, merge)
+            t0 = time.perf_counter(); tk_c = _read_tk()
+            tk_compact = time.perf_counter() - t0
+            t0 = time.perf_counter(); qt_c = _read_qt()
+            qt_compact = time.perf_counter() - t0
+            t0 = time.perf_counter(); td_c = _read_td()
+            td_compact = time.perf_counter() - t0
+            # 100-key domain < 256 counters: both exact states are
+            # untrimmed-exact here, so folds must preserve reads
+            # bit-for-bit (the trimmed regime's fold bound is tested in
+            # test_topk_state.py). The digest fold re-compresses — its
+            # contract is the rank bound (test_tdigest_state.py), checked
+            # here as median within 2% of the exact state's.
+            assert [tuple(r) for r in qt_c] == [tuple(r) for r in qt_rows]
+            assert [tuple(r) for r in tk_c] == [tuple(r) for r in tk_rows]
+            qt_by = {(r["g"], r["prob"]): r["quantile"] for r in qt_c}
+            for r in td_c:
+                exact = qt_by[(r["g"], r["prob"])]
+                assert abs(r["quantile"] - exact) <= 0.02 * 10_000, (r, exact)
+            row = {
+                "parts": n_parts,
+                "topk_read_s": round(tk_best.s, 2),
+                "topk_compacted_s": round(tk_compact, 2),
+                "quant_read_s": round(qt_best.s, 2),
+                "quant_compacted_s": round(qt_compact, 2),
+                "tdigest_read_s": round(td_best.s, 2),
+                "tdigest_compacted_s": round(td_compact, 2),
+                "tdigest_centroids": td_state_rows,
+            }
+            out.append(row)
+            print(json.dumps({"stateparts_probe": row}), flush=True)
     return out
 
 
@@ -1409,112 +1351,100 @@ def statedays_probe(
         topk_state,
     )
 
-    base = tempfile.mkdtemp(prefix="statedays_")
-    src = f"{base}/src"
-    mv_root = f"{base}/mv"
-    tk, qt, td = f"{base}/topk", f"{base}/quant", f"{base}/tdig"
-    families = _state_families(
-        base, ["country"], "user_id", F.col("duration_seconds"), 1024
-    )
-    specs = [
-        mv.mv_specs()["mv_user_funnel"],
-        mv.mv_specs()["mv_hourly_events"],
-        mv.mv_specs()["mv_country_stats"],
-    ]
-    Path(src).mkdir(parents=True)
-    queries = [
-        mv.start_incremental_multi(
-            spark, src, mv_root, specs, f"{base}/ck_mv", max_files_per_trigger=8
-        ),
-        *[
-            parts_store.start_stream(
-                spark, src, schemas.EVENTS, f"{path}_ck",
-                parts_store.part_sink({path: partial}), max_files_per_trigger=8,
-            )
-            for path, (partial, _) in families.items()
-        ],
-    ]
-    funnel = specs[0]
-    funnel_path = f"{mv_root}/{funnel.name}"
-    out = []
-    folds = 0
-    try:
-        for day in range(days):
-            generator.day_events(
-                spark, day, events_per_day, n_users, id_offset=day * events_per_day
-            ).write.mode("append").parquet(src)
+    with scratch_dir("statedays_") as base:
+        src = f"{base}/src"
+        mv_root = f"{base}/mv"
+        tk, qt, td = f"{base}/topk", f"{base}/quant", f"{base}/tdig"
+        families = _state_families(
+            base, ["country"], "user_id", F.col("duration_seconds"), 1024
+        )
+        specs = [
+            mv.mv_specs()["mv_user_funnel"],
+            mv.mv_specs()["mv_hourly_events"],
+            mv.mv_specs()["mv_country_stats"],
+        ]
+        Path(src).mkdir(parents=True)
+        queries = [
+            mv.start_incremental_multi(
+                spark, src, mv_root, specs, f"{base}/ck_mv", max_files_per_trigger=8
+            ),
+            *[
+                parts_store.start_stream(
+                    spark, src, schemas.EVENTS, f"{path}_ck",
+                    parts_store.part_sink({path: partial}), max_files_per_trigger=8,
+                )
+                for path, (partial, _) in families.items()
+            ],
+        ]
+        funnel = specs[0]
+        funnel_path = f"{mv_root}/{funnel.name}"
+        out = []
+        folds = 0
+        try:
+            for day in range(days):
+                generator.day_events(
+                    spark, day, events_per_day, n_users, id_offset=day * events_per_day
+                ).write.mode("append").parquet(src)
+                for q in queries:
+                    q.processAllAvailable()
+                # compaction policy tick (the maintenance job's cadence)
+                folds += mv.maybe_compact(spark, funnel_path, funnel, max_parts=max_parts)
+                for path, (_, merge) in families.items():
+                    folds += parts_store.maybe_compact(spark, path, merge, max_parts=max_parts)
+
+                def _wall(fn) -> float:
+                    return round(Best.of(2, fn), 2)
+
+                live = parts_store.live_part_dirs(funnel_path)
+                stored_rows = (
+                    spark.read.parquet(*[str(d) for d in live]).count() if live else 0
+                )
+                merged_rows = mv.read_final(spark, funnel_path, funnel).count()
+                state_bytes = sum(
+                    f.stat().st_size
+                    for p in (funnel_path, tk, qt, td)
+                    for f in Path(p).rglob("*.parquet")
+                )
+                row = {
+                    "day": day + 1,
+                    "events_total": (day + 1) * events_per_day,
+                    "funnel_parts": len(live),
+                    "funnel_stored_rows": stored_rows,
+                    "funnel_keys": merged_rows,
+                    "state_mb": round(state_bytes / 1048576, 1),
+                    "folds": folds,
+                    "funnel_read_s": _wall(
+                        lambda: mv.read_final(spark, funnel_path, funnel).count()
+                    ),
+                    "topk_read_s": _wall(
+                        lambda: topk_state.read_topk(
+                            spark, tk, ["country"], k=5, counters=1024
+                        ).collect()
+                    ),
+                    "quant_read_s": _wall(
+                        lambda: quantile_state.read_quantiles(
+                            spark, qt, ["country"], [0.5, 0.95]
+                        ).collect()
+                    ),
+                    "tdigest_read_s": _wall(
+                        lambda: tdigest_state.read_quantiles(
+                            spark, td, ["country"], [0.5, 0.95]
+                        ).collect()
+                    ),
+                }
+                out.append(row)
+                print(json.dumps({"statedays_probe": row}), flush=True)
+        finally:
             for q in queries:
-                q.processAllAvailable()
-            # compaction policy tick (the maintenance job's cadence)
-            folds += mv.maybe_compact(spark, funnel_path, funnel, max_parts=max_parts)
-            for path, (_, merge) in families.items():
-                folds += parts_store.maybe_compact(spark, path, merge, max_parts=max_parts)
-
-            def _wall(fn) -> float:
-                best = float("inf")
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    fn()
-                    best = min(best, time.perf_counter() - t0)
-                return round(best, 2)
-
-            live = parts_store.live_part_dirs(funnel_path)
-            stored_rows = (
-                spark.read.parquet(*[str(d) for d in live]).count() if live else 0
-            )
-            merged_rows = mv.read_final(spark, funnel_path, funnel).count()
-            state_bytes = sum(
-                f.stat().st_size
-                for p in (funnel_path, tk, qt, td)
-                for f in Path(p).rglob("*.parquet")
-            )
-            row = {
-                "day": day + 1,
-                "events_total": (day + 1) * events_per_day,
-                "funnel_parts": len(live),
-                "funnel_stored_rows": stored_rows,
-                "funnel_keys": merged_rows,
-                "state_mb": round(state_bytes / 1048576, 1),
-                "folds": folds,
-                "funnel_read_s": _wall(
-                    lambda: mv.read_final(spark, funnel_path, funnel).count()
-                ),
-                "topk_read_s": _wall(
-                    lambda: topk_state.read_topk(
-                        spark, tk, ["country"], k=5, counters=1024
-                    ).collect()
-                ),
-                "quant_read_s": _wall(
-                    lambda: quantile_state.read_quantiles(
-                        spark, qt, ["country"], [0.5, 0.95]
-                    ).collect()
-                ),
-                "tdigest_read_s": _wall(
-                    lambda: tdigest_state.read_quantiles(
-                        spark, td, ["country"], [0.5, 0.95]
-                    ).collect()
-                ),
-            }
-            out.append(row)
-            print(json.dumps({"statedays_probe": row}), flush=True)
-    finally:
-        for q in queries:
-            q.stop()
-    shutil.rmtree(base, ignore_errors=True)
+                q.stop()
     return out
 
 
-def write_statedays_section(rows: list[dict], max_parts=6) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## Multi-day streaming-state growth (key space vs parts)"
-    text, tail_sections = _splice_section(text, marker)
+def statedays_section(rows: list[dict], max_parts=6) -> tuple[str, list[str]]:
     first, last = rows[0], rows[-1]
     key_growth = round(last["funnel_keys"] / max(first["funnel_keys"], 1), 2)
     read_growth = round(last["funnel_read_s"] / max(first["funnel_read_s"], 1e-9), 2)
     lines = [
-        marker.strip(),
-        "",
         f"`scale_probe.py statedays` (r12, VERDICT r11 #6): one shared "
         "maintenance stream for the three events MVs "
         "(start_incremental_multi) + the three State/Merge families, "
@@ -1545,17 +1475,11 @@ def write_statedays_section(rows: list[dict], max_parts=6) -> None:
         "artifact. Structural form asserted in "
         "tests/test_streaming.py::test_multi_day_state_growth_policy.",
     ]
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## Multi-day streaming-state growth (key space vs parts)", lines
 
 
-def write_stateparts_section(rows: list[dict]) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## Mergeable state: merge-on-read vs part count"
-    text, tail_sections = _splice_section(text, marker)
+def stateparts_section(rows: list[dict]) -> tuple[str, list[str]]:
     lines = [
-        marker.strip(),
-        "",
         "`scale_probe.py stateparts` (r11): read wall for the topK and "
         "quantile State/Merge stores as parts accumulate (500-row parts, "
         "5 groups), then after one compaction fold. Quantile reads are "
@@ -1579,7 +1503,7 @@ def write_stateparts_section(rows: list[dict]) -> None:
             f" {r.get('tdigest_read_s', '-')} | {r.get('tdigest_compacted_s', '-')} |"
             f" {r.get('tdigest_centroids', '-')} |"
         )
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## Mergeable state: merge-on-read vs part count", lines
 
 
 def ivf_recall_probe(
@@ -1600,93 +1524,88 @@ def ivf_recall_probe(
     from clickhouse_realtime_analytics_demo_spark.operators import similarity as _sim
     from clickhouse_realtime_analytics_demo_spark.sources import quantized as _q
 
-    d = tempfile.mkdtemp(prefix=f"ivfrecall_k{k}_")
-    base = table(spark, BASE_SF, "embeddings")
-    dim = len(base.select("embedding").first()["embedding"])
-    n_base = base.count()
-    shift = base.agg(F.max("vec_id")).collect()[0][0] + 1
-    parts = []
-    for i in range(k):
-        sh = i % dim
-        vec = (
-            F.concat(
-                F.slice("embedding", sh + 1, dim - sh), F.slice("embedding", 1, sh)
+    with scratch_dir(f"ivfrecall_k{k}_") as d:
+        base = table(spark, BASE_SF, "embeddings")
+        dim = len(base.select("embedding").first()["embedding"])
+        n_base = base.count()
+        shift = base.agg(F.max("vec_id")).collect()[0][0] + 1
+        parts = []
+        for i in range(k):
+            sh = i % dim
+            vec = (
+                F.concat(
+                    F.slice("embedding", sh + 1, dim - sh), F.slice("embedding", 1, sh)
+                )
+                if sh
+                else F.col("embedding")
             )
-            if sh
-            else F.col("embedding")
-        )
-        parts.append(
-            base.select(
-                (F.col("vec_id") + i * shift).cast("long").alias("vec_id"),
-                vec.alias("embedding"),
-                "label",
+            parts.append(
+                base.select(
+                    (F.col("vec_id") + i * shift).cast("long").alias("vec_id"),
+                    vec.alias("embedding"),
+                    "label",
+                )
             )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out.repartition(16).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
-    emb = table(spark, d, "embeddings").localCheckpoint()
-    n = emb.count()
-    _q.ensure_ivf_store(spark, d, num_cells=num_cells, root=d)
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        out.repartition(16).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
+        emb = table(spark, d, "embeddings").localCheckpoint()
+        n = emb.count()
+        _q.ensure_ivf_store(spark, d, num_cells=num_cells, root=d)
 
-    # cell-size skew straight from the store partitions
-    store = spark.read.parquet(str(_q.ivf_store_path(d, root=d) / "data"))
-    sizes = [r["c"] for r in store.groupBy("cell").agg(F.count("*").alias("c")).collect()]
-    skew = round(max(sizes) / (sum(sizes) / len(sizes)), 2)
+        # cell-size skew straight from the store partitions
+        store = spark.read.parquet(str(_q.ivf_store_path(d, root=d) / "data"))
+        sizes = [r["c"] for r in store.groupBy("cell").agg(F.count("*").alias("c")).collect()]
+        skew = round(max(sizes) / (sum(sizes) / len(sizes)), 2)
 
-    qids = [(j * 7919) % n_base + (j % k) * shift for j in range(n_queries)]
-    exact: dict[int, set] = {}
-    for qid in qids:
-        exact[qid] = {
-            r["neighbor_id"]
-            for r in _sim.brute_force_topk(emb, query_id=qid, k=10).collect()
+        qids = [(j * 7919) % n_base + (j % k) * shift for j in range(n_queries)]
+        exact: dict[int, set] = {}
+        for qid in qids:
+            exact[qid] = {
+                r["neighbor_id"]
+                for r in _sim.brute_force_topk(emb, query_id=qid, k=10).collect()
+            }
+        recalls = {}
+        recalls_rr = {}
+        walls = {}
+        walls_rr = {}
+        rerank = 4096
+        for nprobe in nprobes:
+            for rr, rec, wall in ((0, recalls, walls), (rerank, recalls_rr, walls_rr)):
+                hits = []
+                t0 = time.perf_counter()
+                for qid in qids:
+                    got = {
+                        r["neighbor_id"]
+                        for r in _q.ivf_stored_topk(
+                            spark, d, query_id=qid, k=10, nprobe=nprobe,
+                            num_cells=num_cells, root=d, rerank=rr,
+                        ).collect()
+                    }
+                    hits.append(len(got & exact[qid]) / 10.0)
+                wall[nprobe] = round((time.perf_counter() - t0) / len(qids), 2)
+                rec[nprobe] = round(sum(hits) / len(hits), 3)
+        row = {
+            "k": k,
+            "vectors": n,
+            "dim": dim,
+            "num_cells": num_cells,
+            "queries": n_queries,
+            "cell_max_over_mean": skew,
+            "cell_min": min(sizes),
+            "cell_max": max(sizes),
+            "recall_at_10": {str(np_): r for np_, r in recalls.items()},
+            "recall_at_10_rerank": {str(np_): r for np_, r in recalls_rr.items()},
+            "rerank_candidates": rerank,
+            "s_per_query": {str(np_): w for np_, w in walls.items()},
+            "s_per_query_rerank": {str(np_): w for np_, w in walls_rr.items()},
         }
-    recalls = {}
-    recalls_rr = {}
-    walls = {}
-    walls_rr = {}
-    rerank = 4096
-    for nprobe in nprobes:
-        for rr, rec, wall in ((0, recalls, walls), (rerank, recalls_rr, walls_rr)):
-            hits = []
-            t0 = time.perf_counter()
-            for qid in qids:
-                got = {
-                    r["neighbor_id"]
-                    for r in _q.ivf_stored_topk(
-                        spark, d, query_id=qid, k=10, nprobe=nprobe,
-                        num_cells=num_cells, root=d, rerank=rr,
-                    ).collect()
-                }
-                hits.append(len(got & exact[qid]) / 10.0)
-            wall[nprobe] = round((time.perf_counter() - t0) / len(qids), 2)
-            rec[nprobe] = round(sum(hits) / len(hits), 3)
-    row = {
-        "k": k,
-        "vectors": n,
-        "dim": dim,
-        "num_cells": num_cells,
-        "queries": n_queries,
-        "cell_max_over_mean": skew,
-        "cell_min": min(sizes),
-        "cell_max": max(sizes),
-        "recall_at_10": {str(np_): r for np_, r in recalls.items()},
-        "recall_at_10_rerank": {str(np_): r for np_, r in recalls_rr.items()},
-        "rerank_candidates": rerank,
-        "s_per_query": {str(np_): w for np_, w in walls.items()},
-        "s_per_query_rerank": {str(np_): w for np_, w in walls_rr.items()},
-    }
-    print(json.dumps({"ivf_recall_probe": row}), flush=True)
-    shutil.rmtree(d, ignore_errors=True)
+        print(json.dumps({"ivf_recall_probe": row}), flush=True)
     return row
 
 
-def write_ivf_recall_section(row: dict) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## IVF stored ANN: recall@10 vs nprobe at 40×"
-    text, tail_sections = _splice_section(text, marker)
+def ivf_recall_section(row: dict) -> tuple[str, list[str]]:
     rec = row["recall_at_10"]
     ceiling = rec.get(str(row["num_cells"]))
     skew = row["cell_max_over_mean"]
@@ -1707,8 +1626,6 @@ def write_ivf_recall_section(row: dict) -> None:
             "escalation if a future corpus concentrates."
         )
     lines = [
-        marker.strip(),
-        "",
         "`scale_probe.py ivfrecall` (r12, VERDICT r11 #5): recall@10 of "
         "`ivf_stored_topk` vs EXACT float brute force over a 40×-"
         "replicated corpus whose copies are dimension-rotated (new "
@@ -1756,7 +1673,7 @@ def write_ivf_recall_section(row: dict) -> None:
             "set, so re-rank composes with nprobe rather than "
             "substituting for it. Per-query cost columns above.",
         ]
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## IVF stored ANN: recall@10 vs nprobe at 40×", lines
 
 
 def ann_int8_probe(spark, ks=(1, 10, 40)) -> list[dict]:
@@ -1769,38 +1686,25 @@ def ann_int8_probe(spark, ks=(1, 10, 40)) -> list[dict]:
 
     out = []
     for k in ks:
-        d = tempfile.mkdtemp(prefix=f"annint8_k{k}_")
-        replicate(spark, d, k, only=("embeddings",))
-        emb = table(spark, d, "embeddings").localCheckpoint()
-        n = emb.count()
-        row: dict = {"k": k, "vectors": n}
-        for name, fn in (
-            ("float_s", lambda: _sim.brute_force_topk(emb, query_id=0, k=10)),
-            ("int8_s", lambda: _sim.quantized_topk(emb, query_id=0, k=10)),
-        ):
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn().collect()
-                best = min(best, time.perf_counter() - t0)
-            row[name] = round(best, 2)
-        exact = [r.neighbor_id for r in _sim.brute_force_topk(emb, query_id=0, k=10).collect()]
-        quant = [r.neighbor_id for r in _sim.quantized_topk(emb, query_id=0, k=10).collect()]
-        row["recall_at_10"] = round(len(set(exact) & set(quant)) / 10, 2)
-        out.append(row)
-        print(json.dumps({"ann_int8_probe": row}), flush=True)
-        shutil.rmtree(d, ignore_errors=True)
+        with scratch_dir(f"annint8_k{k}_", spark, k, only=("embeddings",)) as d:
+            emb = table(spark, d, "embeddings").localCheckpoint()
+            n = emb.count()
+            row: dict = {"k": k, "vectors": n}
+            for name, fn in (
+                ("float_s", lambda: _sim.brute_force_topk(emb, query_id=0, k=10)),
+                ("int8_s", lambda: _sim.quantized_topk(emb, query_id=0, k=10)),
+            ):
+                row[name] = round(Best.of(2, lambda: fn().collect()), 2)
+            exact = [r.neighbor_id for r in _sim.brute_force_topk(emb, query_id=0, k=10).collect()]
+            quant = [r.neighbor_id for r in _sim.quantized_topk(emb, query_id=0, k=10).collect()]
+            row["recall_at_10"] = round(len(set(exact) & set(quant)) / 10, 2)
+            out.append(row)
+            print(json.dumps({"ann_int8_probe": row}), flush=True)
     return out
 
 
-def write_ann_int8_section(rows: list[dict]) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## int8 vs float brute-force ANN (corpus growth)"
-    text, tail_sections = _splice_section(text, marker)
+def ann_int8_section(rows: list[dict]) -> tuple[str, list[str]]:
     lines = [
-        marker.strip(),
-        "",
         "`scale_probe.py annint8` (r10): float vs int8-quantized cosine "
         "top-10 of vec_id=0 on replicated embeddings, best-of-2 fresh "
         "plans, with measured recall@10 of int8 vs the float ranking. "
@@ -1815,7 +1719,7 @@ def write_ann_int8_section(rows: list[dict]) -> None:
         lines.append(
             f"| {r['k']} | {r['vectors']} | {r['float_s']} | {r['int8_s']} | {r['recall_at_10']} |"
         )
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## int8 vs float brute-force ANN (corpus growth)", lines
 
 
 def ann_stored_probe(spark, ks=(1, 10, 40)) -> list[dict]:
@@ -1830,56 +1734,43 @@ def ann_stored_probe(spark, ks=(1, 10, 40)) -> list[dict]:
 
     out = []
     for k in ks:
-        d = tempfile.mkdtemp(prefix=f"annstored_k{k}_")
-        replicate(spark, d, k, only=("embeddings",))
-        emb = table(spark, d, "embeddings")
-        n = emb.count()
-        t0 = time.perf_counter()
-        store = _q.ensure_store(spark, d, root=d)
-        build_s = round(time.perf_counter() - t0, 2)
-        qz = _q.read_store(spark, d, root=d)
-        row: dict = {"k": k, "vectors": n, "build_s": build_s}
-        t0 = time.perf_counter()
-        _q.ensure_ivf_store(spark, d, root=d)
-        row["ivf_build_s"] = round(time.perf_counter() - t0, 2)
-        for name, fn in (
-            ("float_s", lambda: _sim.brute_force_topk(emb, query_id=0, k=10)),
-            ("inline_int8_s", lambda: _sim.quantized_topk(emb, query_id=0, k=10)),
-            ("stored_int8_s", lambda: _sim.quantized_topk_scan(qz, query_id=0, k=10)),
-            # r11: the partition-pruned IVF probe (4/16 of the store's
-            # directories opened) — the full storage-as-index stack
-            ("ivf_stored_s", lambda: _q.ivf_stored_topk(spark, d, query_id=0, k=10, nprobe=4, root=d)),
-        ):
-            best = float("inf")
-            for _ in range(2):
-                t1 = time.perf_counter()
-                fn().collect()
-                best = min(best, time.perf_counter() - t1)
-            row[name] = round(best, 2)
-        src = Path(d) / "embeddings.parquet"
-        src_bytes = (
-            sum(f.stat().st_size for f in src.rglob("*") if f.is_file())
-            if src.is_dir()
-            else src.stat().st_size
-        )
-        store_bytes = sum(f.stat().st_size for f in (store / "data").rglob("*.parquet"))
-        row["float_kb"] = src_bytes // 1024
-        row["store_kb"] = store_bytes // 1024
-        row["bytes_ratio"] = round(src_bytes / max(store_bytes, 1), 2)
-        out.append(row)
-        print(json.dumps({"ann_stored_probe": row}), flush=True)
-        shutil.rmtree(d, ignore_errors=True)
+        with scratch_dir(f"annstored_k{k}_", spark, k, only=("embeddings",)) as d:
+            emb = table(spark, d, "embeddings")
+            n = emb.count()
+            t0 = time.perf_counter()
+            store = _q.ensure_store(spark, d, root=d)
+            build_s = round(time.perf_counter() - t0, 2)
+            qz = _q.read_store(spark, d, root=d)
+            row: dict = {"k": k, "vectors": n, "build_s": build_s}
+            t0 = time.perf_counter()
+            _q.ensure_ivf_store(spark, d, root=d)
+            row["ivf_build_s"] = round(time.perf_counter() - t0, 2)
+            for name, fn in (
+                ("float_s", lambda: _sim.brute_force_topk(emb, query_id=0, k=10)),
+                ("inline_int8_s", lambda: _sim.quantized_topk(emb, query_id=0, k=10)),
+                ("stored_int8_s", lambda: _sim.quantized_topk_scan(qz, query_id=0, k=10)),
+                # r11: the partition-pruned IVF probe (4/16 of the store's
+                # directories opened) — the full storage-as-index stack
+                ("ivf_stored_s", lambda: _q.ivf_stored_topk(spark, d, query_id=0, k=10, nprobe=4, root=d)),
+            ):
+                row[name] = round(Best.of(2, lambda: fn().collect()), 2)
+            src = Path(d) / "embeddings.parquet"
+            src_bytes = (
+                sum(f.stat().st_size for f in src.rglob("*") if f.is_file())
+                if src.is_dir()
+                else src.stat().st_size
+            )
+            store_bytes = sum(f.stat().st_size for f in (store / "data").rglob("*.parquet"))
+            row["float_kb"] = src_bytes // 1024
+            row["store_kb"] = store_bytes // 1024
+            row["bytes_ratio"] = round(src_bytes / max(store_bytes, 1), 2)
+            out.append(row)
+            print(json.dumps({"ann_stored_probe": row}), flush=True)
     return out
 
 
-def write_ann_stored_section(rows: list[dict]) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## Write-time int8 store vs inline quantization (scan wall)"
-    text, tail_sections = _splice_section(text, marker)
+def ann_stored_section(rows: list[dict]) -> tuple[str, list[str]]:
     lines = [
-        marker.strip(),
-        "",
         "`scale_probe.py annstored` (r11, VERDICT r10 #3): cosine "
         "top-10 scan over (a) float embeddings, (b) inline-quantized "
         "int8 (quantize per query — the r10 registered form), (c) the "
@@ -1899,7 +1790,7 @@ def write_ann_stored_section(rows: list[dict]) -> None:
             f" {r.get('ivf_stored_s', '—')} | {r['float_kb']} |"
             f" {r['store_kb']} | {r['bytes_ratio']} |"
         )
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## Write-time int8 store vs inline quantization (scan wall)", lines
 
 
 def bpe_encode_probe(spark, n_docs: int = 10_000) -> list[dict]:
@@ -1945,14 +1836,8 @@ def bpe_encode_probe(spark, n_docs: int = 10_000) -> list[dict]:
     return out
 
 
-def write_bpe_encode_section(rows: list[dict]) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## BPE encode: fold replay vs rank-priority (merge-table size)"
-    text, tail_sections = _splice_section(text, marker)
+def bpe_encode_section(rows: list[dict]) -> tuple[str, list[str]]:
     lines = [
-        marker.strip(),
-        "",
         f"`scale_probe.py bpeencode` (r10): both encoders over the synthetic "
         f"{rows[0]['vocab']}-word vocabulary; trained 64-merge prefix extended "
         "with well-formed chain merges (replay pays merges × corpus whether or "
@@ -1963,7 +1848,7 @@ def write_bpe_encode_section(rows: list[dict]) -> None:
     ]
     for r in rows:
         lines.append(f"| {r['merges']} | {r.get('fold_s', '— (not run: plan depth)')} | {r['rank_s']} |")
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## BPE encode: fold replay vs rank-priority (merge-table size)", lines
 
 
 def bpe_batched_probe(spark) -> list[dict]:
@@ -2047,62 +1932,54 @@ def semdedup_probe(spark, ks=(1, 10, 40)) -> list[dict]:
 
     out = []
     for k in ks:
-        d = tempfile.mkdtemp(prefix=f"semdedup_k{k}_")
-        replicate(spark, d, k, only=("embeddings",))
-        emb = table(spark, d, "embeddings").localCheckpoint()
-        planted = emb.filter(F.col("vec_id") < 5).select(
-            (F.col("vec_id") + 100_000_000).alias("vec_id"),
-            F.transform(
-                "embedding",
-                lambda x, i: x
-                * (
-                    F.lit(1.0)
-                    + (F.pmod(F.xxhash64(F.col("vec_id"), i, F.lit(99)), F.lit(1000)) - 500)
-                    * F.lit(1e-6)
-                ),
+        with scratch_dir(f"semdedup_k{k}_", spark, k, only=("embeddings",)) as d:
+            emb = table(spark, d, "embeddings").localCheckpoint()
+            planted = emb.filter(F.col("vec_id") < 5).select(
+                (F.col("vec_id") + 100_000_000).alias("vec_id"),
+                F.transform(
+                    "embedding",
+                    lambda x, i: x
+                    * (
+                        F.lit(1.0)
+                        + (F.pmod(F.xxhash64(F.col("vec_id"), i, F.lit(99)), F.lit(1000)) - 500)
+                        * F.lit(1e-6)
+                    ),
+                )
+                .cast("array<float>")
+                .alias("embedding"),
+                F.col("label"),
             )
-            .cast("array<float>")
-            .alias("embedding"),
-            F.col("label"),
-        )
-        corpus = emb.unionByName(planted).localCheckpoint()
-        cells = 16 * k
-        t0 = time.perf_counter()
-        pairs = _sim.semantic_dedup_pairs(
-            corpus, threshold=0.95, num_cells=cells, max_cluster_size=10_000
-        ).localCheckpoint()
-        n_pairs = pairs.count()
-        wall = round(time.perf_counter() - t0, 2)
-        # id-shifted replication copies vector VALUES verbatim, so each
-        # base vector becomes a K-way exact-duplicate clique — the probe
-        # therefore measures dedup under extreme duplication (true-pair
-        # volume ∝ K² per clique). Each planted copy must match its
-        # original AND all K-1 replicas: expected 5·K planted pairs.
-        planted_found = pairs.filter(F.col("id_b") >= 100_000_000).count()
-        row = {
-            "k": k,
-            "vectors": corpus.count(),
-            "num_cells": cells,
-            "assign": "literal" if cells * 64 <= _sim._LITERAL_ASSIGN_MAX_FLOATS else "arrow",
-            "pairs": n_pairs,
-            "planted_recall": f"{planted_found}/{5 * k}",
-            "wall_s": wall,
-        }
-        out.append(row)
-        print(json.dumps({"semdedup_probe": row}), flush=True)
-        shutil.rmtree(d, ignore_errors=True)
+            corpus = emb.unionByName(planted).localCheckpoint()
+            cells = 16 * k
+            t0 = time.perf_counter()
+            pairs = _sim.semantic_dedup_pairs(
+                corpus, threshold=0.95, num_cells=cells, max_cluster_size=10_000
+            ).localCheckpoint()
+            n_pairs = pairs.count()
+            wall = round(time.perf_counter() - t0, 2)
+            # id-shifted replication copies vector VALUES verbatim, so each
+            # base vector becomes a K-way exact-duplicate clique — the probe
+            # therefore measures dedup under extreme duplication (true-pair
+            # volume ∝ K² per clique). Each planted copy must match its
+            # original AND all K-1 replicas: expected 5·K planted pairs.
+            planted_found = pairs.filter(F.col("id_b") >= 100_000_000).count()
+            row = {
+                "k": k,
+                "vectors": corpus.count(),
+                "num_cells": cells,
+                "assign": "literal" if cells * 64 <= _sim._LITERAL_ASSIGN_MAX_FLOATS else "arrow",
+                "pairs": n_pairs,
+                "planted_recall": f"{planted_found}/{5 * k}",
+                "wall_s": wall,
+            }
+            out.append(row)
+            print(json.dumps({"semdedup_probe": row}), flush=True)
     return out
 
 
-def write_semdedup_section(rows: list[dict]) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## Semantic dedup vs corpus size"
-    text, tail_sections = _splice_section(text, marker)
+def semdedup_section(rows: list[dict]) -> tuple[str, list[str]]:
     base = rows[0]
     lines = [
-        marker.strip(),
-        "",
         "`scale_probe.py semdedup` (r11): SemDeDup-style cluster-confined "
         "embedding dedup with num_cells ∝ K (bounded clusters ⇒ Σ cluster² "
         "~linear in N — the published scale doctrine). Past 64 cells the "
@@ -2119,7 +1996,7 @@ def write_semdedup_section(rows: list[dict]) -> None:
             f" {r['pairs']} | {r['planted_recall']} | {r['wall_s']} |"
             f" {round(r['wall_s'] / base['wall_s'], 1)}x |"
         )
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## Semantic dedup vs corpus size", lines
 
 
 def bpe_4096_probe(spark) -> dict:
@@ -2221,16 +2098,12 @@ def bpe_big_probe(spark, merge_counts=(8192, 16384), prefix_pin=512) -> list[dic
     return out
 
 
-def write_bpe_big_section(rows: list[dict], anchor_4096_s: float = 1715.0) -> None:
+def bpe_big_section(rows: list[dict], anchor_4096_s: float = 1715.0) -> tuple[str, list[str]]:
     """SCALEPROBE section with the MEASURED scaling exponent: least-
     squares slope of log(wall) vs log(merges) over this run's rungs
     plus the committed r11 4096-merge anchor."""
     import math as _math
 
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## Relaxed BPE at production merge counts (measured)"
-    text, tail_sections = _splice_section(text, marker)
     pts = [(4096.0, anchor_4096_s)] + [(float(r["merges"]), r["wall_s"]) for r in rows]
     xs = [_math.log(p[0]) for p in pts]
     ys = [_math.log(p[1]) for p in pts]
@@ -2242,8 +2115,6 @@ def write_bpe_big_section(rows: list[dict], anchor_4096_s: float = 1715.0) -> No
     top = max(pts, key=lambda p: p[0])
     wall_32k_h = top[1] * (32768.0 / top[0]) ** slope / 3600.0
     lines = [
-        marker.strip(),
-        "",
         "`scale_probe.py bpebig` (r12, VERDICT r11 #4): "
         "`train_bpe_batched(exact_counts=False)` run END-TO-END at "
         "production merge counts (batch 256, fold checkpoints every 32) "
@@ -2274,14 +2145,10 @@ def write_bpe_big_section(rows: list[dict], anchor_4096_s: float = 1715.0) -> No
         "training job, not a query; on a real cluster the fold is "
         "map-side parallel and scales with executors.",
     ]
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## Relaxed BPE at production merge counts (measured)", lines
 
 
-def write_bpe_4096_section(row: dict) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## Relaxed BPE at 4096 merges (recount vs incremental)"
-    text, tail_sections = _splice_section(text, marker)
+def bpe_4096_section(row: dict) -> tuple[str, list[str]]:
     recount_pct = row["recount_share_pct"]
     fold_pct = round(100.0 * row["fold_s"] / max(row["wall_s"], 1e-9), 1)
     if recount_pct >= 60:
@@ -2305,8 +2172,6 @@ def write_bpe_4096_section(row: dict) -> None:
             "~8× this run — feasible, no algorithm change required."
         )
     lines = [
-        marker.strip(),
-        "",
         "`scale_probe.py bpe4096` (r11, VERDICT r10 #4): "
         "`train_bpe_batched(exact_counts=False)` at 4096 merges, batch "
         "256, over the synthetic hash-word corpus, with the per-phase "
@@ -2323,17 +2188,11 @@ def write_bpe_4096_section(row: dict) -> None:
         "",
         decision,
     ]
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## Relaxed BPE at 4096 merges (recount vs incremental)", lines
 
 
-def write_bpe_batched_section(rows: list[dict]) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## Batched BPE at production merge counts"
-    text, tail_sections = _splice_section(text, marker)
+def bpe_batched_section(rows: list[dict]) -> tuple[str, list[str]]:
     lines = [
-        marker.strip(),
-        "",
         "`scale_probe.py bpebatched` (r10, VERDICT r9 #3): "
         "`train_bpe_batched` at ≥1k merges over the synthetic "
         "hash-word vocabulary. ckpt = `fold_checkpoint_every` "
@@ -2350,18 +2209,12 @@ def write_bpe_batched_section(rows: list[dict]) -> None:
             f" {r['ckpt']} | {r['wall_s']} | {r['rounds']} |"
             f" {r['s_per_round']} | {r['merges_per_s']} | {r['merge_table_bytes']} |"
         )
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## Batched BPE at production merge counts", lines
 
 
-def write_corpusprep_section(rows: list[dict]) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## Corpus-prep pipelines vs corpus size"
-    text, tail_sections = _splice_section(text, marker)
+def corpusprep_section(rows: list[dict]) -> tuple[str, list[str]]:
     base = rows[0]
     lines = [
-        marker.strip(),
-        "",
         "`scale_probe.py corpusprep`: both registered corpus-prep"
         " compositions run end-to-end on cipher-replicated documents"
         " (disjoint content per copy ⇒ true pairs grow ~linearly, but"
@@ -2383,17 +2236,11 @@ def write_corpusprep_section(rows: list[dict]) -> None:
             f"| {r['k']} | {r['k'] * 4792} | {ex if ex is not None else '—'} |"
             f" {exr} | {ls if ls is not None else '—'} | {lsr} |"
         )
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## Corpus-prep pipelines vs corpus size", lines
 
 
-def write_funnel_section(rows: list[dict], retain_days: int = 30) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## Funnel MV state vs key cardinality"
-    text, tail_sections = _splice_section(text, marker)
+def funnel_section(rows: list[dict], retain_days: int = 30) -> tuple[str, list[str]]:
     lines = [
-        marker.strip(),
-        "",
         "`scale_probe.py funnelstate`: mv_user_funnel (per-(user,day)"
         " keys — SURVEY §7's flagged state-growth hard part) grown with"
         " real sink writes at 1×/10×/100× user cardinality, 40+3 ×"
@@ -2421,17 +2268,11 @@ def write_funnel_section(rows: list[dict], retain_days: int = 30) -> None:
             f" {r['read_final_ms']} | {r['compact_s']} | {r['rows_folded']} |"
             f" {r['ttl_fold_s']} | {r['rows_retained']} |"
         )
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## Funnel MV state vs key cardinality", lines
 
 
-def write_mv_section(rows: list[dict]) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## MV maintenance vs part count"
-    text, tail_sections = _splice_section(text, marker)
+def mv_section(rows: list[dict]) -> tuple[str, list[str]]:
     lines = [
-        marker.strip(),
-        "",
         "`scale_probe.py mv`: daily_user_activity grown with real sink"
         " writes (200-row partial batches, one coalesced part each — at"
         " reference rate ≈ one part per 2 s), best-of-3 warm timings."
@@ -2448,9 +2289,7 @@ def write_mv_section(rows: list[dict]) -> None:
             f"| {r['parts']} | {r['append_ms']} | {r['read_final_ms']} |"
             f" {r['compact_s']} | {r['read_after_compact_ms']} |"
         )
-    md.write_text(
-        text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections
-    )
+    return "## MV maintenance vs part count", lines
 
 
 def router_probe(spark, k: int = 50) -> list[dict]:
@@ -2469,83 +2308,73 @@ def router_probe(spark, k: int = 50) -> list[dict]:
     sort prefix is probed too: the router must route it to base (no
     copy scores) and cost nothing.
     """
-    import tempfile as _tf
-
     from clickhouse_realtime_analytics_demo_spark.ops.query_log import scan_metrics
     from clickhouse_realtime_analytics_demo_spark.plans.router import ProjectionRouter
     from clickhouse_realtime_analytics_demo_spark.sources import generator, writer
 
-    root = _tf.mkdtemp(prefix="routerprobe_")
-    total = 100_000 * k
-    n_users = 1000 * k
-    grown = generator.events(spark, n=total, n_users=n_users, seed=11, partitions=32)
+    with scratch_dir("routerprobe_") as root:
+        total = 100_000 * k
+        n_users = 1000 * k
+        grown = generator.events(spark, n=total, n_users=n_users, seed=11, partitions=32)
 
-    writer.write_table(grown, root, "events", files_per_month=8)
-    router = ProjectionRouter()
-    router.add_copy(spark, "events", grown, ("user_id", "event_timestamp"), root, files=32)
-    router.add_copy(spark, "events", grown, ("session_id",), root, files=32)
-    base = writer.read_table(spark, root, "events")
+        writer.write_table(grown, root, "events", files_per_month=8)
+        router = ProjectionRouter()
+        router.add_copy(spark, "events", grown, ("user_id", "event_timestamp"), root, files=32)
+        router.add_copy(spark, "events", grown, ("session_id",), root, files=32)
+        base = writer.read_table(spark, root, "events")
 
-    probe_user = n_users // 2  # an arbitrary mid-range user
-    probe_sess = base.filter(F.col("user_id") == probe_user).select(
-        "session_id"
-    ).first()["session_id"]
+        probe_user = n_users // 2  # an arbitrary mid-range user
+        probe_sess = base.filter(F.col("user_id") == probe_user).select(
+            "session_id"
+        ).first()["session_id"]
 
-    cases = {
-        "point_user": (
-            frozenset({"user_id"}),
-            lambda df: df.filter(F.col("user_id") == probe_user).agg(
-                F.count("*"), F.sum("duration_seconds")
+        cases = {
+            "point_user": (
+                frozenset({"user_id"}),
+                lambda df: df.filter(F.col("user_id") == probe_user).agg(
+                    F.count("*"), F.sum("duration_seconds")
+                ),
             ),
-        ),
-        "point_session": (
-            frozenset({"session_id"}),
-            lambda df: df.filter(F.col("session_id") == probe_sess).agg(
-                F.count("*"), F.sum("revenue")
+            "point_session": (
+                frozenset({"session_id"}),
+                lambda df: df.filter(F.col("session_id") == probe_sess).agg(
+                    F.count("*"), F.sum("revenue")
+                ),
             ),
-        ),
-        # matches the BASE sort prefix: router must fall back to base
-        "type_day_match_base": (
-            frozenset({"event_type", "event_date"}),
-            lambda df: df.filter(
-                (F.col("event_type") == "purchase")
-                & (F.col("event_date") == "2024-02-01")
-            ).agg(F.count("*"), F.sum("revenue")),
-        ),
-    }
+            # matches the BASE sort prefix: router must fall back to base
+            "type_day_match_base": (
+                frozenset({"event_type", "event_date"}),
+                lambda df: df.filter(
+                    (F.col("event_type") == "purchase")
+                    & (F.col("event_date") == "2024-02-01")
+                ).agg(F.count("*"), F.sum("revenue")),
+            ),
+        }
 
-    out = []
-    for name, (filter_cols, q) in cases.items():
-        routed_src = router.resolve(spark, "events", base, filter_cols)
-        routed_to = router.decisions[-1][2]
-        row = {"case": name, "routed_to": routed_to, "total_rows": total}
-        for label, source in (("base", base), ("routed", routed_src)):
-            best = float("inf")
-            metrics = None
-            for _ in range(3):
-                df = q(source)
-                t0 = time.perf_counter()
-                df.collect()
-                best = min(best, time.perf_counter() - t0)
-                metrics = scan_metrics(df)
-            row[label] = {
-                "s": round(best, 3),
-                **{m: int(v) for m, v in metrics.items()},
-            }
-        out.append(row)
-        print(json.dumps(row), flush=True)
-    shutil.rmtree(root, ignore_errors=True)
+        out = []
+        for name, (filter_cols, q) in cases.items():
+            routed_src = router.resolve(spark, "events", base, filter_cols)
+            routed_to = router.decisions[-1][2]
+            row = {"case": name, "routed_to": routed_to, "total_rows": total, "k": k}
+            for label, source in (("base", base), ("routed", routed_src)):
+                best = Best()
+                for _ in range(3):
+                    df = q(source)
+                    with best:
+                        df.collect()
+                    metrics = scan_metrics(df)
+                row[label] = {
+                    "s": round(best.s, 3),
+                    **{m: int(v) for m, v in metrics.items()},
+                }
+            out.append(row)
+            print(json.dumps(row), flush=True)
     return out
 
 
-def write_router_section(rows: list[dict], k: int) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## Projection router payoff"
-    text, tail_sections = _splice_section(text, marker)
+def router_section(rows: list[dict]) -> tuple[str, list[str]]:
+    k = rows[0]["k"]
     lines = [
-        marker.strip(),
-        "",
         f"`scale_probe.py router` at K={k} (events sf0.1 ×{k} ="
         f" {rows[0]['total_rows']:,} rows): point lookups measured through"
         " the base layout (sorted by the primary key) vs the copy the"
@@ -2582,9 +2411,7 @@ def write_router_section(rows: list[dict], k: int) -> None:
         " user/session paths; storage cost is K× copies, the same"
         " trade the reference makes.",
     ]
-    md.write_text(
-        text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections
-    )
+    return "## Projection router payoff", lines
 
 
 def _plan_has_skew_split(df) -> bool:
@@ -2623,192 +2450,166 @@ def skew_probe(spark) -> list[dict]:
       operators/skew.salted_join — is explicit salting still needed
       when AQE exists?
     """
-    import tempfile as _tf
-
     from clickhouse_realtime_analytics_demo_spark.operators import dedup, skew
 
-    out = []
-    root = _tf.mkdtemp(prefix="skewprobe_")
-
-    # ---- case A: copurchased hot basket --------------------------------
-    li = table(spark, BASE_SF, "lineitem")
-    max_order = li.agg(F.max("l_orderkey")).collect()[0][0]
-    hot = (
-        spark.range(1, 10_001)
-        .select(
-            F.lit(max_order + 1).alias("l_orderkey"),
-            (F.col("id") + 1_000_000).alias("l_partkey"),
-        )
-    )
-    aug = li.select("l_orderkey", "l_partkey").unionByName(hot)
-    aug.write.mode("overwrite").parquet(f"{root}/lineitem.parquet")
-    q = all_queries()["copurchased_parts"].fn  # only reads lineitem
-    # AQE's skew decision is size-based (default threshold 256 MB);
-    # the planted hot partitions here are MBs, so thresholds are
-    # scaled DOWN to put them in the same regime a TB-scale partition
-    # occupies at defaults — the knob being probed is the mechanism,
-    # not the absolute byte count.
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "4m")
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
-    for bcast, aqe_skew in (
-        ("default", "false"),
-        ("default", "true"),
-        ("off", "false"),  # forced SMJ — the 100 TB self-join regime
-        ("off", "true"),
-    ):
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold",
-            "-1" if bcast == "off" else str(64 * 1024 * 1024),
-        )
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", aqe_skew)
-        best = float("inf")
-        marker = False
-        mix = ""
+    def _arm(build) -> tuple[float, bool, str]:
+        """Best-of-2 wall over a fresh plan per run, whether any run's
+        executed plan split a skewed join, and the join mix."""
+        best, split = Best(), False
         for _ in range(2):
-            df = q(spark, root)
-            t0 = time.perf_counter()
-            df.collect()
-            best = min(best, time.perf_counter() - t0)
-            marker = marker or _plan_has_skew_split(df)
-            mix = _join_mix(df)
-        row = {
-            "case": "copurchased_hot_basket",
-            "arm": f"bcast={bcast},aqe_skew={aqe_skew}",
-            "s": round(best, 2),
-            "plan_skew_split": marker,
-            "joins": mix,
-        }
-        out.append(row)
-        print(json.dumps(row), flush=True)
-    # mitigation arm: cap basket size BEFORE the self-join (the
-    # generic dedup-bucket-cap valve, operators/skew.cap_group_size) —
-    # still in the forced-SMJ regime, quadratic hot key removed
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-
-    def capped_q():  # fresh plan per run — no cross-run shuffle reuse
-        li_capped = skew.cap_group_size(
-            spark.read.parquet(f"{root}/lineitem.parquet"), ["l_orderkey"], 256
-        )
-        a, b = li_capped.alias("a"), li_capped.alias("b")
-        return (
-            a.join(
-                b,
-                (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-            )
-            .groupBy(F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb"))
-            .agg(F.count("*").alias("together"))
-            .filter(F.col("together") >= 2)
-            .orderBy(F.desc("together"), "pa", "pb")
-            .limit(50)
-        )
-
-    best = float("inf")
-    marker = False
-    mix = ""
-    for _ in range(2):
-        df = capped_q()
-        t0 = time.perf_counter()
-        df.collect()
-        best = min(best, time.perf_counter() - t0)
-        marker = marker or _plan_has_skew_split(df)
-        mix = _join_mix(df)
-    row = {
-        "case": "copurchased_hot_basket",
-        "arm": "bcast=off,basket_cap=256",
-        "s": round(best, 2),
-        "plan_skew_split": marker,
-        "joins": mix,
-    }
-    out.append(row)
-    print(json.dumps(row), flush=True)
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-
-    # ---- case B: minhash mega-bucket -----------------------------------
-    docs = table(spark, BASE_SF, "documents").select("doc_id", "text")
-    max_doc = docs.agg(F.max("doc_id")).collect()[0][0]
-    boiler = "the quick brown fox jumps over the lazy dog " * 8
-    for label, n_hot, cap in (("nocap_n2000", 2000, None), ("cap512_n10000", 10_000, 512)):
-        hot_docs = spark.range(1, n_hot + 1).select(
-            (F.col("id") + max_doc).alias("doc_id"), F.lit(boiler).alias("text")
-        )
-        planted = docs.unionByName(hot_docs)
-        t0 = time.perf_counter()
-        n_pairs = dedup.minhash_lsh_candidates(
-            planted, max_bucket_size=cap
-        ).count()
-        row = {
-            "case": "minhash_hot_bucket",
-            "arm": label,
-            "s": round(time.perf_counter() - t0, 2),
-            "candidate_pairs": n_pairs,
-        }
-        out.append(row)
-        print(json.dumps(row), flush=True)
-
-    # ---- case C: hot-FK fact⋈dim, big-dim regime -----------------------
-    orders = table(spark, BASE_SF, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
-    cust = table(spark, BASE_SF, "customer").select("c_custkey", "c_mktsegment")
-    hot_cust = cust.limit(1).collect()[0]["c_custkey"]
-    max_ok = orders.agg(F.max("o_orderkey")).collect()[0][0]
-    hot_orders = spark.range(1, 100_001).select(
-        (F.col("id") + max_ok).alias("o_orderkey"),
-        F.lit(hot_cust).alias("o_custkey"),
-        (F.col("id") % 1000 + 1.0).alias("o_totalprice"),
-    )
-    fact = orders.unionByName(hot_orders)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        arms = {
-            "plain_smj_no_aqe_skew": ("false", lambda: fact.join(cust, fact.o_custkey == cust.c_custkey)),
-            "aqe_skew_split": ("true", lambda: fact.join(cust, fact.o_custkey == cust.c_custkey)),
-            "salted_join": ("false", lambda: skew.salted_join(
-                fact, cust.withColumnRenamed("c_custkey", "o_custkey"), "o_custkey"
-            )),
-        }
-        for label, (aqe_skew, build) in arms.items():
-            spark.conf.set("spark.sql.adaptive.skewJoin.enabled", aqe_skew)
-            best = float("inf")
-            marker = False
-            mix = ""
-            for _ in range(2):
-                df = build().groupBy("c_mktsegment").agg(
-                    F.sum("o_totalprice").alias("rev")
-                )
-                t0 = time.perf_counter()
+            df = build()
+            with best:
                 df.collect()
-                best = min(best, time.perf_counter() - t0)
-                marker = marker or _plan_has_skew_split(df)
-                mix = _join_mix(df)
+            split = split or _plan_has_skew_split(df)
+        return round(best.s, 2), split, _join_mix(df)
+
+    out = []
+    with scratch_dir("skewprobe_") as root:
+        # ---- case A: copurchased hot basket --------------------------------
+        li = table(spark, BASE_SF, "lineitem")
+        max_order = li.agg(F.max("l_orderkey")).collect()[0][0]
+        hot = (
+            spark.range(1, 10_001)
+            .select(
+                F.lit(max_order + 1).alias("l_orderkey"),
+                (F.col("id") + 1_000_000).alias("l_partkey"),
+            )
+        )
+        aug = li.select("l_orderkey", "l_partkey").unionByName(hot)
+        aug.write.mode("overwrite").parquet(f"{root}/lineitem.parquet")
+        q = all_queries()["copurchased_parts"].fn  # only reads lineitem
+        # AQE's skew decision is size-based (default threshold 256 MB);
+        # the planted hot partitions here are MBs, so thresholds are
+        # scaled DOWN to put them in the same regime a TB-scale partition
+        # occupies at defaults — the knob being probed is the mechanism,
+        # not the absolute byte count.
+        spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "4m")
+        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
+        for bcast, aqe_skew in (
+            ("default", "false"),
+            ("default", "true"),
+            ("off", "false"),  # forced SMJ — the 100 TB self-join regime
+            ("off", "true"),
+        ):
+            spark.conf.set(
+                "spark.sql.autoBroadcastJoinThreshold",
+                "-1" if bcast == "off" else str(64 * 1024 * 1024),
+            )
+            spark.conf.set("spark.sql.adaptive.skewJoin.enabled", aqe_skew)
+            s, split, mix = _arm(lambda: q(spark, root))
             row = {
-                "case": "salted_fact_dim",
-                "arm": label,
-                "s": round(best, 2),
-                "plan_skew_split": marker,
+                "case": "copurchased_hot_basket",
+                "arm": f"bcast={bcast},aqe_skew={aqe_skew}",
+                "s": s,
+                "plan_skew_split": split,
                 "joins": mix,
             }
             out.append(row)
             print(json.dumps(row), flush=True)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # mitigation arm: cap basket size BEFORE the self-join (the
+        # generic dedup-bucket-cap valve, operators/skew.cap_group_size) —
+        # still in the forced-SMJ regime, quadratic hot key removed
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+
+        def capped_q():  # fresh plan per run — no cross-run shuffle reuse
+            li_capped = skew.cap_group_size(
+                spark.read.parquet(f"{root}/lineitem.parquet"), ["l_orderkey"], 256
+            )
+            a, b = li_capped.alias("a"), li_capped.alias("b")
+            return (
+                a.join(
+                    b,
+                    (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+                    & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+                )
+                .groupBy(F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb"))
+                .agg(F.count("*").alias("together"))
+                .filter(F.col("together") >= 2)
+                .orderBy(F.desc("together"), "pa", "pb")
+                .limit(50)
+            )
+
+        s, split, mix = _arm(capped_q)
+        row = {
+            "case": "copurchased_hot_basket",
+            "arm": "bcast=off,basket_cap=256",
+            "s": s,
+            "plan_skew_split": split,
+            "joins": mix,
+        }
+        out.append(row)
+        print(json.dumps(row), flush=True)
         spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        spark.conf.set(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "256m"
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+
+        # ---- case B: minhash mega-bucket -----------------------------------
+        docs = table(spark, BASE_SF, "documents").select("doc_id", "text")
+        max_doc = docs.agg(F.max("doc_id")).collect()[0][0]
+        boiler = "the quick brown fox jumps over the lazy dog " * 8
+        for label, n_hot, cap in (("nocap_n2000", 2000, None), ("cap512_n10000", 10_000, 512)):
+            hot_docs = spark.range(1, n_hot + 1).select(
+                (F.col("id") + max_doc).alias("doc_id"), F.lit(boiler).alias("text")
+            )
+            planted = docs.unionByName(hot_docs)
+            t0 = time.perf_counter()
+            n_pairs = dedup.minhash_lsh_candidates(
+                planted, max_bucket_size=cap
+            ).count()
+            row = {
+                "case": "minhash_hot_bucket",
+                "arm": label,
+                "s": round(time.perf_counter() - t0, 2),
+                "candidate_pairs": n_pairs,
+            }
+            out.append(row)
+            print(json.dumps(row), flush=True)
+
+        # ---- case C: hot-FK fact⋈dim, big-dim regime -----------------------
+        orders = table(spark, BASE_SF, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
+        cust = table(spark, BASE_SF, "customer").select("c_custkey", "c_mktsegment")
+        hot_cust = cust.limit(1).collect()[0]["c_custkey"]
+        max_ok = orders.agg(F.max("o_orderkey")).collect()[0][0]
+        hot_orders = spark.range(1, 100_001).select(
+            (F.col("id") + max_ok).alias("o_orderkey"),
+            F.lit(hot_cust).alias("o_custkey"),
+            (F.col("id") % 1000 + 1.0).alias("o_totalprice"),
         )
-        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-    shutil.rmtree(root, ignore_errors=True)
+        fact = orders.unionByName(hot_orders)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            arms = {
+                "plain_smj_no_aqe_skew": ("false", lambda: fact.join(cust, fact.o_custkey == cust.c_custkey)),
+                "aqe_skew_split": ("true", lambda: fact.join(cust, fact.o_custkey == cust.c_custkey)),
+                "salted_join": ("false", lambda: skew.salted_join(
+                    fact, cust.withColumnRenamed("c_custkey", "o_custkey"), "o_custkey"
+                )),
+            }
+            for label, (aqe_skew, build) in arms.items():
+                spark.conf.set("spark.sql.adaptive.skewJoin.enabled", aqe_skew)
+                s, split, mix = _arm(
+                    lambda: build().groupBy("c_mktsegment").agg(F.sum("o_totalprice").alias("rev"))
+                )
+                row = {
+                    "case": "salted_fact_dim",
+                    "arm": label,
+                    "s": s,
+                    "plan_skew_split": split,
+                    "joins": mix,
+                }
+                out.append(row)
+                print(json.dumps(row), flush=True)
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+            spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+            spark.conf.set(
+                "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "256m"
+            )
+            spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
     return out
 
 
-def write_skew_section(rows: list[dict]) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## Skewed-key probe"
-    text, tail_sections = _splice_section(text, marker)
+def skew_section(rows: list[dict]) -> tuple[str, list[str]]:
     lines = [
-        marker.strip(),
-        "",
         "`scale_probe.py skew`: planted Zipfian pathologies (the"
         " uniform replication probe can't produce them) — a 10^4-line"
         " order in the basket self-join, an identical-text LSH"
@@ -2846,9 +2647,7 @@ def write_skew_section(rows: list[dict]) -> None:
         else:
             detail = f"pairs={r.get('candidate_pairs'):,}"
         lines.append(f"| {r['case']} | {r.get('arm')} | {r['s']} | {detail} |")
-    md.write_text(
-        text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections
-    )
+    return "## Skewed-key probe", lines
 
 
 def cc_probe(spark, sizes=(120_000, 1_200_000, 4_800_000)) -> list[dict]:
@@ -2892,14 +2691,13 @@ def cc_probe(spark, sizes=(120_000, 1_200_000, 4_800_000)) -> list[dict]:
         ):
             edges = edges.localCheckpoint(eager=True)  # time CC, not range codegen
             n_edges = edges.count()
-            best, stats = float("inf"), {}
+            best, stats = Best(), {}
             for _ in range(2):
-                t0 = time.perf_counter()
-                got = connected_components(edges, stats=stats)
-                comps, nodes = got.agg(
-                    F.countDistinct("component"), F.count("*")
-                ).collect()[0]
-                best = min(best, time.perf_counter() - t0)
+                with best:
+                    got = connected_components(edges, stats=stats)
+                    comps, nodes = got.agg(
+                        F.countDistinct("component"), F.count("*")
+                    ).collect()[0]
             assert comps == want_comps, (arm, n, comps, want_comps)
             assert nodes == want_nodes, (arm, n, nodes, want_nodes)
             rows.append(
@@ -2907,7 +2705,7 @@ def cc_probe(spark, sizes=(120_000, 1_200_000, 4_800_000)) -> list[dict]:
                     "arm": arm,
                     "edges": n_edges,
                     "rounds": stats["rounds"],
-                    "s": round(best, 3),
+                    "s": round(best.s, 3),
                     "components": comps,
                 }
             )
@@ -2915,15 +2713,9 @@ def cc_probe(spark, sizes=(120_000, 1_200_000, 4_800_000)) -> list[dict]:
     return rows
 
 
-def write_cc_section(rows: list[dict]) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## Connected components"
-    text, tail_sections = _splice_section(text, marker)
+def cc_section(rows: list[dict]) -> tuple[str, list[str]]:
     base = {r["arm"]: r["s"] for r in rows if r["edges"] <= rows[0]["edges"] * 1.5}
     lines = [
-        marker.strip(),
-        "",
         "`scale_probe.py cc`: star-contraction connected components"
         " (the cluster-resolution step behind keep-one-per-cluster"
         " dedup) on planted graphs with known structure — size-6"
@@ -2943,9 +2735,7 @@ def write_cc_section(rows: list[dict]) -> None:
         lines.append(
             f"| {r['arm']} | {r['edges']:,} | {r['rounds']} | {r['s']} | {ratio}x |"
         )
-    md.write_text(
-        text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections
-    )
+    return "## Connected components", lines
 
 
 def dedup_ingest_probe(
@@ -2964,52 +2754,48 @@ def dedup_ingest_probe(
     construction, so the pushdown's win is shuffle avoidance, not
     fewer rows read; the numbers say whether that's enough.
     """
-    import tempfile as _tmp
-
     from pyspark.sql import functions as PF
 
     from clickhouse_realtime_analytics_demo_spark.streaming import dedup as sdedup
 
     rows: list[dict] = []
     for n in corpus_sizes:
-        d = _tmp.mkdtemp(prefix=f"dedup_ingest_{n}_")
-        out = f"{d}/out"
-        # Seed: N unique docs written as the b=0 part (fingerprinted
-        # the same way dedup_batch would).
-        seed = spark.range(n).select(
-            PF.col("id").alias("doc_id"),
-            PF.concat(PF.lit("seed text "), PF.col("id")).alias("text"),
-        )
-        sdedup.dedup_batch(spark, seed, out, batch_id=0)
-        # Delivery: half dups of seed rows, half fresh.
-        half = batch_rows // 2
-        dups = spark.range(half).select(
-            (PF.col("id") + 10_000_000).alias("doc_id"),
-            PF.concat(PF.lit("seed text "), PF.col("id") * (n // half)).alias("text"),
-        )
-        fresh = spark.range(half).select(
-            (PF.col("id") + 20_000_000).alias("doc_id"),
-            PF.concat(PF.lit("fresh text "), PF.col("id")).alias("text"),
-        )
-        batch = dups.union(fresh).localCheckpoint(eager=True)
-        for arm, cap in (("pushdown", sdedup.MAX_PUSHDOWN_FINGERPRINTS), ("anti_join", 0)):
-            best = float("inf")
-            for rep in range(1, 4):
-                t0 = time.perf_counter()
-                sdedup.dedup_batch(
-                    spark, batch, out, batch_id=rep if arm == "pushdown" else 100 + rep,
-                    max_pushdown_fingerprints=cap,
-                )
-                best = min(best, time.perf_counter() - t0)
-                # remove the written part so the next rep sees the same corpus
-                shutil.rmtree(f"{out}/b={rep if arm == 'pushdown' else 100 + rep}")
-            accepted = spark.read.parquet(f"{out}/b=0")
-            rows.append(
-                {"corpus": n, "arm": arm, "batch_rows": batch_rows, "s": round(best, 3)}
+        with scratch_dir(f"dedup_ingest_{n}_") as d:
+            out = f"{d}/out"
+            # Seed: N unique docs written as the b=0 part (fingerprinted
+            # the same way dedup_batch would).
+            seed = spark.range(n).select(
+                PF.col("id").alias("doc_id"),
+                PF.concat(PF.lit("seed text "), PF.col("id")).alias("text"),
             )
-            print(json.dumps(rows[-1]), flush=True)
-            assert accepted.count() == n  # corpus untouched
-        shutil.rmtree(d, ignore_errors=True)
+            sdedup.dedup_batch(spark, seed, out, batch_id=0)
+            # Delivery: half dups of seed rows, half fresh.
+            half = batch_rows // 2
+            dups = spark.range(half).select(
+                (PF.col("id") + 10_000_000).alias("doc_id"),
+                PF.concat(PF.lit("seed text "), PF.col("id") * (n // half)).alias("text"),
+            )
+            fresh = spark.range(half).select(
+                (PF.col("id") + 20_000_000).alias("doc_id"),
+                PF.concat(PF.lit("fresh text "), PF.col("id")).alias("text"),
+            )
+            batch = dups.union(fresh).localCheckpoint(eager=True)
+            for arm, cap in (("pushdown", sdedup.MAX_PUSHDOWN_FINGERPRINTS), ("anti_join", 0)):
+                best = Best()
+                for rep in range(1, 4):
+                    with best:
+                        sdedup.dedup_batch(
+                            spark, batch, out, batch_id=rep if arm == "pushdown" else 100 + rep,
+                            max_pushdown_fingerprints=cap,
+                        )
+                    # remove the written part so the next rep sees the same corpus
+                    shutil.rmtree(f"{out}/b={rep if arm == 'pushdown' else 100 + rep}")
+                accepted = spark.read.parquet(f"{out}/b=0")
+                rows.append(
+                    {"corpus": n, "arm": arm, "batch_rows": batch_rows, "s": round(best.s, 3)}
+                )
+                print(json.dumps(rows[-1]), flush=True)
+                assert accepted.count() == n  # corpus untouched
     return rows
 
 
@@ -3039,8 +2825,6 @@ def neardup_ingest_probe(
     check. The scan-side term is the (id, bands) index read + the
     band-bucket join; the in-batch MinHash+CC term is fixed per batch.
     """
-    import tempfile as _tmp
-
     from pyspark.sql import functions as PF
 
     from clickhouse_realtime_analytics_demo_spark.streaming import dedup as sdedup
@@ -3048,61 +2832,58 @@ def neardup_ingest_probe(
     _text = _neardup_text
     rows: list[dict] = []
     for n in corpus_sizes:
-        d = _tmp.mkdtemp(prefix=f"neardup_ingest_{n}_")
-        out = f"{d}/out"
-        # Seed in ≤50k-row batches then compact — the store shape
-        # production produces (micro-batch parts folded into a merged
-        # part written with full parallelism). One giant coalesce(1)
-        # seed batch would leave a single-file store whose every
-        # reference scan is a one-task read — a probe artifact, not a
-        # steady state (first run measured exactly that: 10.8 s/batch
-        # at 200k vs 2.9 s at 50k, all of it single-task decode).
-        chunk = 50_000
-        t0 = time.perf_counter()
-        for ci, lo in enumerate(range(0, n, chunk)):
-            seed = spark.range(lo, min(lo + chunk, n)).select(
-                PF.col("id").alias("doc_id"), _text("s", PF.col("id")).alias("text")
-            )
-            sdedup.neardup_batch(spark, seed, out, batch_id=ci)
-        sdedup.compact_accepted(spark, out)
-        seed_s = time.perf_counter() - t0
-        half = batch_rows // 2
-        # near-dups: re-generate an accepted doc's text, swap ONE token
-        dups = spark.range(half).select(
-            (PF.col("id") + 10_000_000).alias("doc_id"),
-            PF.regexp_replace(
-                _text("s", PF.col("id") * (n // half)), r"^\S+", "edited"
-            ).alias("text"),
-        )
-        fresh = spark.range(half).select(
-            (PF.col("id") + 20_000_000).alias("doc_id"),
-            _text("f", PF.col("id")).alias("text"),
-        )
-        batch = dups.union(fresh).localCheckpoint(eager=True)
-        best = float("inf")
-        for rep in range(1, 4):
+        with scratch_dir(f"neardup_ingest_{n}_") as d:
+            out = f"{d}/out"
+            # Seed in ≤50k-row batches then compact — the store shape
+            # production produces (micro-batch parts folded into a merged
+            # part written with full parallelism). One giant coalesce(1)
+            # seed batch would leave a single-file store whose every
+            # reference scan is a one-task read — a probe artifact, not a
+            # steady state (first run measured exactly that: 10.8 s/batch
+            # at 200k vs 2.9 s at 50k, all of it single-task decode).
+            chunk = 50_000
             t0 = time.perf_counter()
-            sdedup.neardup_batch(spark, batch, out, batch_id=rep)
-            el = time.perf_counter() - t0
-            surv = spark.read.parquet(f"{out}/b={rep}")
-            n_dup_admitted = surv.filter(
-                (PF.col("doc_id") >= 10_000_000) & (PF.col("doc_id") < 20_000_000)
-            ).count()
-            n_fresh = surv.filter(PF.col("doc_id") >= 20_000_000).count()
-            assert n_fresh == half, n_fresh
-            assert n_dup_admitted == 0, n_dup_admitted  # every edit caught
-            best = min(best, el)
-            shutil.rmtree(f"{out}/b={rep}")
-        rows.append(
-            {
-                "corpus": n,
-                "batch_rows": batch_rows,
-                "s": round(best, 3),
-                "seed_s": round(seed_s, 1),
-            }
-        )
-        print(json.dumps(rows[-1]), flush=True)
-        shutil.rmtree(d, ignore_errors=True)
+            for ci, lo in enumerate(range(0, n, chunk)):
+                seed = spark.range(lo, min(lo + chunk, n)).select(
+                    PF.col("id").alias("doc_id"), _text("s", PF.col("id")).alias("text")
+                )
+                sdedup.neardup_batch(spark, seed, out, batch_id=ci)
+            sdedup.compact_accepted(spark, out)
+            seed_s = time.perf_counter() - t0
+            half = batch_rows // 2
+            # near-dups: re-generate an accepted doc's text, swap ONE token
+            dups = spark.range(half).select(
+                (PF.col("id") + 10_000_000).alias("doc_id"),
+                PF.regexp_replace(
+                    _text("s", PF.col("id") * (n // half)), r"^\S+", "edited"
+                ).alias("text"),
+            )
+            fresh = spark.range(half).select(
+                (PF.col("id") + 20_000_000).alias("doc_id"),
+                _text("f", PF.col("id")).alias("text"),
+            )
+            batch = dups.union(fresh).localCheckpoint(eager=True)
+            best = Best()
+            for rep in range(1, 4):
+                with best:
+                    sdedup.neardup_batch(spark, batch, out, batch_id=rep)
+                surv = spark.read.parquet(f"{out}/b={rep}")
+                n_dup_admitted = surv.filter(
+                    (PF.col("doc_id") >= 10_000_000) & (PF.col("doc_id") < 20_000_000)
+                ).count()
+                n_fresh = surv.filter(PF.col("doc_id") >= 20_000_000).count()
+                assert n_fresh == half, n_fresh
+                assert n_dup_admitted == 0, n_dup_admitted  # every edit caught
+                shutil.rmtree(f"{out}/b={rep}")
+            rows.append(
+                {
+                    "corpus": n,
+                    "batch_rows": batch_rows,
+                    "s": round(best.s, 3),
+                    "seed_s": round(seed_s, 1),
+                }
+            )
+            print(json.dumps(rows[-1]), flush=True)
     return rows
 
 
@@ -3117,8 +2898,6 @@ def neardup_parts_probe(
     the per-batch reference scans pay. Seeding writes precomputed
     (doc, bands) slices directly (the store layout), so 512-part
     seeding doesn't pay 512 MinHash pipelines."""
-    import tempfile as _tmp
-
     from pyspark.sql import functions as PF
 
     from clickhouse_realtime_analytics_demo_spark.operators import dedup as ddup
@@ -3148,48 +2927,39 @@ def neardup_parts_probe(
 
     rows: list[dict] = []
     for np_ in parts_counts:
-        d = _tmp.mkdtemp(prefix=f"neardup_parts_{np_}_")
-        out = f"{d}/out"
-        per = (corpus + np_ - 1) // np_
-        for i in range(np_):
-            (
-                store_df.filter(
-                    (PF.col("doc_id") >= i * per) & (PF.col("doc_id") < (i + 1) * per)
+        with scratch_dir(f"neardup_parts_{np_}_") as d:
+            out = f"{d}/out"
+            per = (corpus + np_ - 1) // np_
+            for i in range(np_):
+                (
+                    store_df.filter(
+                        (PF.col("doc_id") >= i * per) & (PF.col("doc_id") < (i + 1) * per)
+                    )
+                    .coalesce(1)
+                    .write.mode("overwrite")
+                    .parquet(f"{out}/b={i}")
                 )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(f"{out}/b={i}")
-            )
-        best = float("inf")
-        for rep in range(1, 4):
-            bid = np_ + rep  # past the seed part ids
-            t0 = time.perf_counter()
-            sdedup.neardup_batch(spark, batch, out, batch_id=bid)
-            el = time.perf_counter() - t0
-            surv = spark.read.parquet(f"{out}/b={bid}")
-            assert surv.filter(PF.col("doc_id") >= 20_000_000).count() == half
-            assert (
-                surv.filter(
-                    (PF.col("doc_id") >= 10_000_000) & (PF.col("doc_id") < 20_000_000)
-                ).count()
-                == 0
-            )
-            best = min(best, el)
-            shutil.rmtree(f"{out}/b={bid}")
-        rows.append({"parts": np_, "s": round(best, 3)})
-        print(json.dumps(rows[-1]), flush=True)
-        shutil.rmtree(d, ignore_errors=True)
+            best = Best()
+            for rep in range(1, 4):
+                bid = np_ + rep  # past the seed part ids
+                with best:
+                    sdedup.neardup_batch(spark, batch, out, batch_id=bid)
+                surv = spark.read.parquet(f"{out}/b={bid}")
+                assert surv.filter(PF.col("doc_id") >= 20_000_000).count() == half
+                assert (
+                    surv.filter(
+                        (PF.col("doc_id") >= 10_000_000) & (PF.col("doc_id") < 20_000_000)
+                    ).count()
+                    == 0
+                )
+                shutil.rmtree(f"{out}/b={bid}")
+            rows.append({"parts": np_, "s": round(best.s, 3)})
+            print(json.dumps(rows[-1]), flush=True)
     return rows
 
 
-def write_neardup_parts_section(rows: list[dict], corpus: int) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## Near-dup ingest vs part count"
-    text, tail_sections = _splice_section(text, marker)
+def neardup_parts_section(rows: list[dict], corpus: int = 100_000) -> tuple[str, list[str]]:
     lines = [
-        marker.strip(),
-        "",
         f"`scale_probe.py neardupparts`: per-batch `neardup_batch` cost"
         f" against a {corpus:,}-doc accepted store fragmented into N"
         " live parts (same content, only fragmentation varies) —"
@@ -3203,17 +2973,11 @@ def write_neardup_parts_section(rows: list[dict], corpus: int) -> None:
     ]
     for r in rows:
         lines.append(f"| {r['parts']} | {r['s']} |")
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## Near-dup ingest vs part count", lines
 
 
-def write_neardup_ingest_section(rows: list[dict]) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## Near-dup ingest vs corpus size"
-    text, tail_sections = _splice_section(text, marker)
+def neardup_ingest_section(rows: list[dict]) -> tuple[str, list[str]]:
     lines = [
-        marker.strip(),
-        "",
         "`scale_probe.py neardupingest`: per-batch cost of"
         " `neardup_batch` (in-batch MinHash keep-one + band-index join"
         " + Jaccard verify) as the accepted corpus grows. 500-row"
@@ -3228,19 +2992,11 @@ def write_neardup_ingest_section(rows: list[dict]) -> None:
     ]
     for r in rows:
         lines.append(f"| {r['corpus']:,} | {r['s']} | {r['seed_s']} |")
-    md.write_text(
-        text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections
-    )
+    return "## Near-dup ingest vs corpus size", lines
 
 
-def write_dedup_ingest_section(rows: list[dict]) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## Dedup-at-ingest vs corpus size"
-    text, tail_sections = _splice_section(text, marker)
+def dedup_ingest_section(rows: list[dict]) -> tuple[str, list[str]]:
     lines = [
-        marker.strip(),
-        "",
         "`scale_probe.py dedupingest`: per-batch cost of the streaming"
         " dedup reference scan as the accepted corpus grows (500-row"
         " batch, half duplicates). Best-of-3. Random md5 fingerprints"
@@ -3255,9 +3011,7 @@ def write_dedup_ingest_section(rows: list[dict]) -> None:
     ]
     for r in rows:
         lines.append(f"| {r['corpus']:,} | {r['arm']} | {r['s']} |")
-    md.write_text(
-        text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections
-    )
+    return "## Dedup-at-ingest vs corpus size", lines
 
 
 def temporal_probe(spark, ks=(1, 4, 10)) -> list[dict]:
@@ -3272,24 +3026,18 @@ def temporal_probe(spark, ks=(1, 4, 10)) -> list[dict]:
     registry = all_queries()
     out = []
     for k in ks:
-        d = tempfile.mkdtemp(prefix=f"temporal_k{k}_")
-        replicate(spark, d, k, only=("events", "orders", "customer"))
-        row: dict = {"k": k}
-        for name, key in (
-            ("events_asof_order", "asof_s"),
-            ("window_funnel", "funnel_s"),
-            ("order_value_quantiles", "quantiles_s"),
-        ):
-            best = float("inf")
-            for _ in range(3):
-                t0 = time.perf_counter()
-                registry[name].fn(spark, d).collect()
-                best = min(best, time.perf_counter() - t0)
-            row[key] = round(best, 2)
-            row[key + "_joins"] = _join_mix(registry[name].fn(spark, d))
-        out.append(row)
-        print(json.dumps({"temporal_probe": row}), flush=True)
-        shutil.rmtree(d, ignore_errors=True)
+        with scratch_dir(f"temporal_k{k}_", spark, k, only=("events", "orders", "customer")) as d:
+            row: dict = {"k": k}
+            for name, key in (
+                ("events_asof_order", "asof_s"),
+                ("window_funnel", "funnel_s"),
+                ("order_value_quantiles", "quantiles_s"),
+            ):
+                best = Best.of(3, lambda: registry[name].fn(spark, d).collect())
+                row[key] = round(best, 2)
+                row[key + "_joins"] = _join_mix(registry[name].fn(spark, d))
+            out.append(row)
+            print(json.dumps({"temporal_probe": row}), flush=True)
     return out
 
 
@@ -3338,26 +3086,19 @@ def asof_hotkey_probe(spark, sizes=(1_000_000, 4_000_000, 8_000_000)) -> list[di
             ("uniform_s", 10_000, None),
             ("hot_split_s", 1, split),
         ):
-            best = float("inf")
+            best = Best()
             for _ in range(2):
                 q = build(n, users, sp)
-                t0 = time.perf_counter()
-                q.collect()
-                best = min(best, time.perf_counter() - t0)
-            row[label] = round(best, 2)
+                with best:
+                    q.collect()
+            row[label] = round(best.s, 2)
         rows.append(row)
         print(json.dumps({"asof_hotkey_probe": row}), flush=True)
     return rows
 
 
-def write_asof_hotkey_section(rows: list[dict]) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## As-of hot key"
-    text, tail_sections = _splice_section(text, marker)
+def asof_hotkey_section(rows: list[dict]) -> tuple[str, list[str]]:
     lines = [
-        marker.strip(),
-        "",
         "`scale_probe.py asofhotkey`: ALL events on ONE key vs a uniform"
         " 10k-key spread, then the same hot timeline with the r9"
         " `split_bucket_us` valve (time buckets sized to ~64 tasks;"
@@ -3375,14 +3116,12 @@ def write_asof_hotkey_section(rows: list[dict]) -> None:
             f"| {r['rows']} | {r['hot_s']} | {r['uniform_s']} |"
             f" {round(r['hot_s'] / r['uniform_s'], 1)}x | {r['hot_split_s']} |"
         )
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## As-of hot key", lines
 
 
-def write_temporal_section(rows: list[dict]) -> None:
+def temporal_section(rows: list[dict]) -> tuple[str, list[str]]:
     base = {r["k"]: r for r in rows}[rows[0]["k"]]
     lines = [
-        "## Round-8 temporal ops vs data size",
-        "",
         "`scale_probe.py temporal`: as-of join (union + user-partitioned window"
         " carry), windowFunnel (range-frame window + one stage-stitch equi-join)"
         " and exact per-segment quantiles (group-partitioned sort) on"
@@ -3411,9 +3150,7 @@ def write_temporal_section(rows: list[dict]) -> None:
         + rows[-1]["quantiles_s_joins"]
         + "."
     )
-    text = Path("SCALEPROBE.md").read_text()
-    head, tail = _splice_section(text, "## Round-8 temporal ops vs data size")
-    Path("SCALEPROBE.md").write_text(head + "\n".join(lines) + "\n" + tail)
+    return "## Round-8 temporal ops vs data size", lines
 
 
 def state_retention_probe(
@@ -3430,7 +3167,6 @@ def state_retention_probe(
     space exactly (asserted), state bytes and merge-on-read walls FLAT
     once the window saturates (day ≥ retain_days) while total ingest
     keeps growing 10×."""
-    base = tempfile.mkdtemp(prefix="stateretention_")
     # the probe compresses a "day" to ~10-15 s of wall clock, so the
     # production 120 s tombstone grace would span the whole run and
     # folded parts would never reap — scale grace with the compressed
@@ -3446,12 +3182,12 @@ def state_retention_probe(
     # a finally — an exception mid-probe (e.g. a failed stored-rows
     # assert) must not leave the compressed grace active process-wide
     try:
-        return _state_retention_probe_body(
-            spark, base, days, events_per_day, n_users, retain_days
-        )
+        with scratch_dir("stateretention_") as base:
+            return _state_retention_probe_body(
+                spark, base, days, events_per_day, n_users, retain_days
+            )
     finally:
         _parts_mod.GRACE_SECONDS = prod_grace
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def _state_retention_probe_body(
@@ -3508,12 +3244,7 @@ def _state_retention_probe_body(
         assert tk_stored == state_keys, (day, tk_stored, state_keys)
 
         def _wall(fn) -> float:
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn()
-                best = min(best, time.perf_counter() - t0)
-            return round(best, 2)
+            return round(Best.of(2, fn), 2)
 
         state_bytes = sum(
             f.stat().st_size
@@ -3545,15 +3276,9 @@ def _state_retention_probe_body(
     return out
 
 
-def write_state_retention_section(rows: list[dict], retain_days: int = 3) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## State retention: the sliding-horizon fold closes the key-space term"
-    text, tail_sections = _splice_section(text, marker)
+def state_retention_section(rows: list[dict], retain_days: int = 3) -> tuple[str, list[str]]:
     sat = [r for r in rows if r["day"] >= retain_days]
     lines = [
-        marker.strip(),
-        "",
         "`scale_probe.py stateretention` (r13, VERDICT r12 #2): "
         f"{rows[-1]['day']} simulated days into DATE-KEYED state for all "
         "four State/Merge families, each day's compaction folding with a "
@@ -3592,7 +3317,7 @@ def write_state_retention_section(rows: list[dict], retain_days: int = 3) -> Non
         "(streaming/retention.py), derived state bounded by the same "
         "horizon at fold time.",
     ]
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## State retention: the sliding-horizon fold closes the key-space term", lines
 
 
 def bench_sf1_probe(spark, k: int = 10, runs: int = 2) -> dict:
@@ -3611,40 +3336,34 @@ def bench_sf1_probe(spark, k: int = 10, runs: int = 2) -> dict:
     sf1 mins — the rung future rounds compare against)."""
     import bench as _bench
 
-    d = tempfile.mkdtemp(prefix="benchsf1_")
     t0 = time.perf_counter()
-    replicate(spark, d, k)
-    build_s = round(time.perf_counter() - t0, 1)
-    qs = all_queries()
-    bands = _bench._load_bands()
-    # same-session sf0.1 anchor (one pass; the committed band is the
-    # low-noise anchor, this one controls for session/JVM state)
-    base_wall: dict[str, float] = {}
-    for name in _bench.HEADLINE:
-        t0 = time.perf_counter()
-        qs[name].fn(spark, BASE_SF).collect()
-        base_wall[name] = round(time.perf_counter() - t0, 3)
-    sf1_wall: dict[str, float] = {}
-    for name in _bench.HEADLINE:
-        best = float("inf")
-        for _ in range(runs):
+    with scratch_dir("benchsf1_", spark, k) as d:
+        build_s = round(time.perf_counter() - t0, 1)
+        qs = all_queries()
+        bands = _bench._load_bands()
+        # same-session sf0.1 anchor (one pass; the committed band is the
+        # low-noise anchor, this one controls for session/JVM state)
+        base_wall: dict[str, float] = {}
+        for name in _bench.HEADLINE:
             t0 = time.perf_counter()
-            qs[name].fn(spark, d).collect()
-            best = min(best, time.perf_counter() - t0)
-        sf1_wall[name] = round(best, 3)
-        print(
-            json.dumps(
-                {
-                    "bench_sf1": {
-                        "query": name,
-                        "sf1_s": sf1_wall[name],
-                        "sf01_session_s": base_wall[name],
-                        "band_s": bands.get(name),
+            qs[name].fn(spark, BASE_SF).collect()
+            base_wall[name] = round(time.perf_counter() - t0, 3)
+        sf1_wall: dict[str, float] = {}
+        for name in _bench.HEADLINE:
+            sf1_wall[name] = round(Best.of(runs, lambda: qs[name].fn(spark, d).collect()), 3)
+            print(
+                json.dumps(
+                    {
+                        "bench_sf1": {
+                            "query": name,
+                            "sf1_s": sf1_wall[name],
+                            "sf01_session_s": base_wall[name],
+                            "band_s": bands.get(name),
+                        }
                     }
-                }
-            ),
-            flush=True,
-        )
+                ),
+                flush=True,
+            )
     row = {
         "k": k,
         "runs": runs,
@@ -3666,21 +3385,14 @@ def bench_sf1_probe(spark, k: int = 10, runs: int = 2) -> dict:
     prior_file.write_text(
         json.dumps({"queries": dict(sorted(merged.items()))}, indent=1) + "\n"
     )
-    shutil.rmtree(d, ignore_errors=True)
     return row
 
 
-def write_bench_sf1_section(row: dict) -> None:
+def bench_sf1_section(row: dict) -> tuple[str, list[str]]:
     import bench as _bench
 
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## sf1 bench rung: the full HEADLINE at 10× (measured)"
-    text, tail_sections = _splice_section(text, marker)
     bands = _bench._load_bands()
     lines = [
-        marker.strip(),
-        "",
         "`scale_probe.py benchsf1` (r13, VERDICT r12 #4): every HEADLINE "
         "query best-of-%d at sf1 (10× FK-consistent replication, "
         "cipher-grown docs) vs a same-session sf0.1 pass and the "
@@ -3730,7 +3442,7 @@ def write_bench_sf1_section(row: dict) -> None:
             "No query exceeded 10× its clean sf0.1 band for 10× data — "
             "every HEADLINE plan scales at-or-below linear at this rung.",
         ]
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## sf1 bench rung: the full HEADLINE at 10× (measured)", lines
 
 
 STEEPEST = ("events_asof_order", "nation_revenue", "doc_bigram_novelty")
@@ -3772,6 +3484,20 @@ def _plan_volumes(df) -> dict:
     }
 
 
+def _best_volumes(runs: int, build) -> tuple[float, dict]:
+    """Best-of-``runs`` wall of ``build().collect()`` (a fresh plan per
+    run) and the ``_plan_volumes`` of that fastest run."""
+    best = Best()
+    for _ in range(runs):
+        fastest = best.s
+        with best:
+            df = build()
+            df.collect()
+        if best.s < fastest:
+            vols = _plan_volumes(df)
+    return best.s, vols
+
+
 def steepest_rung_probe(spark, ks=(10, 30), runs: int = 2) -> list[dict]:
     """Round-14 (VERDICT r13 #4): one rung past sf1 for the three
     steepest session-factor queries from the sf1 rung
@@ -3784,24 +3510,15 @@ def steepest_rung_probe(spark, ks=(10, 30), runs: int = 2) -> list[dict]:
     qs = all_queries()
     out = []
     for k in ks:
-        d = tempfile.mkdtemp(prefix=f"steep{k}_")
         t0 = time.perf_counter()
-        replicate(spark, d, k, only=_STEEP_TABLES)
-        build_s = round(time.perf_counter() - t0, 1)
-        for name in STEEPEST:
-            best, vols = float("inf"), None
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                df = qs[name].fn(spark, d)
-                df.collect()
-                dt = time.perf_counter() - t0
-                if dt < best:
-                    best, vols = dt, _plan_volumes(df)
-            row = {"query": name, "k": k, "wall_s": round(best, 3), **vols,
-                   "replicate_build_s": build_s}
-            out.append(row)
-            print(json.dumps({"steepest_rung": row}), flush=True)
-        shutil.rmtree(d, ignore_errors=True)
+        with scratch_dir(f"steep{k}_", spark, k, only=_STEEP_TABLES) as d:
+            build_s = round(time.perf_counter() - t0, 1)
+            for name in STEEPEST:
+                best, vols = _best_volumes(runs, lambda: qs[name].fn(spark, d))
+                row = {"query": name, "k": k, "wall_s": round(best, 3), **vols,
+                       "replicate_build_s": build_s}
+                out.append(row)
+                print(json.dumps({"steepest_rung": row}), flush=True)
     return out
 
 
@@ -3823,11 +3540,7 @@ _STEEP_TERMS = {
 }
 
 
-def write_steepest_rung_section(rows: list[dict]) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## sf3 rung: the three steepest sf1 queries, one rung further"
-    text, tail_sections = _splice_section(text, marker)
+def steepest_rung_section(rows: list[dict]) -> tuple[str, list[str]]:
     by_q: dict[str, dict[int, dict]] = {}
     for r in rows:
         by_q.setdefault(r["query"], {})[r["k"]] = r
@@ -3835,8 +3548,6 @@ def write_steepest_rung_section(rows: list[dict]) -> None:
     k_lo, k_hi = ks[0], ks[-1]
     ratio = k_hi / k_lo
     lines = [
-        marker.strip(),
-        "",
         f"`scale_probe.py steepest` (r14, VERDICT r13 #4): the three "
         f"steepest ×session queries from the sf1 rung, measured at "
         f"k={k_lo} (sf1) and k={k_hi} (sf{k_hi // 10}) in ONE session, "
@@ -3878,7 +3589,7 @@ def write_steepest_rung_section(rows: list[dict]) -> None:
             else "ABOVE linear: see the named term for the offender."
         ),
     ]
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## sf3 rung: the three steepest sf1 queries, one rung further", lines
 
 
 def asof_sf6_probe(spark=None, ks=(10, 60), runs: int = 2) -> list[dict]:
@@ -3908,42 +3619,33 @@ def asof_sf6_probe(spark=None, ks=(10, 60), runs: int = 2) -> list[dict]:
     out = []
     saved_env = os.environ.get("SPARK_GRAFT_SF_DIR")
     for k in ks:
-        d = tempfile.mkdtemp(prefix=f"asofsf6_k{k}_")
         gen = get_spark(app_name=f"asofsf6_gen_k{k}")
         t0 = time.perf_counter()
-        replicate(gen, d, k, only=("events", "orders", "customer"))
-        build_s = round(time.perf_counter() - t0, 1)
-        gen.stop()
-        os.environ["SPARK_GRAFT_SF_DIR"] = d
-        try:
-            spark_k = get_spark(app_name=f"scale_probe_asofsf6_k{k}")
-        finally:
-            if saved_env is None:
-                os.environ.pop("SPARK_GRAFT_SF_DIR", None)
-            else:
-                os.environ["SPARK_GRAFT_SF_DIR"] = saved_env
-        best, vols = float("inf"), None
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            df = qs["events_asof_order"].fn(spark_k, d)
-            df.collect()
-            dt = time.perf_counter() - t0
-            if dt < best:
-                best, vols = dt, _plan_volumes(df)
-        row = {
-            "k": k,
-            "wall_s": round(best, 3),
-            **vols,
-            "replicate_build_s": build_s,
-            "initial_partitions": spark_k.conf.get(
-                "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-            ),
-            "shuffle_partitions": spark_k.conf.get("spark.sql.shuffle.partitions"),
-        }
-        spark_k.stop()
-        out.append(row)
-        print(json.dumps({"asof_sf6": row}), flush=True)
-        shutil.rmtree(d, ignore_errors=True)
+        with scratch_dir(f"asofsf6_k{k}_", gen, k, only=("events", "orders", "customer")) as d:
+            build_s = round(time.perf_counter() - t0, 1)
+            gen.stop()
+            os.environ["SPARK_GRAFT_SF_DIR"] = d
+            try:
+                spark_k = get_spark(app_name=f"scale_probe_asofsf6_k{k}")
+            finally:
+                if saved_env is None:
+                    os.environ.pop("SPARK_GRAFT_SF_DIR", None)
+                else:
+                    os.environ["SPARK_GRAFT_SF_DIR"] = saved_env
+            best, vols = _best_volumes(runs, lambda: qs["events_asof_order"].fn(spark_k, d))
+            row = {
+                "k": k,
+                "wall_s": round(best, 3),
+                **vols,
+                "replicate_build_s": build_s,
+                "initial_partitions": spark_k.conf.get(
+                    "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+                ),
+                "shuffle_partitions": spark_k.conf.get("spark.sql.shuffle.partitions"),
+            }
+            spark_k.stop()
+            out.append(row)
+            print(json.dumps({"asof_sf6": row}), flush=True)
     factor = out[-1]["wall_s"] / out[0]["wall_s"]
     assert factor <= 5.5, (
         f"sf6 as-of rung REGRESSED to {factor:.1f}x for 6x data under the "
@@ -3952,17 +3654,11 @@ def asof_sf6_probe(spark=None, ks=(10, 60), runs: int = 2) -> list[dict]:
     return out
 
 
-def write_asof_sf6_section(rows: list[dict]) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## sf6 as-of rung under the engine default session (no hand sweep)"
-    text, tail_sections = _splice_section(text, marker)
+def asof_sf6_section(rows: list[dict]) -> tuple[str, list[str]]:
     lo, hi = rows[0], rows[-1]
     ratio = hi["k"] / lo["k"]
     factor = round(hi["wall_s"] / lo["wall_s"], 1)
     lines = [
-        marker.strip(),
-        "",
         "`scale_probe.py asofsf6` (r15, VERDICT r14 #1; re-recorded "
         "r16, VERDICT r15 #5): the r14 sf6 addendum's spill was fixed "
         "by a HAND sweep to 256 partitions; the engine now owns the "
@@ -4006,7 +3702,7 @@ def write_asof_sf6_section(rows: list[dict]) -> None:
         "carries the rung; `tests/test_session_sizing.py` pins the "
         "conf wiring.",
     ]
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## sf6 as-of rung under the engine default session (no hand sweep)", lines
 
 
 def ttl_scale_probe(spark, month_counts=(24, 240, 960)) -> list[dict]:
@@ -4027,72 +3723,60 @@ def ttl_scale_probe(spark, month_counts=(24, 240, 960)) -> list[dict]:
 
     out = []
     for n in month_counts:
-        base = tempfile.mkdtemp(prefix=f"ttlscale{n}_")
-        writer.write_table(
-            generator.events(spark, n=2000, n_users=50), base, "events"
-        )
-        tdir = Path(base) / "events"
-        seed = next(iter(sorted(tdir.glob("yyyymm=*"))))
-        seed_files = sorted(seed.glob("*.parquet")) + sorted(seed.glob(".*.crc"))
-        months = []
-        for i in range(n):
-            val = 190001 + (i // 12) * 100 + (i % 12)
-            months.append(val)
-            d = tdir / f"yyyymm={val}"
-            if not d.exists():
-                d.mkdir()
-                for f in seed_files:
-                    _os.link(f, d / f.name)
+        with scratch_dir(f"ttlscale{n}_") as base:
+            writer.write_table(
+                generator.events(spark, n=2000, n_users=50), base, "events"
+            )
+            tdir = Path(base) / "events"
+            seed = next(iter(sorted(tdir.glob("yyyymm=*"))))
+            seed_files = sorted(seed.glob("*.parquet")) + sorted(seed.glob(".*.crc"))
+            months = []
+            for i in range(n):
+                val = 190001 + (i // 12) * 100 + (i % 12)
+                months.append(val)
+                d = tdir / f"yyyymm={val}"
+                if not d.exists():
+                    d.mkdir()
+                    for f in seed_files:
+                        _os.link(f, d / f.name)
 
-        def best(fn, reps=3):
-            b = float("inf")
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                fn()
-                b = min(b, time.perf_counter() - t0)
-            return round(b * 1000, 1)
+            def best(fn, reps=3):
+                return round(Best.of(reps, fn) * 1000, 1)
 
-        listing_fast_ms = best(lambda: retention.ttl_live_listing(str(tdir)))
-        read_fast_ms = best(
-            lambda: writer.read_table(spark, base, "events").count(), reps=2
-        )
-        mid = months[len(months) // 2]
-        cutoff = _date(mid // 100, mid % 100, 1)
-        t0 = time.perf_counter()
-        report = retention.apply_ttl(spark, str(tdir), "event_date", cutoff)
-        doom_ms = round((time.perf_counter() - t0) * 1000, 1)
-        listing_doomed_ms = best(lambda: retention.ttl_live_listing(str(tdir)))
-        read_doomed_ms = best(
-            lambda: writer.read_table(spark, base, "events").count(), reps=2
-        )
-        t0 = time.perf_counter()
-        reaped = retention.reap_expired(str(tdir), grace_seconds=0.0)
-        reap_ms = round((time.perf_counter() - t0) * 1000, 1)
-        row = {
-            "months": n + 3,  # + the 3 real generator months
-            "doomed": len(report["dropped_partitions"]),
-            "reaped": len(reaped),
-            "listing_fast_ms": listing_fast_ms,
-            "read_fast_ms": read_fast_ms,
-            "doom_pass_ms": doom_ms,
-            "listing_doomed_ms": listing_doomed_ms,
-            "read_doomed_ms": read_doomed_ms,
-            "reap_pass_ms": reap_ms,
-        }
-        out.append(row)
-        print(json.dumps({"ttl_scale": row}), flush=True)
-        shutil.rmtree(base, ignore_errors=True)
+            listing_fast_ms = best(lambda: retention.ttl_live_listing(str(tdir)))
+            read_fast_ms = best(
+                lambda: writer.read_table(spark, base, "events").count(), reps=2
+            )
+            mid = months[len(months) // 2]
+            cutoff = _date(mid // 100, mid % 100, 1)
+            t0 = time.perf_counter()
+            report = retention.apply_ttl(spark, str(tdir), "event_date", cutoff)
+            doom_ms = round((time.perf_counter() - t0) * 1000, 1)
+            listing_doomed_ms = best(lambda: retention.ttl_live_listing(str(tdir)))
+            read_doomed_ms = best(
+                lambda: writer.read_table(spark, base, "events").count(), reps=2
+            )
+            t0 = time.perf_counter()
+            reaped = retention.reap_expired(str(tdir), grace_seconds=0.0)
+            reap_ms = round((time.perf_counter() - t0) * 1000, 1)
+            row = {
+                "months": n + 3,  # + the 3 real generator months
+                "doomed": len(report["dropped_partitions"]),
+                "reaped": len(reaped),
+                "listing_fast_ms": listing_fast_ms,
+                "read_fast_ms": read_fast_ms,
+                "doom_pass_ms": doom_ms,
+                "listing_doomed_ms": listing_doomed_ms,
+                "read_doomed_ms": read_doomed_ms,
+                "reap_pass_ms": reap_ms,
+            }
+            out.append(row)
+            print(json.dumps({"ttl_scale": row}), flush=True)
     return out
 
 
-def write_ttl_scale_section(rows: list[dict]) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## TTL retention at many partitions (metadata-only costs)"
-    text, tail_sections = _splice_section(text, marker)
+def ttl_scale_section(rows: list[dict]) -> tuple[str, list[str]]:
     lines = [
-        marker.strip(),
-        "",
         "`scale_probe.py ttlscale` (r14, after the doom→grace→reap "
         "rewrite): a lake table grown to up to ~960 month partitions "
         "(an 80-year lake — far past any real retention window), half "
@@ -4127,261 +3811,39 @@ def write_ttl_scale_section(rows: list[dict]) -> None:
         "at 100 TB the partition COUNT is still just months×tables, so "
         "these numbers are already the production regime.",
     ]
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
+    return "## TTL retention at many partitions (metadata-only costs)", lines
 
 
-def main() -> None:
-    if len(sys.argv) > 1 and sys.argv[1] == "asofsf6":
-        # the probe manages its own per-rung sessions (r16, VERDICT
-        # r15 #5): no caller supplies a partition count, and each
-        # rung's session derives its ceiling from that rung's data dir
-        rows = asof_sf6_probe()
-        write_asof_sf6_section(rows)
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "ttlscale":
-        spark = get_spark(app_name="scale_probe_ttl_scale")
-        rows = ttl_scale_probe(spark)
-        write_ttl_scale_section(rows)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "steepest":
-        spark = get_spark(app_name="scale_probe_steepest")
-        rows = steepest_rung_probe(spark)
-        write_steepest_rung_section(rows)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "stateretention":
-        spark = get_spark(app_name="scale_probe_state_retention")
-        rows = state_retention_probe(spark)
-        write_state_retention_section(rows)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "benchsf1":
-        spark = get_spark(app_name="scale_probe_bench_sf1")
-        row = bench_sf1_probe(spark)
-        write_bench_sf1_section(row)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "neardupingest":
-        spark = get_spark(app_name="scale_probe_neardup_ingest")
-        sizes = (
-            tuple(int(a) for a in sys.argv[2:])
-            if len(sys.argv) > 2
-            else (10_000, 50_000, 200_000)
-        )
-        rows = neardup_ingest_probe(spark, corpus_sizes=sizes)
-        write_neardup_ingest_section(rows)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "neardupparts":
-        spark = get_spark(app_name="scale_probe_neardup_parts")
-        rows = neardup_parts_probe(spark)
-        write_neardup_parts_section(rows, corpus=100_000)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "dedupingest":
-        spark = get_spark(app_name="scale_probe_dedup_ingest")
-        rows = dedup_ingest_probe(spark)
-        write_dedup_ingest_section(rows)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "cc":
-        spark = get_spark(app_name="scale_probe_cc")
-        rows = cc_probe(spark)
-        write_cc_section(rows)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "skew":
-        spark = get_spark(app_name="scale_probe_skew")
-        rows = skew_probe(spark)
-        write_skew_section(rows)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "router":
-        k = int(sys.argv[2]) if len(sys.argv) > 2 else 50
-        spark = get_spark(app_name="scale_probe_router")
-        rows = router_probe(spark, k)
-        write_router_section(rows, k)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "asofhotkey":
-        spark = get_spark(app_name="scale_probe_asof_hotkey")
-        rows = asof_hotkey_probe(spark)
-        write_asof_hotkey_section(rows)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "temporal":
-        spark = get_spark(app_name="scale_probe_temporal")
-        rows = temporal_probe(spark)
-        write_temporal_section(rows)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "semdedup":
-        spark = get_spark(app_name="scale_probe_semdedup", shuffle_partitions=64)
-        write_semdedup_section(semdedup_probe(spark))
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "bpebig":
-        ks = tuple(int(a) for a in sys.argv[2:]) or (8192, 16384)
-        spark = get_spark(app_name="scale_probe_bpe_big")
-        write_bpe_big_section(bpe_big_probe(spark, merge_counts=ks))
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "bpe4096":
-        spark = get_spark(app_name="scale_probe_bpe4096")
-        write_bpe_4096_section(bpe_4096_probe(spark))
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "bpebatched":
-        spark = get_spark(app_name="scale_probe_bpe_batched")
-        rows = bpe_batched_probe(spark)
-        write_bpe_batched_section(rows)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "tfidf":
-        spark = get_spark(app_name="scale_probe_tfidf")
-        rows = tfidf_probe(spark)
-        write_tfidf_section(rows)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "statedays":
-        days = int(sys.argv[2]) if len(sys.argv) > 2 else 10
-        spark = get_spark(app_name="scale_probe_statedays")
-        write_statedays_section(statedays_probe(spark, days=days))
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "stateparts":
-        spark = get_spark(app_name="scale_probe_stateparts")
-        write_stateparts_section(stateparts_probe(spark))
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "heavyhitters":
-        spark = get_spark(app_name="scale_probe_heavyhitters")
-        write_heavyhitters_section(heavyhitters_probe(spark))
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "ivfrecall":
-        k = int(sys.argv[2]) if len(sys.argv) > 2 else 40
-        spark = get_spark(app_name="scale_probe_ivf_recall")
-        write_ivf_recall_section(ivf_recall_probe(spark, k=k))
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "annstored":
-        spark = get_spark(app_name="scale_probe_annstored")
-        write_ann_stored_section(ann_stored_probe(spark))
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "annint8":
-        spark = get_spark(app_name="scale_probe_annint8")
-        rows = ann_int8_probe(spark)
-        write_ann_int8_section(rows)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "bpeencode":
-        spark = get_spark(app_name="scale_probe_bpeencode")
-        rows = bpe_encode_probe(spark)
-        write_bpe_encode_section(rows)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "bpesynth":
-        spark = get_spark(app_name="scale_probe_bpe_synth")
-        rows = bpe_synth_probe(spark)
-        write_bpe_synth_section(rows)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "bpe":
-        spark = get_spark(app_name="scale_probe_bpe")
-        rows = bpe_probe(spark)
-        write_bpe_section(rows)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "textops":
-        spark = get_spark(app_name="scale_probe_textops")
-        rows = textops_probe(spark)
-        write_textops_section(rows)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "lshsplit":
-        k = int(sys.argv[2]) if len(sys.argv) > 2 else 40
-        # same data-proportional partition sizing as corpusprep40
-        spark = get_spark(
-            app_name="scale_probe_lshsplit", shuffle_partitions=max(64, 4 * k)
-        )
-        row = lshsplit_probe(spark, k)
-        write_lshsplit_section(row)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "corpusprep100":
-        # DELIBERATELY the default session (VERDICT r14 #5): the
-        # operator and the session own every partition count now
-        spark = get_spark(app_name="scale_probe_corpusprep100")
-        row = corpusprep100_probe(spark)
-        write_corpusprep100_section(row)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "corpusprep40":
-        k = int(sys.argv[2]) if len(sys.argv) > 2 else 40
-        # Partition count must FOLLOW the data — the first 40× attempt
-        # on the default 32-partition session died with
-        # AGGREGATE_OUT_OF_MEMORY: the operator derives its checkpoint
-        # partitioning from spark.sql.shuffle.partitions, so each
-        # localCheckpointed shingle block reached ~900 MB and cached
-        # storage starved the hash aggregates' page allocations. ~4
-        # partitions per 1× of corpus keeps blocks in the same
-        # ~25 MB band the 1× run enjoys — the identical sizing rule a
-        # cluster job applies via shuffle.partitions / maxPartitionBytes.
-        spark = get_spark(
-            app_name="scale_probe_corpusprep40",
-            shuffle_partitions=max(64, 4 * k),
-        )
-        row = corpusprep40_probe(spark, k)
-        write_corpusprep40_section(row)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "corpusprep":
-        spark = get_spark(app_name="scale_probe_corpusprep")
-        rows = corpusprep_probe(spark)
-        write_corpusprep_section(rows)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "funnelstate":
-        spark = get_spark(app_name="scale_probe_funnel_state")
-        rows = funnel_state_probe(spark)
-        write_funnel_section(rows)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "mv":
-        spark = get_spark(app_name="scale_probe_mv")
-        rows = mv_probe(spark)
-        write_mv_section(rows)
-        spark.stop()
-        return
-    ks = [int(a) for a in sys.argv[1:]] or [1, 4, 10]
-    spark = get_spark(app_name="scale_probe")
+def k_table_probe(spark, ks: list[int]) -> dict:
+    """The K form: every QUERIES entry on the lake grown K× at each K,
+    best-of-ROUNDS warm with the repetitions round-robined across
+    queries, plus the join mix each executed plan carried."""
     registry = all_queries()
     results: dict[int, dict[str, float]] = {}
     joins: dict[int, dict[str, str]] = {}
     for k in ks:
-        d = tempfile.mkdtemp(prefix=f"scaleprobe_k{k}_")
-        replicate(spark, d, k)
-        timings = {name: float("inf") for name in QUERIES}
-        joins[k] = {}
-        for name in QUERIES:  # warm codegen for this K's plans
-            df = registry[name].fn(spark, d)
-            df.collect()
-            joins[k][name] = _join_mix(df)
-        for _ in range(ROUNDS):  # round-robin: spread samples over bursts
-            for name in QUERIES:
-                t0 = time.perf_counter()
-                registry[name].fn(spark, d).collect()
-                timings[name] = min(timings[name], time.perf_counter() - t0)
-        results[k] = {n: round(t, 3) for n, t in timings.items()}
+        with scratch_dir(f"scaleprobe_k{k}_", spark, k) as d:
+            timings = {name: Best() for name in QUERIES}
+            joins[k] = {}
+            for name in QUERIES:  # warm codegen for this K's plans
+                df = registry[name].fn(spark, d)
+                df.collect()
+                joins[k][name] = _join_mix(df)
+            for _ in range(ROUNDS):  # round-robin: spread samples over bursts
+                for name in QUERIES:
+                    with timings[name]:
+                        registry[name].fn(spark, d).collect()
+        results[k] = {n: round(t.s, 3) for n, t in timings.items()}
         print(json.dumps({"k": k, "queries": results[k], "joins": joins[k]}), flush=True)
-        shutil.rmtree(d, ignore_errors=True)
+    return {"ks": list(ks), "results": results, "joins": joins}
+
+
+def k_table_section(row: dict) -> tuple[str, list[str]]:
+    """The file's title section. Only it is rewritten: every appended
+    "## section" (MV, router, skew, cc, ingest probes) is preserved."""
+    ks, results, joins = row["ks"], row["results"], row["joins"]
     base = results[ks[0]]
     lines = [
-        "# SCALEPROBE — wall-clock vs data size (replicated sf0.1, local[32])",
-        "",
         f"Best-of-{ROUNDS} warm timings, repetitions round-robined across"
         " queries (this box's same-plan wall-clock varies up to ~18x"
         " between consecutive runs — measured in scale_probe.py's"
@@ -4404,17 +3866,126 @@ def main() -> None:
             cells.append(f"{round(t / base[name], 1) if base[name] else '-'}x")
             cells.append(joins[k][name])
         lines.append(f"| {name} | " + " | ".join(cells) + " |")
-    # Preserve every appended "## section" (MV, router, skew, cc,
-    # ingest probes) — only the header + main table are rewritten.
-    md = Path("SCALEPROBE.md")
-    tail = ""
-    if md.exists():
-        old = md.read_text()
-        idx = old.find("\n## ")
-        if idx != -1:
-            tail = old[idx:]
-    md.write_text("\n".join(lines) + "\n" + tail)
-    spark.stop()
+    return "# SCALEPROBE — wall-clock vs data size (replicated sf0.1, local[32])", lines
+
+
+def _int_arg(name: str, default: int) -> Callable[[list[str]], dict]:
+    """``<mode> [N]``: one optional int positional argument."""
+    return lambda argv: {name: int(argv[0]) if argv else default}
+
+
+def _ints_arg(name: str) -> Callable[[list[str]], dict]:
+    """``<mode> [N ...]``: all positional arguments as a tuple of ints;
+    none keeps the probe's default."""
+    return lambda argv: {name: tuple(int(a) for a in argv)} if argv else {}
+
+
+def _k_partitions(kw: dict) -> int:
+    # Partition count must FOLLOW the data — the first 40× attempt
+    # on the default 32-partition session died with
+    # AGGREGATE_OUT_OF_MEMORY: the operator derives its checkpoint
+    # partitioning from spark.sql.shuffle.partitions, so each
+    # localCheckpointed shingle block reached ~900 MB and cached
+    # storage starved the hash aggregates' page allocations. ~4
+    # partitions per 1× of corpus keeps blocks in the same
+    # ~25 MB band the 1× run enjoys — the identical sizing rule a
+    # cluster job applies via shuffle.partitions / maxPartitionBytes.
+    return max(64, 4 * kw["k"])
+
+
+@dataclass(frozen=True)
+class Mode:
+    """One ``scale_probe.py <mode> [args]`` entry: ``probe(spark,
+    **args(argv))`` measures, ``render(result)`` gives its SCALEPROBE.md
+    section. ``app`` names the mode's session (None: the probe builds
+    its own sessions); ``partitions``, given the probe's keyword
+    arguments, sets that session's shuffle partitions."""
+
+    app: str | None
+    probe: Callable
+    render: Callable[..., tuple[str, list[str]]]
+    args: Callable[[list[str]], dict] = lambda argv: {}
+    partitions: Callable[[dict], int] | None = None
+
+
+MODES: dict[str, Mode] = {
+    "mv": Mode("scale_probe_mv", mv_probe, mv_section),
+    "funnelstate": Mode("scale_probe_funnel_state", funnel_state_probe, funnel_section),
+    "corpusprep": Mode("scale_probe_corpusprep", corpusprep_probe, corpusprep_section),
+    "corpusprep40": Mode(
+        "scale_probe_corpusprep40", corpusprep40_probe, corpusprep40_section,
+        _int_arg("k", 40), _k_partitions,
+    ),
+    # DELIBERATELY the default session (VERDICT r14 #5): the
+    # operator and the session own every partition count now
+    "corpusprep100": Mode("scale_probe_corpusprep100", corpusprep100_probe, corpusprep100_section),
+    "lshsplit": Mode(
+        "scale_probe_lshsplit", lshsplit_probe, lshsplit_section,
+        _int_arg("k", 40), _k_partitions,
+    ),
+    "textops": Mode("scale_probe_textops", textops_probe, textops_section),
+    "bpe": Mode("scale_probe_bpe", bpe_probe, bpe_section),
+    "bpesynth": Mode("scale_probe_bpe_synth", bpe_synth_probe, bpe_synth_section),
+    "bpeencode": Mode("scale_probe_bpeencode", bpe_encode_probe, bpe_encode_section),
+    "bpebatched": Mode("scale_probe_bpe_batched", bpe_batched_probe, bpe_batched_section),
+    "bpe4096": Mode("scale_probe_bpe4096", bpe_4096_probe, bpe_4096_section),
+    "bpebig": Mode(
+        "scale_probe_bpe_big", bpe_big_probe, bpe_big_section, _ints_arg("merge_counts")
+    ),
+    "tfidf": Mode("scale_probe_tfidf", tfidf_probe, tfidf_section),
+    "annint8": Mode("scale_probe_annint8", ann_int8_probe, ann_int8_section),
+    "annstored": Mode("scale_probe_annstored", ann_stored_probe, ann_stored_section),
+    "ivfrecall": Mode(
+        "scale_probe_ivf_recall", ivf_recall_probe, ivf_recall_section, _int_arg("k", 40)
+    ),
+    "semdedup": Mode(
+        "scale_probe_semdedup", semdedup_probe, semdedup_section, partitions=lambda kw: 64
+    ),
+    "heavyhitters": Mode("scale_probe_heavyhitters", heavyhitters_probe, heavyhitters_section),
+    "stateparts": Mode("scale_probe_stateparts", stateparts_probe, stateparts_section),
+    "statedays": Mode(
+        "scale_probe_statedays", statedays_probe, statedays_section, _int_arg("days", 10)
+    ),
+    "stateretention": Mode(
+        "scale_probe_state_retention", state_retention_probe, state_retention_section
+    ),
+    "router": Mode("scale_probe_router", router_probe, router_section, _int_arg("k", 50)),
+    "skew": Mode("scale_probe_skew", skew_probe, skew_section),
+    "cc": Mode("scale_probe_cc", cc_probe, cc_section),
+    "dedupingest": Mode("scale_probe_dedup_ingest", dedup_ingest_probe, dedup_ingest_section),
+    "neardupingest": Mode(
+        "scale_probe_neardup_ingest", neardup_ingest_probe, neardup_ingest_section,
+        _ints_arg("corpus_sizes"),
+    ),
+    "neardupparts": Mode("scale_probe_neardup_parts", neardup_parts_probe, neardup_parts_section),
+    "temporal": Mode("scale_probe_temporal", temporal_probe, temporal_section),
+    "asofhotkey": Mode("scale_probe_asof_hotkey", asof_hotkey_probe, asof_hotkey_section),
+    "benchsf1": Mode("scale_probe_bench_sf1", bench_sf1_probe, bench_sf1_section),
+    "steepest": Mode("scale_probe_steepest", steepest_rung_probe, steepest_rung_section),
+    # the probe manages its own per-rung sessions (r16, VERDICT
+    # r15 #5): no caller supplies a partition count, and each
+    # rung's session derives its ceiling from that rung's data dir
+    "asofsf6": Mode(None, asof_sf6_probe, asof_sf6_section),
+    "ttlscale": Mode("scale_probe_ttl_scale", ttl_scale_probe, ttl_scale_section),
+}
+
+
+def main() -> None:
+    mode = MODES.get(sys.argv[1]) if len(sys.argv) > 1 else None
+    if mode is None:
+        ks = [int(a) for a in sys.argv[1:]] or [1, 4, 10]
+        spark = get_spark(app_name="scale_probe")
+        write_section(SCALEPROBE, *k_table_section(k_table_probe(spark, ks)))
+        spark.stop()
+        return
+    kw = mode.args(sys.argv[2:])
+    spark = None
+    if mode.app is not None:
+        partitions = mode.partitions(kw) if mode.partitions else None
+        spark = get_spark(app_name=mode.app, shuffle_partitions=partitions)
+    write_section(SCALEPROBE, *mode.render(mode.probe(spark, **kw)))
+    if spark is not None:
+        spark.stop()
 
 
 if __name__ == "__main__":
