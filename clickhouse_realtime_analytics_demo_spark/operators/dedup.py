@@ -267,9 +267,8 @@ last_adaptive: dict = {}
 # calibrated from the k=40 blocks: ~20 GiB / 8.1M pairs ≈ 2.5 KiB.
 # Target ~32 MiB blocks: bounded unroll memory (32 tasks × 32 MiB in
 # flight) at any K, and the count comes from the already-checkpointed
-# candidate frame — one cheap bounded job, only paid in the scale
-# regime (n_parts above the core floor; 1x corpora keep the exact
-# previous plan and job count).
+# candidate frame — one cheap bounded job; small pair sets keep the
+# caller's floor.
 ATTACH_PAIR_BYTES = 2560
 ATTACH_BLOCK_TARGET_BYTES = 32 * 1024 * 1024
 
@@ -413,7 +412,11 @@ def lsh_candidates_from_sigs(
                     .select("id", *blk, "band", "band_hash")
                 )
                 rsizes = refined.groupBy(*keys).agg(F.count("*").alias("bucket_n"))
-                rsized = refined.join(rsizes, keys)
+                # pinned build side: both inputs are small, and without
+                # the hint AQE broadcasts whichever stage finishes first,
+                # so the candidate rows' order (and the shuffle bytes
+                # downstream) changed from run to run
+                rsized = refined.join(rsizes.hint("shuffle_hash"), keys)
                 levels.append(
                     rsized.filter(F.col("bucket_n") <= max_bucket_size).drop("bucket_n")
                 )
@@ -453,10 +456,9 @@ def lsh_candidates_from_sigs(
 def jaccard_from_sizes(na: Column, nb: Column, inter_n: Column) -> Column:
     """Jaccard from integer set sizes: |A∩B| / (|A|+|B|−|A∩B|), one
     double division, 0.0 for two empty sets. The one home of the
-    arithmetic — :func:`jaccard` and the scale regime of
-    :func:`minhash_char_dedup_pairs` (which ships only the sizes
-    across its barrier) both evaluate it, so the two agree bit for
-    bit."""
+    arithmetic — :func:`jaccard` and :func:`verify_candidates` (which
+    ships only the sizes across its barrier) both evaluate it, so the
+    two agree bit for bit."""
     inter = inter_n.cast("double")
     union = (na + nb).cast("double") - inter
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
@@ -495,6 +497,67 @@ def verified_jaccard_pairs(cands: DataFrame, sh: DataFrame, threshold: float) ->
         .select("id_a", "id_b", jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
+
+
+def verify_candidates(
+    cands: DataFrame, sh: DataFrame, threshold: float, n_parts: int, eager: bool = True
+) -> DataFrame:
+    """Exact-Jaccard verify of candidate pairs ``cands`` (id_a, id_b)
+    against the shingle sets ``sh`` (id, sh) — the barriered form every
+    corpus-scale verify runs. Returns (id_a, id_b, jaccard) with
+    jaccard ≥ threshold.
+
+    - Each attach join is preceded by an explicit keyed spread sized
+      from the measured pair count (:func:`attach_partitions`, floor
+      ``n_parts``). The attach rows carry shingle ARRAYS that expand
+      ~10x on deserialization, so AQE's byte-based coalescing of the
+      joins' own exchanges (64 MB advisory) packs multi-GB of
+      in-memory rows per task — the 100x corpus died with Java-heap
+      OOM at 48 g, then with 400 MiB+ checkpoint blocks once buckets
+      densified. A user-specified keyed repartition satisfies the
+      join's required distribution and is never coalesced, so task
+      memory follows the pair count, and the intersect never runs on
+      a single AQE-squeezed task (the r6 lesson).
+    - A size-ratio prefilter (J ≤ min/max, two integer compares)
+      drops pairs before the per-pair intersect.
+    - The shingle arrays are consumed IN the second attach stage: one
+      Project evaluates |A∩B| per surviving pair, and only (ids, sizes,
+      |A∩B|) — ~40 bytes/pair instead of both arrays' ~2.5 KiB — are
+      checkpointed. The barrier is load-bearing: without it Catalyst
+      folds the ``jaccard >= t`` filter into the attach join's
+      condition, where the intersect is re-evaluated per expression
+      reference (measured 11-15 s in-join vs ~1 s barriered at sf0.1).
+      :func:`jaccard_from_sizes` finishes after it, the same
+      arithmetic :func:`jaccard` runs.
+
+    ``eager=False`` (plan-only callers) runs no job: no pair count
+    (the spread is ``n_parts``) and no barrier; same rows.
+    """
+    a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), F.size("sh").alias("na"))
+    b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"), F.size("sh").alias("nb"))
+    thr = F.lit(threshold)
+    size_ok = (F.col("na") >= F.col("nb") * thr - F.lit(1e-9)) & (
+        F.col("nb") >= F.col("na") * thr - F.lit(1e-9)
+    )
+    n_attach = attach_partitions(cands.count(), n_parts) if eager else n_parts
+    slim = (
+        cands.repartition(n_attach, "id_a")
+        .join(a, "id_a")
+        .repartition(n_attach, "id_b")
+        .join(b, "id_b")
+        .filter(size_ok)
+        .select(
+            "id_a",
+            "id_b",
+            "na",
+            "nb",
+            F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).alias("inter_n"),
+        )
+    )
+    if eager:
+        slim = slim.localCheckpoint(eager=True)
+    jac = jaccard_from_sizes(F.col("na"), F.col("nb"), F.col("inter_n"))
+    return slim.select("id_a", "id_b", jac.alias("jaccard")).filter(F.col("jaccard") >= thr)
 
 
 def minhash_dedup_pairs(
@@ -564,29 +627,15 @@ def minhash_char_dedup_pairs(
        AQE-sized join against the checkpointed pair ids — candidate-
        sized, never corpus-sized), explicitly ``repartition``-ed,
        then checkpointed once;
-    4. the ATTACHED pair rows, size-ratio prefiltered and checkpointed
-       BEFORE the Jaccard filter evaluates, in one of two regimes
-       chosen by whether the corpus has outgrown the core floor:
-
-       - at the core floor (1x corpora): both shingle arrays ride on
-         each candidate pair, repartitioned on (id_a, id_b) and
-         checkpointed, and :func:`jaccard` runs after the barrier;
-       - past it (the scale regime): each attach join is preceded by
-         a keyed spread sized from the measured pair count, the
-         intersect size is computed IN the second attach stage, and
-         only (ids, sizes, |A∩B|) — ~40 bytes/pair instead of both
-         arrays — cross the barrier, where
-         :func:`jaccard_from_sizes` finishes the same arithmetic.
-
-       The barrier is load-bearing twice over: without it Catalyst folds the
-       ``jaccard >= t`` filter into the attach join's CONDITION,
-       where the ~1000×-a-normal-row array intersect is (a)
-       re-evaluated per expression reference and (b) runs on
-       whatever partitioning AQE's byte-based coalescing left —
-       measured under the engine session at sf0.1: 11-15 s for the
-       in-join form vs ~1 s for the barriered intersect over 32
-       explicit partitions (the r6 single-task lesson, now on the
-       join condition instead of the probe side).
+    4. the verify itself, :func:`verify_candidates`, one form at every
+       scale: keyed spreads sized from the measured pair count before
+       each attach join, the size-ratio prefilter, |A∩B| computed in
+       the second attach stage, and only (ids, sizes, |A∩B|)
+       checkpointed before :func:`jaccard_from_sizes` filters.
+       Measured on ``corpus_prep_pipeline_lsh`` at sf0.1, 10 fresh
+       processes: 33 jobs and 53.3 MB shuffle write on every run,
+       against 33 or 34 jobs and 87.9-98.6 MB when both shingle arrays
+       crossed the barrier, and ~1/3 less executor CPU.
 
     Rejected by measurement at sf0.1 (10 754 true pairs): a
     signature-agreement prefilter on candidates (est ≥ 0.4 dropped 21
@@ -603,7 +652,7 @@ def minhash_char_dedup_pairs(
     while the exact form's is Σ block² (unbounded, corpus-linear
     blocks).
 
-    ``eager`` (default True) runs the four checkpoint materializations
+    ``eager`` (default True) runs the checkpoint materializations
     at DataFrame-CONSTRUCTION time — merely building the plan executes
     Spark jobs and pins checkpoint RDDs for the session. Plan-only
     tooling (EXPLAIN walkers, plan snapshots) should pass
@@ -615,7 +664,6 @@ def minhash_char_dedup_pairs(
     jobs. Results are bit-identical; the barriered eager form is the
     one to EXECUTE (the perf notes above).
     """
-    spark = docs.sparkSession
     # Engine-owned data-proportional sizing (session.spread_partitions,
     # VERDICT r14 #1/#5): the shingle/signature blocks this spread
     # feeds are localCheckpointed, so their count must follow the
@@ -663,93 +711,9 @@ def minhash_char_dedup_pairs(
     )
     shc = _barrier(
         sh.join(ids, "id")  # semi-prune; AQE sizes the (candidate-id) build side
-        .withColumn("nsh", F.size("sh"))
         .repartition(n_parts, "id")
     )
-    a = shc.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), F.col("nsh").alias("na"))
-    b = shc.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"), F.col("nsh").alias("nb"))
-    thr = F.lit(threshold)
-    # Size-ratio prefilter before the per-pair intersect, as in
-    # ngram_jaccard_pairs: J ≤ min/max, two integer compares.
-    # When the corpus has outgrown the core floor (n_parts above it),
-    # explicit keyed repartitions BEFORE each attach join are
-    # load-bearing (r15, the 100x rung's finding): the attach rows
-    # carry shingle ARRAYS that expand ~10x on deserialization, so
-    # AQE's byte-based coalescing of the joins' ENSURE_REQUIREMENTS
-    # exchanges (64 MB advisory) packs multi-GB of in-memory rows per
-    # task — the 100x corpus died with Java-heap OOM at 48 g. A
-    # user-specified keyed repartition satisfies the join's required
-    # distribution (no extra exchange) and is never coalesced — task
-    # memory stays bounded by n_parts, which follows the corpus
-    # bytes. At the core floor (1x corpora) the joins resolve to
-    # broadcast with ZERO exchanges, so the spreads stay out of the
-    # plan and the small-scale bench keeps its shape.
-    core_floor = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 16)
-    size_ok = (F.col("na") >= F.col("nb") * thr - F.lit(1e-9)) & (
-        F.col("nb") >= F.col("na") * thr - F.lit(1e-9)
-    )
-    if n_parts > core_floor:
-        # r16 scale regime, from the corpusprep100 probe's two found
-        # failures (heap OOM, then ENOSPC, at k=100 on a 48 g / 80 GB
-        # box):
-        # (1) the attach spreads follow the MEASURED pair count
-        #     (attach_partitions above) — the source-derived n_parts
-        #     under-partitions this stage once buckets densify (400
-        #     MiB+ checkpoint blocks → 32 concurrent unrolls OOMed the
-        #     heap). cands is localCheckpointed, so the count is one
-        #     bounded job; plan-only construction (eager=False) keeps
-        #     the job-free contract and falls back to n_parts.
-        # (2) the shingle ARRAYS are consumed IN the second attach
-        #     join's stage (guide §2.3 "project before the exchange" /
-        #     §8 "move heavy bytes once"): one Project evaluates the
-        #     intersect size per surviving pair, and only (ids, sizes,
-        #     |A∩B|) — ~40 bytes/pair — cross the barrier, instead of
-        #     checkpointing both arrays (~2.5 KiB/pair) and shuffling
-        #     them through a third (id_a, id_b) exchange. At k=100
-        #     that exchange + checkpoint were ~60-80 GB of transient
-        #     disk; the slim form is ~1.5 GB. The explicit keyed
-        #     spread before the join guarantees the intersect work
-        #     runs on n_attach partitions (never the r6 single-task
-        #     squeeze), and a doc's pair fan-out is bounded by the
-        #     bucket cap x bands, so id_b hash partitioning cannot
-        #     concentrate more than ~cap x bands pairs per doc.
-        #     Arithmetic is :func:`jaccard_from_sizes`, the same
-        #     function :func:`jaccard` evaluates — pinned bit-identical
-        #     across the regime switch by tests/test_corpus_prep_lsh.py.
-        n_attach = attach_partitions(cands.count(), n_parts) if eager else n_parts
-        pre = cands.repartition(n_attach, "id_a").join(a, "id_a").repartition(
-            n_attach, "id_b"
-        )
-        slim = (
-            pre.join(b, "id_b")
-            .filter(size_ok)
-            .select(
-                "id_a",
-                "id_b",
-                "na",
-                "nb",
-                F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).alias(
-                    "inter_n"
-                ),
-            )
-        )
-        attached = _barrier(slim)
-        jac = jaccard_from_sizes(F.col("na"), F.col("nb"), F.col("inter_n"))
-        return attached.select("id_a", "id_b", jac.alias("jaccard")).filter(
-            F.col("jaccard") >= thr
-        )
-    attached = _barrier(
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .filter(size_ok)
-        .repartition(n_parts, "id_a", "id_b")
-    )
-    return (
-        attached.select(
-            "id_a", "id_b", jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard")
-        )
-        .filter(F.col("jaccard") >= thr)
-    )
+    return verify_candidates(cands, shc, threshold, n_parts, eager)
 
 
 # --------------------------------------------------------------- SimHash

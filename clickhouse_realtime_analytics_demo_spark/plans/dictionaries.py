@@ -41,6 +41,7 @@ broadcast join (parity, as expected — same physical plan).
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
 from decimal import Decimal
 
@@ -53,6 +54,7 @@ __all__ = [
     "dict_get_or_null_sql",
     "dict_has_sql",
     "register_dictionaries",
+    "dictionaries_named",
     "loaded_dictionaries",
 ]
 
@@ -369,6 +371,20 @@ def register_dictionaries(spark: SparkSession, names: tuple[str, ...] | None = N
             _LAST_RELOAD[name] = _time.time()
         done.append(name)
     return done
+
+
+# the dictionary argument of every dictGet* / dictHas call (the dialect
+# matches these function names case-insensitively)
+_DICT_CALL = re.compile(r"\bdict(?:get\w*|has)\s*\(\s*'(\w+)'", re.IGNORECASE)
+
+
+def dictionaries_named(sql: str) -> tuple[str, ...]:
+    """The dictionaries the ``dictGet``/``dictHas`` calls of ``sql``
+    name, in first-use order — what a statement needs registered. A
+    caller that registers every dictionary instead reloads each hashed
+    layout whose source view happens to be in the session (one
+    collect job each)."""
+    return tuple(dict.fromkeys(_DICT_CALL.findall(sql)))
 
 
 def loaded_dictionaries() -> dict[str, dict]:

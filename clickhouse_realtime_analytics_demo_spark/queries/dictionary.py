@@ -19,14 +19,17 @@ from pyspark.sql import DataFrame, SparkSession
 
 from clickhouse_realtime_analytics_demo_spark.catalog import table
 from clickhouse_realtime_analytics_demo_spark.plans import gateway
-from clickhouse_realtime_analytics_demo_spark.plans.dictionaries import register_dictionaries
+from clickhouse_realtime_analytics_demo_spark.plans.dictionaries import (
+    dictionaries_named,
+    register_dictionaries,
+)
 from clickhouse_realtime_analytics_demo_spark.queries.registry import register
 
 
 def _gateway_query(spark: SparkSession, sf_dir: str, tables: tuple[str, ...], sql: str) -> DataFrame:
     for name in tables:
         table(spark, sf_dir, name).createOrReplaceTempView(name)
-    register_dictionaries(spark)
+    register_dictionaries(spark, dictionaries_named(sql))
     return gateway.execute(spark, sql).df
 
 

@@ -248,14 +248,7 @@ def neardup_batch(
 
     # 1) in-batch near-dup clusters → min-id representative survives
     cands = ddup.lsh_candidates_from_sigs(sigs, num_hashes, bands, max_bucket_size)
-    sh_a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    sh_b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    pairs = (
-        cands.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .filter(ddup.jaccard(F.col("sh_a"), F.col("sh_b")) >= threshold)
-        .select("id_a", "id_b")
-    )
+    pairs = ddup.verified_jaccard_pairs(cands, sh, threshold).select("id_a", "id_b")
     comp = graph.connected_components(pairs)
     non_reps = comp.filter(F.col("id") != F.col("component")).select("id")
     reps = batch.join(non_reps, batch[id_col] == non_reps["id"], "left_anti")

@@ -213,7 +213,9 @@ def write_section(md_path: str | Path, heading: str, lines: list[str]) -> None:
     line follows the heading. A ``## `` section replaces the one under
     the same heading line, up to the next ``## `` heading, or is
     appended; the ``# `` title section owns everything before the first
-    ``## `` heading."""
+    ``## `` heading. Analysis written by hand therefore goes in a ``## ``
+    section of its own (``## Analysis: <heading>``), never inside a
+    mode's section, where the next run of the mode would delete it."""
     md = Path(md_path)
     text = md.read_text() if md.exists() else ""
     section = "\n".join([heading, "", *lines]) + "\n"
@@ -491,22 +493,12 @@ def _lsh_sigs(blocked, n_parts: int):
 
 def _true_pairs(cands, sh, n_parts: int) -> int:
     """TRUE (exact Jaccard ≥ 0.6) pairs among candidate pairs ``cands``,
-    verified against the shingle sets ``sh``."""
+    verified against the shingle sets ``sh`` by the operator's own
+    verify (keyed spreads sized from the pair count, floor
+    ``n_parts``)."""
     from clickhouse_realtime_analytics_demo_spark.operators import dedup as _dedup
 
-    sh_sets = sh.select("id", "sh")
-    attached = (
-        cands.join(
-            sh_sets.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sa"),
-            "id_a",
-        )
-        .join(
-            sh_sets.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sb"),
-            "id_b",
-        )
-        .repartition(n_parts)
-    )
-    return attached.filter(_dedup.jaccard(F.col("sa"), F.col("sb")) >= 0.6).count()
+    return _dedup.verify_candidates(cands, sh, 0.6, n_parts).count()
 
 
 def corpusprep40_probe(spark, k: int = 40) -> dict:
@@ -788,37 +780,6 @@ def corpusprep100_probe(spark, ks=(40, 100)) -> dict:
     )
     out["spread_partitions"] = n_spread
     sh, sigs = _lsh_sigs(blocked, n_spread)
-    sh_sets = sh.select("id", "sh")
-
-    def _true(cands):
-        # explicit keyed spread BEFORE each join (the 100x OOM
-        # lesson, see dedup.minhash_char_dedup_pairs): shingle
-        # arrays expand ~10x in memory, AQE byte-coalescing packs
-        # too much per task. r16: the spread follows the PAIR
-        # count (dedup.attach_partitions — the same probe-found
-        # rule the operator now applies), since attach bytes track
-        # pairs, not corpus bytes; cands is checkpointed at both
-        # call sites so the count is one bounded job.
-        n_att = _dedup.attach_partitions(cands.count(), n_spread)
-        attached = (
-            cands.repartition(n_att, "id_a")
-            .join(
-                sh_sets.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sa"),
-                "id_a",
-            )
-            .repartition(n_att, "id_b")
-            .join(
-                sh_sets.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sb"),
-                "id_b",
-            )
-            # no further repartition: the join output already sits
-            # on the n_att keyed spread, and a third exchange here
-            # would shuffle BOTH arrays (the ENOSPC term at 100x)
-        )
-        return attached.filter(
-            _dedup.jaccard(F.col("sa"), F.col("sb")) >= 0.6
-        ).count()
-
     t0 = time.perf_counter()
     adaptive = _dedup.lsh_candidates_from_sigs(
         sigs, 32, 16, max_bucket_size=64, block_col="blk", split_depth=None
@@ -834,9 +795,9 @@ def corpusprep100_probe(spark, ks=(40, 100)) -> dict:
         adaptive, ["id_a", "id_b"], "left_anti"
     ).localCheckpoint()
     out["cand_pairs_dropped"] = dropped.count()
-    out["true_pairs_dropped"] = _true(dropped)
+    out["true_pairs_dropped"] = _true_pairs(dropped, sh, n_spread)
     _reclaim(spark)  # the dropped-verify shuffle is large at 100x
-    out["true_pairs_adaptive"] = _true(adaptive)
+    out["true_pairs_adaptive"] = _true_pairs(adaptive, sh, n_spread)
     tot = out["true_pairs_adaptive"] + out["true_pairs_dropped"]
     out["recall_pct"] = round(100.0 * out["true_pairs_adaptive"] / tot, 3) if tot else 100.0
     shutil.rmtree(d, ignore_errors=True)

@@ -30,15 +30,15 @@ DASHBOARD = (
     "event_type_top_users_state",
 )
 
-# dictionary queries register every dictionary, which reloads each
-# hashed layout whose source view is registered: one collect each for
-# dict_nation and dict_region (the source-view check itself runs none)
-DICTIONARY = (
-    "dict_customer_segments",
-    "dict_multilevel_geo",
-    "dict_lookup_defaults",
-    "dict_brand_revenue",
-)
+# dictionary queries register the dictionaries their SQL names; each
+# hashed layout among them (dict_nation, dict_region) reloads with one
+# collect, the view layouts (dict_customer, dict_part) run none
+DICTIONARY = {
+    "dict_customer_segments": 0,
+    "dict_multilevel_geo": 2,
+    "dict_lookup_defaults": 1,
+    "dict_brand_revenue": 0,
+}
 HASHED_SOURCES = ("nation", "region")
 
 # construction jobs after one warm call; each ran one footer
@@ -47,17 +47,31 @@ CEILING = {
     **dict.fromkeys(DASHBOARD, 0),
     "user_rfm": 0,
     "dedup_minhash": 0,
-    **dict.fromkeys(DICTIONARY, len(HASHED_SOURCES)),
+    **DICTIONARY,
 }
 
 
 @pytest.mark.parametrize("name", sorted(CEILING))
 def test_construction_jobs_ceiling(spark, name):
-    if name in DICTIONARY:
-        # the count must not depend on which views earlier tests left
-        for t in HASHED_SOURCES:
-            table(spark, SF_DIR, t).createOrReplaceTempView(t)
     fn = all_queries()[name].fn
     fn(spark, SF_DIR)  # warm: first reads infer each table's schema
     _, jobs = count_jobs(spark, fn, spark, SF_DIR)
     assert jobs == CEILING[name], f"{name}: {jobs} jobs before the action"
+
+
+@pytest.mark.parametrize("name", sorted(DICTIONARY))
+def test_dictionary_jobs_do_not_depend_on_session_views(spark, name):
+    """A fresh session (no nation/region views) and one where earlier
+    requests left them run the same construction jobs: the query loads
+    only the dictionaries its dictGet calls name."""
+    fn = all_queries()[name].fn
+    counts = []
+    for views in (False, True):
+        for t in HASHED_SOURCES:
+            if views:
+                table(spark, SF_DIR, t).createOrReplaceTempView(t)
+            else:
+                spark.catalog.dropTempView(t)
+        fn(spark, SF_DIR)  # warm
+        counts.append(count_jobs(spark, fn, spark, SF_DIR)[1])
+    assert counts == [CEILING[name]] * 2, f"{name}: {counts} jobs (fresh, with views)"

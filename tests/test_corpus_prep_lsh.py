@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_DIR, SF_DIR_MID
+from tests.conftest import SF_DIR, SF_DIR_MID, count_jobs
 
 from clickhouse_realtime_analytics_demo_spark.operators import dedup, graph
 from clickhouse_realtime_analytics_demo_spark.queries import all_queries
@@ -68,7 +68,7 @@ def test_attach_partitions_rule():
     the measured candidate-pair count — ~2.5 KiB of deserialized attach
     row per pair, ~32 MiB target blocks — with the caller's floor and
     the standard 8192 ceiling."""
-    # small pair sets keep the floor (1x corpora: plan unchanged)
+    # small pair sets (1x corpora) keep the caller's floor
     assert dedup.attach_partitions(130_000, 32) == 32
     assert dedup.attach_partitions(0, 16) == 16
     # the probe's measured rungs: k=40's 8.1M pairs spread past the
@@ -79,11 +79,11 @@ def test_attach_partitions_rule():
     assert dedup.attach_partitions(10**12, 32) == 8192
 
 
-def test_pairs_identical_under_scale_regime_attach(spark):
-    """The pair-proportional attach spread is partitioning only —
-    forcing the scale regime (num_partitions above the session core
-    floor, which routes through the keyed spreads AND the pair-count
-    sizing) must give the bit-identical pair set."""
+def test_pairs_identical_under_attach_partitioning(spark):
+    """The verify attach's spreads are partitioning only: a
+    num_partitions above the session default (which also raises the
+    pair-count spread's floor) must give the bit-identical pair set,
+    jaccard values included."""
     _, blocked = _prep_filtered(spark, SF_DIR_MID)
     base = {
         (r.id_a, r.id_b, r.jaccard)
@@ -99,3 +99,21 @@ def test_pairs_identical_under_scale_regime_attach(spark):
         ).collect()
     }
     assert spread == base
+
+
+def test_job_count_is_the_same_on_every_run(spark):
+    """Work counters are the regression signal, so the same input must
+    run the same jobs every time: the verify attach has one form, with
+    no adaptive (AQE) decision left to flip its job count."""
+    _, blocked = _prep_filtered(spark, SF_DIR_MID)
+    blocked.count()  # warm: read the input once before counting
+    jobs = {
+        count_jobs(
+            spark,
+            lambda: dedup.minhash_char_dedup_pairs(
+                blocked, threshold=0.6, bands=16, max_bucket_size=64, block_col="blk"
+            ).collect(),
+        )[1]
+        for _ in range(3)
+    }
+    assert len(jobs) == 1, jobs

@@ -308,6 +308,20 @@ def test_temporal_heading_stays_a_section_boundary(scaleprobe_md):
     }
 
 
+def test_rerunning_every_mode_keeps_the_hand_written_analysis(scaleprobe_md):
+    """Analysis written by hand ("Reading: …" paragraphs, ``### ``
+    subsections) lives in sections of its own, so re-running the probes
+    rewrites their tables and keeps it."""
+    text = scaleprobe_md.read_text()
+    paragraphs = [p.strip() for p in re.split(r"\n\s*\n", text)]
+    hand = [p for p in paragraphs if re.match(r"(Honest )?[Rr]eading\b|### ", p)]
+    assert hand
+    for mode in sorted(FIXTURES):
+        sp.write_section(scaleprobe_md, *sp.MODES[mode].render(FIXTURES[mode]))
+    text = scaleprobe_md.read_text()
+    assert [p for p in hand if p not in text] == []
+
+
 def test_write_section_creates_and_appends(tmp_path):
     md = tmp_path / "NEW.md"
     sp.write_section(md, "## First", ["a"])
